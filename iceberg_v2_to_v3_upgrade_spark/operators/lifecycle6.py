@@ -119,11 +119,11 @@ def d21_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old = {
         f.name: f.dataType.simpleString()
-        for f in spark.createDataFrame([], t.schema_at(first_snap)).schema
+        for f in t.declared_schema(t.schema_at(first_snap))
     }
     new = {
         f.name: f.dataType.simpleString()
-        for f in spark.createDataFrame([], t.schema_ddl).schema
+        for f in t.declared_schema()
     }
     renamed = {r["from"]: r["to"] for r in t._meta.get("renames", [])}
     rows = []

@@ -14,10 +14,12 @@ and nothing here assumes local mode.
 
 from __future__ import annotations
 
+import logging
 import os
-import sys
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: Runtime confs every entry point applies even to an externally created
 #: session (the driver harness builds its own SparkSession).  All of these
@@ -49,10 +51,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             # A conf may be non-settable on exotic builds; every consumer of
             # these keys degrades gracefully (io.load_table re-checks) — but
             # surface it so type/fixture drift doesn't hide here again.
-            print(
-                f"[iceberg-v2-to-v3-upgrade-spark] WARN: conf {key}={value} not applied: {exc}",
-                file=sys.stderr,
-            )
+            _log.warning("conf %s=%s not applied: %s", key, value, exc)
     return spark
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from iceberg_v2_to_v3_upgrade_spark.tables.catalog import LocalCatalog
 from iceberg_v2_to_v3_upgrade_spark.tables.permissions import PermissionDenied
-from iceberg_v2_to_v3_upgrade_spark.tables.table import TableError
+from iceberg_v2_to_v3_upgrade_spark.tables.table import LocalTable, TableError
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 # `glue_catalog.db.t`, `db.t`, or bare `t` (reference always qualifies)
@@ -125,6 +125,22 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
     if tail:
         out.append(tail)
     return out
+
+
+def _cast_by_position(df: DataFrame, t: LocalTable) -> DataFrame:
+    """INSERT column binding: the i-th produced column becomes the i-th
+    table column, cast to its declared type; the arity must match."""
+    target = t.declared_schema()
+    if len(df.columns) != len(target):
+        raise TableError(
+            f"INSERT arity {len(df.columns)} != schema {len(target)}"
+        )
+    return df.select(
+        *[
+            F.col(c).cast(f.dataType).alias(f.name)
+            for c, f in zip(df.columns, target)
+        ]
+    )
 
 
 class EngineSQL:
@@ -453,7 +469,7 @@ class EngineSQL:
         sign = F.when(
             F.col("_change_type") == "insert", F.lit(1)
         ).otherwise(F.lit(-1))
-        declared = self.spark.createDataFrame([], t.schema_ddl).schema
+        declared = t.declared_schema()
         aggs = [
             F.sum(sign * F.expr(e)).cast(declared[a].dataType).alias(a)
             for a, e in sums.items()
@@ -580,18 +596,7 @@ class EngineSQL:
         self._authorize_table("INSERT", m.group("db"), m.group("table"))
         t = self.catalog.load_table(m.group("db"), m.group("table"))
         df = self._select(m.group("select")).df
-        target = self.spark.createDataFrame([], t.schema_ddl).schema
-        if len(df.columns) != len(target):
-            raise TableError(
-                f"INSERT arity {len(df.columns)} != schema {len(target)}"
-            )
-        aligned = df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, target)
-            ]
-        )
-        snap = t.insert(aligned)
+        snap = t.insert(_cast_by_position(df, t))
         return StatementResult(
             sql, "insert", message=f"appended snapshot {snap.id}"
         )
@@ -608,18 +613,7 @@ class EngineSQL:
         )
         t = self.catalog.load_table(m.group("db"), m.group("table"))
         df = self._select(m.group("select")).df
-        target = self.spark.createDataFrame([], t.schema_ddl).schema
-        if len(df.columns) != len(target):
-            raise TableError(
-                f"INSERT arity {len(df.columns)} != schema {len(target)}"
-            )
-        aligned = df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, target)
-            ]
-        )
-        snap = t.insert_overwrite(aligned)
+        snap = t.insert_overwrite(_cast_by_position(df, t))
         return StatementResult(
             sql, "insert_overwrite", message=f"overwrite snapshot {snap.id}"
         )
@@ -639,18 +633,7 @@ class EngineSQL:
         # let Spark's parser evaluate the literal tuples (incl.
         # current_timestamp()), then cast by position to the table schema
         values_df = self.spark.sql(f"SELECT * FROM (VALUES {m.group('values')})")
-        target = self.spark.createDataFrame([], t.schema_ddl).schema
-        if len(values_df.columns) != len(target):
-            raise TableError(
-                f"INSERT arity {len(values_df.columns)} != schema {len(target)}"
-            )
-        aligned = values_df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(values_df.columns, target)
-            ]
-        )
-        snap = t.insert(aligned)
+        snap = t.insert(_cast_by_position(values_df, t))
         return StatementResult(
             sql, "insert", message=f"appended snapshot {snap.id}"
         )
@@ -804,7 +787,7 @@ class EngineSQL:
         wrong-case grant would otherwise persist but never match at read
         time, silently protecting nothing."""
         t = self.catalog.load_table(db, table)
-        declared = self.spark.createDataFrame([], t.schema_ddl).schema
+        declared = t.declared_schema()
         by_lower = {f.name.lower(): f.name for f in declared.fields}
         out = []
         for c in cols:
@@ -1455,7 +1438,7 @@ class EngineSQL:
         w = m.group("w").strip()
         if re.search(r"\bOR\b", w, re.IGNORECASE):
             return None
-        declared = self.spark.createDataFrame([], table.schema_ddl).schema
+        declared = table.declared_schema()
         numeric = {
             f.name
             for f in declared

@@ -88,6 +88,20 @@ def _apply_with_retry(table: LocalTable, apply) -> None:
     raise last  # type: ignore[misc]  # _COMMIT_ATTEMPTS >= 1
 
 
+def _start(stream_df: DataFrame, apply_batch, checkpoint_dir: str,
+           available_now: bool):
+    """Start a ``foreachBatch`` stream; under ``available_now`` drain it
+    before returning. Returns the StreamingQuery."""
+    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if not available_now:
+        return writer.start()
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
+
+
 def stream_into_table(
     stream_df: DataFrame,
     table: LocalTable,
@@ -100,16 +114,7 @@ def stream_into_table(
     def _append_batch(batch_df: DataFrame, batch_id: int) -> None:
         _apply_with_retry(table, lambda t: t.insert(batch_df))
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-    else:
-        query = writer.start()
-    return query
+    return _start(stream_df, _append_batch, checkpoint_dir, available_now)
 
 
 def _dedup_last_writer(
@@ -179,16 +184,7 @@ def stream_upsert_into_table(
         finally:
             b.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-    else:
-        query = writer.start()
-    return query
+    return _start(stream_df, _merge_batch, checkpoint_dir, available_now)
 
 
 def stream_cdc_into_table(
@@ -238,13 +234,4 @@ def stream_cdc_into_table(
         finally:
             b.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-    else:
-        query = writer.start()
-    return query
+    return _start(stream_df, _apply_batch, checkpoint_dir, available_now)

@@ -19,7 +19,11 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_v2_to_v3_upgrade_spark.tables.permissions import PermissionStore
-from iceberg_v2_to_v3_upgrade_spark.tables.table import LocalTable, TableError
+from iceberg_v2_to_v3_upgrade_spark.tables.table import (
+    LocalTable,
+    TableError,
+    _next_snapshot_id,
+)
 
 
 class LocalCatalog:
@@ -349,7 +353,7 @@ class LocalCatalog:
             list(cur.delete_dirs),
             eq_deletes=[dict(e) for e in cur.eq_deletes],
             seq_overrides=dict(cur.seq_overrides),
-            min_id=max(s["id"] for s in src._meta["snapshots"]) + 1,
+            min_id=_next_snapshot_id(src._meta),
         )
         # Record the adoption ON THE SOURCE (after dst inherited the
         # source's ORIGINAL properties above): the snapshot table's scans

@@ -155,7 +155,7 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
     """One DuckDB SELECT that reproduces ``table.scan()`` for ``snap``
     (default: current snapshot) straight from the table's files."""
     snap = snap or table.current_snapshot()
-    declared = table.spark.createDataFrame([], table.schema_ddl).schema
+    declared = table.declared_schema()
     cols = ", ".join(f'"{name}"' for name in declared.fieldNames())
     if not snap.data_dirs:
         return _empty_select(declared)
@@ -188,12 +188,9 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
         elif write_seq in written_at:
             written = written_at[write_seq]
         else:
-            written = {
-                f.name
-                for f in table.spark.createDataFrame(
-                    [], table.schema_at(write_seq)
-                ).schema
-            }
+            written = set(
+                table.declared_schema(table.schema_at(write_seq)).fieldNames()
+            )
             written_at[write_seq] = written
         proj = []
         for f in declared:

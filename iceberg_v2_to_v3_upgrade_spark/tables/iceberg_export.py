@@ -119,7 +119,7 @@ def _iceberg_type(dt, next_id) -> object:
 def _schema_struct(table: LocalTable) -> tuple[dict, int, dict[str, int]]:
     """The table schema as an Iceberg schema struct; returns
     (schema, last_column_id, column_name -> field_id)."""
-    spark_schema = table.spark.createDataFrame([], table.schema_ddl).schema
+    spark_schema = table.declared_schema()
     counter = {"v": 0}
 
     def next_id() -> int:
@@ -239,7 +239,7 @@ def _partition_specs(
     bounds."""
     types = {
         f.name: f.dataType.simpleString()
-        for f in table.spark.createDataFrame([], table.schema_ddl).schema
+        for f in table.declared_schema()
     }
     specs: list[dict] = []
     by_id: dict[int, dict] = {}

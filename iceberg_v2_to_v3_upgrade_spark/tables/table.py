@@ -33,7 +33,9 @@ from __future__ import annotations
 import contextlib
 import datetime
 import fcntl
+import functools
 import json
+import math
 import os
 import re
 import shutil
@@ -41,6 +43,14 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    CharType,
+    DataType,
+    MapType,
+    StructType,
+    VarcharType,
+)
 
 _ROW_ID = "_row_id"
 
@@ -170,6 +180,43 @@ def _norm_ts(ts: str) -> str:
     return parsed.astimezone(datetime.timezone.utc).isoformat()
 
 
+def _next_snapshot_id(meta: dict[str, Any]) -> int:
+    """The id the next commit on ``meta`` allocates: global max + 1
+    across every branch, so ids strictly increase along any parent chain."""
+    return max(s["id"] for s in meta["snapshots"]) + 1
+
+
+def _stats_range(lo: Any, hi: Any) -> list:
+    """A dir-stats ``[lo, hi]`` entry. Integral stats stay EXACT (json
+    ints are arbitrary precision): float coercion rounds values >2^53 and
+    a rounded-down hi could wrongly satisfy ``hi <= val``, skipping a dir
+    that contains matching rows. Non-integral values are widened OUTWARD
+    so pruning stays conservative under any representation error."""
+    if isinstance(lo, int) and isinstance(hi, int):
+        return [lo, hi]
+    return [
+        math.nextafter(float(lo), -math.inf),
+        math.nextafter(float(hi), math.inf),
+    ]
+
+
+def _union_all(dfs: list[DataFrame]) -> DataFrame | None:
+    """Left-fold ``unionByName`` over ``dfs``; None when there are none."""
+    return functools.reduce(DataFrame.unionByName, dfs) if dfs else None
+
+
+def _has_char_type(dt: DataType) -> bool:
+    if isinstance(dt, (CharType, VarcharType)):
+        return True
+    if isinstance(dt, StructType):
+        return any(_has_char_type(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_char_type(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_char_type(dt.keyType) or _has_char_type(dt.valueType)
+    return False
+
+
 class LocalTable:
     """One mutable table rooted at ``root`` (see module docstring)."""
 
@@ -189,6 +236,8 @@ class LocalTable:
         #: live data dir before refusing).
         self._read_only = False
         self._meta = self._read_meta()
+        #: DDL text -> parsed StructType (see ``declared_schema``)
+        self._schemas: dict[str, StructType] = {}
 
     def _check_writable(self) -> None:
         if self._read_only:
@@ -376,6 +425,25 @@ class LocalTable:
     def schema_ddl(self) -> str:
         return self._meta["schema_ddl"]
 
+    def declared_schema(self, ddl: str | None = None) -> StructType:
+        """The ``StructType`` of ``ddl`` (default: the table's current
+        ``schema_ddl``), memoized on this handle by DDL text — schema
+        evolution changes the text, so a later call sees the new schema.
+        Parsed by the session's DDL parser (``spark.sql.timestampType``
+        applies), which is why the memo is per handle, not per process.
+        CHAR/VARCHAR are refused, as ``createDataFrame([], ddl)`` refuses
+        them."""
+        ddl = self.schema_ddl if ddl is None else ddl
+        schema = self._schemas.get(ddl)
+        if schema is None:
+            schema = StructType.fromDDL(ddl)
+            if _has_char_type(schema):
+                raise TableError(
+                    f"CHAR/VARCHAR columns are not supported: {ddl!r}"
+                )
+            self._schemas[ddl] = schema
+        return schema
+
     def snapshots(self) -> list[Snapshot]:
         return [Snapshot.from_json(s) for s in self._meta["snapshots"]]
 
@@ -532,108 +600,86 @@ class LocalTable:
         """
         self._check_writable()
         with _table_lock(self.root):
-            return self._commit_locked(
-                operation,
-                data_dirs,
-                delete_dirs,
-                branch,
-                eq_deletes,
-                parent_id,
-                seq_overrides,
-                min_id,
-                fresh_row_dirs,
-                row_id_base,
-            )
-
-    def _commit_locked(
-        self,
-        operation: str,
-        data_dirs,
-        delete_dirs,
-        branch: str | None,
-        eq_deletes: list[dict] | None,
-        parent_id: int | None,
-        seq_overrides: dict[str, int] | None,
-        min_id: int | None,
-        fresh_row_dirs: list[str] | None,
-        row_id_base: int | None,
-    ) -> Snapshot:
-        try:
-            disk = self._read_meta()
-        except (FileNotFoundError, json.JSONDecodeError):
-            disk = None
-        if disk is not None and int(disk.get("last_metadata_version", 0)) > int(
-            self._meta.get("last_metadata_version", 0)
-        ):
-            if parent_id is not None:
-                # explicit-parent commits are history surgery (publish /
-                # adoption); re-pointing them under a moved head is not
-                # a mechanical merge — surface the conflict instead
-                raise CommitConflictError(
-                    f"cannot {operation} with an explicit parent: the "
-                    f"table moved underneath this handle; reload and retry"
+            try:
+                disk = self._read_meta()
+            except (FileNotFoundError, json.JSONDecodeError):
+                disk = None
+            if disk is not None and int(
+                disk.get("last_metadata_version", 0)
+            ) > int(self._meta.get("last_metadata_version", 0)):
+                if parent_id is not None:
+                    # explicit-parent commits are history surgery (publish
+                    # / adoption); re-pointing them under a moved head is
+                    # not a mechanical merge — surface the conflict instead
+                    raise CommitConflictError(
+                        f"cannot {operation} with an explicit parent: the "
+                        f"table moved underneath this handle; reload and "
+                        f"retry"
+                    )
+                data_dirs, delete_dirs, eq_deletes, rebased_overrides = (
+                    self._rebase_commit(
+                        disk,
+                        operation,
+                        list(data_dirs),
+                        list(delete_dirs),
+                        list(eq_deletes or []),
+                        branch,
+                        list(fresh_row_dirs or []),
+                        row_id_base,
+                        min_id,
+                    )
                 )
-            data_dirs, delete_dirs, eq_deletes, rebased_overrides = (
-                self._rebase_commit(
-                    disk,
-                    operation,
-                    list(data_dirs),
-                    list(delete_dirs),
-                    list(eq_deletes or []),
-                    branch,
-                    list(fresh_row_dirs or []),
-                    row_id_base,
-                    min_id,
-                )
+                seq_overrides = {
+                    **(seq_overrides or {}), **rebased_overrides
+                }
+            resolved_parent = (
+                parent_id
+                if parent_id is not None
+                else self._meta["branches"][branch]
+                if branch is not None
+                else self._meta["current_snapshot_id"]
             )
-            seq_overrides = {**(seq_overrides or {}), **rebased_overrides}
-        resolved_parent = (
-            parent_id
-            if parent_id is not None
-            else self._meta["branches"][branch]
-            if branch is not None
-            else self._meta["current_snapshot_id"]
-        )
-        # Inherit the parent's seq overrides (cherry-pick scoping follows
-        # the publish lineage), merge any new ones, and prune entries for
-        # dirs this snapshot no longer carries.
-        parent_rec = next(
-            (s for s in self._meta["snapshots"] if s["id"] == resolved_parent),
-            None,
-        )
-        merged = dict((parent_rec or {}).get("seq_overrides", {}))
-        merged.update(seq_overrides or {})
-        live = set(data_dirs)
-        merged = {d: int(s) for d, s in merged.items() if d in live}
-        parent_data = set((parent_rec or {}).get("data_dirs", []))
-        snap = Snapshot(
-            # min_id lets an adopting commit (snapshot_table) floor the
-            # numbering above every adopted source seq, so the two
-            # numbering systems never interleave
-            id=max(
-                max(s["id"] for s in self._meta["snapshots"]) + 1,
-                min_id or 0,
-            ),
-            timestamp=_utcnow(),
-            operation=operation,
-            data_dirs=data_dirs,
-            delete_dirs=delete_dirs,
-            eq_deletes=list(eq_deletes or []),
-            # parent = the head this commit builds on (branch head for
-            # staged writes, else main) — Iceberg parent-snapshot-id.
-            # Rollback/set_current override it with the TARGET so the
-            # abandoned line leaves the ancestry (Iceberg ancestorsOf).
-            parent_id=resolved_parent,
-            seq_overrides=merged,
-            added_dirs=[d for d in data_dirs if d not in parent_data],
-        )
-        self._meta["snapshots"].append(snap.to_json())
-        if branch is None:
-            self._meta["current_snapshot_id"] = snap.id
-        else:
-            self._meta["branches"][branch] = snap.id
-        self._write_meta(locked=True)
-        return snap
+            # Inherit the parent's seq overrides (cherry-pick scoping
+            # follows the publish lineage), merge any new ones, and prune
+            # entries for dirs this snapshot no longer carries.
+            parent_rec = next(
+                (
+                    s
+                    for s in self._meta["snapshots"]
+                    if s["id"] == resolved_parent
+                ),
+                None,
+            )
+            merged = dict((parent_rec or {}).get("seq_overrides", {}))
+            merged.update(seq_overrides or {})
+            live = set(data_dirs)
+            merged = {d: int(s) for d, s in merged.items() if d in live}
+            parent_data = set((parent_rec or {}).get("data_dirs", []))
+            snap = Snapshot(
+                # min_id lets an adopting commit (snapshot_table) floor the
+                # numbering above every adopted source seq, so the two
+                # numbering systems never interleave
+                id=max(_next_snapshot_id(self._meta), min_id or 0),
+                timestamp=_utcnow(),
+                operation=operation,
+                data_dirs=data_dirs,
+                delete_dirs=delete_dirs,
+                eq_deletes=list(eq_deletes or []),
+                # parent = the head this commit builds on (branch head for
+                # staged writes, else main) — Iceberg parent-snapshot-id.
+                # Rollback/set_current override it with the TARGET so the
+                # abandoned line leaves the ancestry (Iceberg ancestorsOf).
+                parent_id=resolved_parent,
+                seq_overrides=merged,
+                added_dirs=[d for d in data_dirs if d not in parent_data],
+            )
+            self._meta["snapshots"].append(snap.to_json())
+            if branch is None:
+                self._meta["current_snapshot_id"] = snap.id
+            else:
+                self._meta["branches"][branch] = snap.id
+            self._write_meta(locked=True)
+            return snap
 
     def _rebase_commit(
         self,
@@ -734,9 +780,7 @@ class LocalTable:
             for k, v in stale.get("imported_dirs", {}).items()
             if k not in disk.get("imported_dirs", {})
         }
-        new_id = max(
-            max(s["id"] for s in disk["snapshots"]) + 1, min_id or 0
-        )
+        new_id = max(_next_snapshot_id(disk), min_id or 0)
         # row-id reconciliation: if the winner advanced next_row_id past
         # the base we assigned from, our materialized ids overlap theirs —
         # shift ours above the winner's watermark
@@ -760,9 +804,13 @@ class LocalTable:
         merged["next_row_id"] = merged_next
         if int(merged["properties"].get("format-version", "1")) >= 3:
             merged["properties"]["next-row-id"] = str(merged_next)
+        # only OUR new dirs' stats: the rest of the stale map may name
+        # dirs the winner's expiry already pruned
+        stale_stats = stale.get("dir_stats", {})
         stats = merged.setdefault("dir_stats", {})
-        for k, v in stale.get("dir_stats", {}).items():
-            stats.setdefault(k, v)
+        for d in added_data:
+            if d in stale_stats:
+                stats.setdefault(d, stale_stats[d])
         imports = merged.setdefault("imported_dirs", {})
         for k, v in ours_imports.items():
             v["seq"] = new_id
@@ -799,9 +847,10 @@ class LocalTable:
         return new_data, new_del, new_eq, overrides
 
     @staticmethod
-    def _parse_dir_seq(d: str) -> int:
+    def _parse_dir_seq(d: str, default: int = 0) -> int:
+        """The commit sequence a ``snap-N[...]`` dir name encodes."""
         m = re.search(r"snap-(\d+)", os.path.basename(d))
-        return int(m.group(1)) if m else 0
+        return int(m.group(1)) if m else default
 
     def _shift_row_ids(self, d: str, shift: int) -> None:
         """Rewrite one just-written data dir with ``_row_id += shift``
@@ -822,10 +871,49 @@ class LocalTable:
         shutil.rmtree(d)
         os.rename(tmp, d)
 
-    def _next_dir(self, kind: str, snap_id: int) -> str:
+    def _next_dir(self, kind: str, snap_id: int, suffix: str = "") -> str:
+        self._check_writable()  # before the reservation marker lands
         return self._reserve_dir(
-            os.path.join(self.root, kind, f"snap-{snap_id:05d}")
+            os.path.join(self.root, kind, f"snap-{snap_id:05d}{suffix}")
         )
+
+    def _write_new_rows(
+        self,
+        df: DataFrame,
+        snap_id: int,
+        keep_row_ids: bool = False,
+        max_records_per_file: int | None = None,
+    ) -> tuple[str, dict[str, Any]]:
+        """The one way rows become a new data dir: reserve
+        ``data/snap-N``, give the rows fresh ``_row_id``s from
+        ``next_row_id``, write, and advance the watermark before the
+        commit. ``keep_row_ids``: the rows already carry their ids
+        (compaction, copy-on-write, V3 carried-lineage updates).
+        Returns the dir and the ``_commit`` keywords a rebase needs to
+        shift fresh ids above a concurrent writer's (none for kept ids —
+        they are not this commit's to move)."""
+        row_id_base = int(self._meta["next_row_id"])
+        if not keep_row_ids:
+            df = df.withColumn(
+                _ROW_ID, F.monotonically_increasing_id() + F.lit(row_id_base)
+            )
+        path = self._next_dir("data", snap_id)
+        self._write_data_dir(df, path, max_records_per_file)
+        self._bump_row_id_watermark(path)
+        if keep_row_ids:
+            return path, {}
+        return path, {"fresh_row_dirs": [path], "row_id_base": row_id_base}
+
+    def _write_delete_dir(
+        self, df: DataFrame, snap_id: int, suffix: str = ""
+    ) -> str:
+        """The one way delete files land: reserve ``deletes/snap-N`` and
+        write ``df`` there — positional ``_row_id``s, or key values for
+        an equality delete. The ``-eq`` / ``-dv`` name suffixes are read
+        back by orphan GC and sequence parsing."""
+        path = self._next_dir("deletes", snap_id, suffix)
+        df.write.mode("overwrite").parquet(path)
+        return path
 
     @staticmethod
     def _reserve_dir(base: str) -> str:
@@ -871,12 +959,6 @@ class LocalTable:
             os.remove(marker)
         except FileNotFoundError:
             pass
-
-    def _assign_row_ids(self, df: DataFrame) -> DataFrame:
-        base = int(self._meta["next_row_id"])
-        return df.withColumn(
-            _ROW_ID, F.monotonically_increasing_id() + F.lit(base)
-        )
 
     def _bump_row_id_watermark(self, data_path: str) -> None:
         """Advance ``next_row_id`` past the max ``_row_id`` in the
@@ -927,10 +1009,15 @@ class LocalTable:
             # their OLD (possibly low) ids — taking hi+1 unconditionally
             # would move the watermark backwards and let the next insert
             # mint duplicate _row_ids (round-8 review finding)
-            nxt = max(int(self._meta["next_row_id"]), int(hi) + 1)
-            self._meta["next_row_id"] = nxt
-            if self.format_version >= 3:
-                self._meta["properties"]["next-row-id"] = str(nxt)
+            self._set_next_row_id(
+                max(int(self._meta["next_row_id"]), int(hi) + 1)
+            )
+
+    def _set_next_row_id(self, nxt: int) -> None:
+        """Move the row-id watermark; V3 mirrors it in ``next-row-id``."""
+        self._meta["next_row_id"] = nxt
+        if self.format_version >= 3:
+            self._meta["properties"]["next-row-id"] = str(nxt)
 
     @property
     def partition_spec_log(self) -> list[dict]:
@@ -958,7 +1045,7 @@ class LocalTable:
         every subsequent INSERT instead of failing here."""
         schema_cols = {
             f.name
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema
+            for f in self.declared_schema()
         }
         seen_names: set[str] = set()
         for name, canon, _derived, src in self._spec_names(new_partition_by):
@@ -982,7 +1069,7 @@ class LocalTable:
                 )
             seen_names.add(name)
         log = self.partition_spec_log
-        start_seq = max(s["id"] for s in self._meta["snapshots"]) + 1
+        start_seq = _next_snapshot_id(self._meta)
         spec_id = max(e["spec_id"] for e in log) + 1
         log.append(
             {
@@ -1048,7 +1135,7 @@ class LocalTable:
         out: list[tuple[str, Column | None]] = []
         types = {
             f.name: f.dataType.simpleString()
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema
+            for f in self.declared_schema()
         }
         for spec in (
             self.partition_by if partition_by is None else partition_by
@@ -1148,8 +1235,7 @@ class LocalTable:
             scope = self._pf_scope(pf)
         if scope is None or len(self.partition_spec_log) == 1:
             return True
-        m = re.search(r"snap-(\d+)", os.path.basename(d))
-        seq = int(m.group(1)) if m else 0
+        seq = self._parse_dir_seq(d)
         mine = {
             name: canon
             for name, canon, derived, _src in self._spec_names(
@@ -1224,7 +1310,7 @@ class LocalTable:
         (they are not stored in the files). Any footer gap — missing
         stats, exotic types (decimal bytes), unparsable partition dirs —
         falls back to the exact read+agg job, never to wrong stats."""
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        declared = self.declared_schema()
         numeric = {
             f.name: f.dataType.typeName()
             for f in declared
@@ -1249,7 +1335,6 @@ class LocalTable:
         """Per-column [lo, hi] from parquet footers + partition dir names;
         None when any footer lacks usable stats (caller falls back)."""
         import glob as _glob
-        import math as _math
 
         import pyarrow.parquet as _pq
 
@@ -1261,7 +1346,7 @@ class LocalTable:
             if isinstance(mn, bool) or not isinstance(mn, (int, float)):
                 return False  # decimal-as-bytes or exotic: use the exact job
             if isinstance(mn, float) and (
-                _math.isnan(mn) or _math.isnan(mx)  # type: ignore[arg-type]
+                math.isnan(mn) or math.isnan(mx)  # type: ignore[arg-type]
             ):
                 return False  # NaN stats: Spark max() semantics differ
             if col not in lo:
@@ -1308,25 +1393,9 @@ class LocalTable:
                         return None
                     if not _update(col, st.min, st.max):
                         return None
-        stats: dict[str, list] = {}
-        for col in numeric:
-            if col not in lo:
-                continue
-            l, h = lo[col], hi[col]
-            # Keep integral stats EXACT (json ints are arbitrary
-            # precision): float coercion rounds values >2^53 and a
-            # rounded-down hi could wrongly satisfy `hi <= val`,
-            # skipping a dir that contains matching rows. Non-integral
-            # values are widened OUTWARD so pruning stays conservative
-            # under any representation error.
-            if isinstance(l, int) and isinstance(h, int):
-                stats[col] = [l, h]
-            else:
-                stats[col] = [
-                    _math.nextafter(float(l), -_math.inf),
-                    _math.nextafter(float(h), _math.inf),
-                ]
-        return stats
+        return {
+            col: _stats_range(lo[col], hi[col]) for col in numeric if col in lo
+        }
 
     def _dir_stats_from_read(
         self, path: str, numeric: list[str]
@@ -1340,20 +1409,11 @@ class LocalTable:
             *[F.min(c).alias(f"lo_{c}") for c in numeric],
             *[F.max(c).alias(f"hi_{c}") for c in numeric],
         ).collect()[0]
-        stats = {}
-        for c in numeric:
-            lo, hi = row[f"lo_{c}"], row[f"hi_{c}"]
-            if lo is not None:
-                if isinstance(lo, int) and isinstance(hi, int):
-                    stats[c] = [lo, hi]
-                else:
-                    import math as _math
-
-                    stats[c] = [
-                        _math.nextafter(float(lo), -_math.inf),
-                        _math.nextafter(float(hi), _math.inf),
-                    ]
-        return stats
+        return {
+            c: _stats_range(row[f"lo_{c}"], row[f"hi_{c}"])
+            for c in numeric
+            if row[f"lo_{c}"] is not None
+        }
 
     _SIMPLE_PRED = None  # compiled lazily below
 
@@ -1410,7 +1470,7 @@ class LocalTable:
     def _align_to_schema(self, df: DataFrame) -> DataFrame:
         """Project/cast incoming rows to the declared schema (missing
         columns null-fill — schema evolution; extras are rejected)."""
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        declared = self.declared_schema()
         extra = set(df.columns) - set(declared.fieldNames()) - {_ROW_ID}
         if extra:
             raise TableError(f"columns not in table schema: {sorted(extra)}")
@@ -1432,20 +1492,16 @@ class LocalTable:
         advancing the table's current snapshot.
         """
         cur = self._base_snapshot(branch)
-        row_id_base = int(self._meta["next_row_id"])
-        with_ids = self._assign_row_ids(self._align_to_schema(df))
-        snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
-        path = self._next_dir("data", snap_id)
-        self._write_data_dir(with_ids, path)
-        self._bump_row_id_watermark(path)
+        path, fresh = self._write_new_rows(
+            self._align_to_schema(df), _next_snapshot_id(self._meta)
+        )
         return self._commit(
             "append",
             cur.data_dirs + [path],
             list(cur.delete_dirs),
             branch=branch,
             eq_deletes=cur.eq_deletes,
-            fresh_row_dirs=[path],
-            row_id_base=row_id_base,
+            **fresh,
         )
 
     def insert_values(self, rows: list[tuple]) -> Snapshot:
@@ -1470,20 +1526,11 @@ class LocalTable:
         cur = self.current_snapshot()
         aligned = self._align_to_schema(df)
         spec = self._partition_spec()
-        row_id_base = int(self._meta["next_row_id"])
-        snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
-        data_path = self._next_dir("data", snap_id)
-        with_ids = self._assign_row_ids(aligned)
-        self._write_data_dir(with_ids, data_path)
-        self._bump_row_id_watermark(data_path)
+        snap_id = _next_snapshot_id(self._meta)
+        data_path, fresh = self._write_new_rows(aligned, snap_id)
         if not spec:
             return self._commit(
-                "overwrite",
-                [data_path],
-                [],
-                eq_deletes=[],
-                fresh_row_dirs=[data_path],
-                row_id_base=row_id_base,
+                "overwrite", [data_path], [], eq_deletes=[], **fresh
             )
         names = [name for name, _ in spec]
         exprs = [
@@ -1504,15 +1551,13 @@ class LocalTable:
             .join(F.broadcast(touched.alias("p")), cond, "left_semi")
             .select(_ROW_ID)
         )
-        del_path = self._next_dir("deletes", snap_id)
-        matched.write.mode("overwrite").parquet(del_path)
+        del_path = self._write_delete_dir(matched, snap_id)
         return self._commit(
             "overwrite",
             cur.data_dirs + [data_path],
             cur.delete_dirs + [del_path],
             eq_deletes=cur.eq_deletes,
-            fresh_row_dirs=[data_path],
-            row_id_base=row_id_base,
+            **fresh,
         )
 
     @property
@@ -1549,7 +1594,7 @@ class LocalTable:
         if source_dir in self.current_snapshot().data_dirs:
             raise TableError(f"{source_dir} is already table data")
         probe = self.spark.read.parquet(source_dir)
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        declared = self.declared_schema()
         extra = set(probe.columns) - set(declared.fieldNames())
         if _ROW_ID in probe.columns:
             raise TableError(
@@ -1571,13 +1616,10 @@ class LocalTable:
         for fp, n in per_file:
             files[fp] = base
             base += int(n)
-        self._meta["next_row_id"] = base
-        if self.format_version >= 3:
-            self._meta["properties"]["next-row-id"] = str(base)
+        self._set_next_row_id(base)
         cur = self.current_snapshot()
-        snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
         self._meta.setdefault("imported_dirs", {})[source_dir] = {
-            "seq": snap_id,
+            "seq": _next_snapshot_id(self._meta),
             "files": files,
         }
         return self._commit(
@@ -1600,10 +1642,9 @@ class LocalTable:
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         cur = self._base_snapshot(branch)
         matched = self._scan_raw(cur).filter(cond).select(_ROW_ID)
-        snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
+        snap_id = _next_snapshot_id(self._meta)
         if self._meta["properties"].get("write.delete.mode") == "merge-on-read":
-            path = self._next_dir("deletes", snap_id)
-            matched.write.mode("overwrite").parquet(path)
+            path = self._write_delete_dir(matched, snap_id)
             return self._commit(
                 "delete",
                 list(cur.data_dirs),
@@ -1615,8 +1656,7 @@ class LocalTable:
         remaining = self._scan_raw(cur).join(
             F.broadcast(matched), _ROW_ID, "left_anti"
         )
-        path = self._next_dir("data", snap_id)
-        self._write_data_dir(remaining, path)
+        path, _ = self._write_new_rows(remaining, snap_id, keep_row_ids=True)
         return self._commit("delete", [path], [], branch=branch)
 
     def delete_by_keys(
@@ -1633,19 +1673,13 @@ class LocalTable:
         per key: no scan of the table happens here at all (the whole
         point vs ``delete_where``, which must find matching positions).
         """
-        declared = {
-            f.name for f in self.spark.createDataFrame([], self.schema_ddl).schema
-        }
-        missing = set(eq_cols) - declared
+        missing = set(eq_cols) - set(self.declared_schema().fieldNames())
         if missing:
             raise TableError(f"equality columns not in schema: {sorted(missing)}")
         cur = self._base_snapshot(branch)
-        snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
-        path = self._reserve_dir(
-            os.path.join(self.root, "deletes", f"snap-{snap_id:05d}-eq")
-        )
-        keys_df.select(*eq_cols).distinct().write.mode("overwrite").parquet(
-            path
+        snap_id = _next_snapshot_id(self._meta)
+        path = self._write_delete_dir(
+            keys_df.select(*eq_cols).distinct(), snap_id, "-eq"
         )
         entry = {"dir": path, "cols": list(eq_cols), "seq": snap_id}
         return self._commit(
@@ -1680,12 +1714,11 @@ class LocalTable:
         # must not leak the cached frame (round-8 review finding)
         try:
             rewritten = self._apply_assignments(matched.drop(_ROW_ID), assignments)
-            snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
-            row_id_base = int(self._meta["next_row_id"])
+            snap_id = _next_snapshot_id(self._meta)
             if self._meta["properties"].get("write.update.mode") == "merge-on-read":
-                del_path = self._next_dir("deletes", snap_id)
-                matched.select(_ROW_ID).write.mode("overwrite").parquet(del_path)
-                data_path = self._next_dir("data", snap_id)
+                del_path = self._write_delete_dir(
+                    matched.select(_ROW_ID), snap_id
+                )
                 carried = self.format_version >= 3
                 if carried:
                     # V3 row lineage: the rewritten row KEEPS its _row_id
@@ -1695,44 +1728,33 @@ class LocalTable:
                     # delete application (flagged here) keeps the carried copy
                     # visible. (rewritten above had _ROW_ID dropped — rebuild
                     # the SET projection from `matched` keeping the id.)
-                    with_ids = self._apply_assignments(matched, assignments)
+                    rewritten = self._apply_assignments(matched, assignments)
                     self._meta["carried_row_ids"] = True
-                else:
-                    with_ids = self._assign_row_ids(rewritten)
-                self._write_data_dir(with_ids, data_path)
-                self._bump_row_id_watermark(data_path)
-                snap = self._commit(
+                # V3 carried rows keep their original ids — nothing to
+                # shift on rebase; V2 rewrites get fresh ids
+                data_path, fresh = self._write_new_rows(
+                    rewritten, snap_id, keep_row_ids=carried
+                )
+                return self._commit(
                     "update",
                     cur.data_dirs + [data_path],
                     cur.delete_dirs + [del_path],
                     branch=branch,
                     eq_deletes=cur.eq_deletes,
-                    # V3 carried rows keep their original ids — nothing to
-                    # shift on rebase; V2 rewrites got fresh ids
-                    fresh_row_dirs=[] if carried else [data_path],
-                    row_id_base=None if carried else row_id_base,
+                    **fresh,
                 )
-                return snap
             # copy-on-write. NULL-predicate rows are NOT matched (SQL
             # three-valued logic) and must be KEPT: a bare ~cond is NULL for
             # them too, which would silently drop the rows from the single
             # rewritten dir (round-8 review finding; the MoR branch never
             # had the problem because unmatched rows stay in their dir).
             untouched = raw.filter(~F.coalesce(cond, F.lit(False))).drop(_ROW_ID)
-            merged = untouched.unionByName(rewritten)
-            data_path = self._next_dir("data", snap_id)
-            with_ids = self._assign_row_ids(merged)
-            self._write_data_dir(with_ids, data_path)
-            self._bump_row_id_watermark(data_path)
-            snap = self._commit(
-                "update",
-                [data_path],
-                [],
-                branch=branch,
-                fresh_row_dirs=[data_path],
-                row_id_base=row_id_base,
+            data_path, fresh = self._write_new_rows(
+                untouched.unionByName(rewritten), snap_id
             )
-            return snap
+            return self._commit(
+                "update", [data_path], [], branch=branch, **fresh
+            )
         finally:
             matched.unpersist()
 
@@ -1746,10 +1768,7 @@ class LocalTable:
         implementation for both the fresh-id and V3 carried-row paths of
         ``update_set`` (review finding: the duplicated loops drifted
         apart in maintenance)."""
-        declared = {
-            f.name: f.dataType
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema
-        }
+        declared = {f.name: f.dataType for f in self.declared_schema()}
         for col, expr in assignments.items():
             value = F.expr(expr) if isinstance(expr, str) else expr
             if col in declared:
@@ -1797,7 +1816,7 @@ class LocalTable:
         batch). Everything else is appends.
         """
         cur = self.current_snapshot()
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        declared = self.declared_schema()
         cols = declared.fieldNames()
         t = self._scan_raw(cur).alias("t")
         s = source.alias("s")
@@ -1903,36 +1922,29 @@ class LocalTable:
             elif when_not_matched is not None:
                 raise TableError(f"bad when_not_matched: {when_not_matched!r}")
 
-            snap_id = max(s2["id"] for s2 in self._meta["snapshots"]) + 1
+            snap_id = _next_snapshot_id(self._meta)
             delete_dirs = list(cur.delete_dirs)
             data_dirs = list(cur.data_dirs)
             if when_matched is not None:
-                del_path = self._next_dir("deletes", snap_id)
-                matched.select(F.col(f"t.{_ROW_ID}").alias(_ROW_ID)).write.mode(
-                    "overwrite"
-                ).parquet(del_path)
-                delete_dirs.append(del_path)
-            appended = None
-            for df in new_rows:
-                appended = df if appended is None else appended.unionByName(df)
-            fresh_row_dirs: list[str] = []
-            row_id_base = int(self._meta["next_row_id"])
-            if appended is not None:
-                data_path = self._next_dir("data", snap_id)
-                with_ids = self._assign_row_ids(appended)
-                self._write_data_dir(with_ids, data_path)
-                self._bump_row_id_watermark(data_path)
+                delete_dirs.append(
+                    self._write_delete_dir(
+                        matched.select(F.col(f"t.{_ROW_ID}").alias(_ROW_ID)),
+                        snap_id,
+                    )
+                )
+            fresh: dict[str, Any] = {}
+            if new_rows:
+                data_path, fresh = self._write_new_rows(
+                    _union_all(new_rows), snap_id
+                )
                 data_dirs.append(data_path)
-                fresh_row_dirs = [data_path]
-            snap = self._commit(
+            return self._commit(
                 "merge",
                 data_dirs,
                 delete_dirs,
                 eq_deletes=cur.eq_deletes,
-                fresh_row_dirs=fresh_row_dirs,
-                row_id_base=row_id_base if fresh_row_dirs else None,
+                **fresh,
             )
-            return snap
         finally:
             matched_raw.unpersist()
 
@@ -1975,7 +1987,7 @@ class LocalTable:
         so a non-null default on a V2 table is refused. Rows written
         AFTER the ALTER store real values; a post-ALTER NULL stays NULL
         (the default is not a read-time coalesce for new data)."""
-        schema = self.spark.createDataFrame([], self.schema_ddl).schema
+        schema = self.declared_schema()
         if name in schema.fieldNames():
             raise TableError(f"column {name} already exists")
         if default is not None and self.format_version < 3:
@@ -2037,7 +2049,7 @@ class LocalTable:
         outside Iceberg's legal set are refused (they would silently
         corrupt or fail at read time).
         """
-        schema = self.spark.createDataFrame([], self.schema_ddl).schema
+        schema = self.declared_schema()
         cur = None
         for f in schema:
             if f.name == name:
@@ -2070,7 +2082,7 @@ class LocalTable:
         Old files keep serving their bytes under the new name; files
         written after the rename carry the new name physically.
         """
-        schema = self.spark.createDataFrame([], self.schema_ddl).schema
+        schema = self.declared_schema()
         if old not in schema.fieldNames():
             raise TableError(f"no column {old}")
         if new in schema.fieldNames():
@@ -2109,7 +2121,7 @@ class LocalTable:
     def drop_column(self, name: str) -> None:
         """ALTER TABLE DROP COLUMN — metadata-only; files keep the bytes,
         scans stop projecting them (Iceberg semantics)."""
-        schema = self.spark.createDataFrame([], self.schema_ddl).schema
+        schema = self.declared_schema()
         if name not in schema.fieldNames():
             raise TableError(f"no column {name}")
         if name in self.partition_by:
@@ -2142,25 +2154,15 @@ class LocalTable:
         imported = self._meta.get("imported_dirs", {}).get(d)
         if imported is not None:
             return self._read_imported_dir(d, ddl, imported)
-        renames = self._meta.get("renames", [])
-        m = re.search(r"snap-(\d+)", os.path.basename(d))
-        seq = int(m.group(1)) if m else 0
+        seq = self._parse_dir_seq(d)
         df = None
-        if renames:
-            fields = [
-                (f.name, f.dataType.simpleString())
-                for f in self.spark.createDataFrame([], ddl).schema
+        if self._meta.get("renames"):
+            hist = [
+                (self._physical_name(f.name, seq), f.name,
+                 f.dataType.simpleString())
+                for f in self.declared_schema(ddl)
             ]
-            hist = []
-            changed = False
-            for name, dt in fields:
-                h = name
-                for r in reversed(renames):
-                    if r["to"] == h and seq <= r["seq"]:
-                        h = r["from"]
-                        changed = True
-                hist.append((h, name, dt))
-            if changed:
+            if any(h != name for h, name, _ in hist):
                 read_ddl = ", ".join(f"{h} {dt}" for h, _, dt in hist)
                 df = (
                     self.spark.read.schema(read_ddl)
@@ -2171,9 +2173,20 @@ class LocalTable:
         if df is None:
             # per-dir basePath so identity-partition columns round-trip
             df = self.spark.read.schema(ddl).option("basePath", d).parquet(d)
-        # V3 initial-defaults: a dir whose commit sequence predates the
-        # ADD COLUMN ... DEFAULT reads the default literal instead of the
-        # null-fill; post-ALTER dirs store real values (NULLs included)
+        return self._apply_initial_defaults(df, seq)
+
+    def _physical_name(self, name: str, seq: int) -> str:
+        """The name column ``name`` had when data at commit sequence
+        ``seq`` was written: the rename log walked newest->oldest."""
+        for r in reversed(self._meta.get("renames", [])):
+            if r["to"] == name and seq <= r["seq"]:
+                name = r["from"]
+        return name
+
+    def _apply_initial_defaults(self, df: DataFrame, seq: int) -> DataFrame:
+        """V3 initial-defaults: data whose commit sequence predates the
+        ADD COLUMN ... DEFAULT reads the default literal instead of the
+        null-fill; post-ALTER data stores real values (NULLs included)."""
         for name, entry in self._meta.get("column_defaults", {}).items():
             if seq <= entry["seq"] and name in df.columns:
                 df = df.withColumn(
@@ -2190,7 +2203,7 @@ class LocalTable:
         literal file->base map (bounded by file count, pure expression,
         no join). Columns the files lack (post-import ADD COLUMNs)
         null-fill; initial-defaults apply via the recorded import seq."""
-        fields = list(self.spark.createDataFrame([], ddl).schema)
+        fields = list(self.declared_schema(ddl))
         phys = self.spark.read.parquet(d)
         base_map = F.create_map(
             *[
@@ -2200,20 +2213,10 @@ class LocalTable:
             ]
         )
         seq = int(entry["seq"])
-        renames = self._meta.get("renames", [])
-
-        def _physical(name: str) -> str:
-            # the files store the name each column had at import time —
-            # same newest->oldest rename walk as _read_one_dir
-            h = name
-            for r in reversed(renames):
-                if r["to"] == h and seq <= r["seq"]:
-                    h = r["from"]
-            return h
-
         cols = []
         for f in fields:  # keep the exact ddl column order
-            h = _physical(f.name)
+            # the files store the name each column had at import time
+            h = self._physical_name(f.name, seq)
             if f.name == _ROW_ID:
                 cols.append(
                     (
@@ -2225,14 +2228,7 @@ class LocalTable:
                 cols.append(F.col(h).cast(f.dataType).alias(f.name))
             else:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        df = phys.select(*cols)
-        for name, centry in self._meta.get("column_defaults", {}).items():
-            if seq <= centry["seq"] and name in df.columns:
-                df = df.withColumn(
-                    name,
-                    F.expr(f"CAST({centry['sql']} AS {centry['dtype']})"),
-                )
-        return df
+        return self._apply_initial_defaults(phys.select(*cols), seq)
 
     def _read_dirs(
         self,
@@ -2254,18 +2250,14 @@ class LocalTable:
         behavior (filter commutes with union), with the filter sitting at
         the scan so Spark prunes directories before listing files."""
         scope = self._pf_scope(partition_filter) if partition_filter else None
-        dfs = [
-            self._maybe_filter_dir(
-                self._read_one_dir(d, ddl), d, partition_filter, scope
-            )
-            for d in dirs
-        ]
-        if not dfs:
-            return None
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
-        return out
+        return _union_all(
+            [
+                self._maybe_filter_dir(
+                    self._read_one_dir(d, ddl), d, partition_filter, scope
+                )
+                for d in dirs
+            ]
+        )
 
     def _delete_scope_seq(self, d: str, snap: Snapshot) -> int:
         """The commit sequence deletes are scoped against for data dir
@@ -2283,8 +2275,7 @@ class LocalTable:
         override = snap.seq_overrides.get(d)
         if override is not None:
             return int(override)
-        m = re.search(r"snap-(\d+)", os.path.basename(d))
-        return int(m.group(1)) if m else 0
+        return self._parse_dir_seq(d)
 
     def _read_data_with_seq(
         self, snap: Snapshot, partition_filter: str | None = None
@@ -2301,28 +2292,25 @@ class LocalTable:
             seq = self._delete_scope_seq(d, snap)
             df = self._read_one_dir(d, ddl).withColumn("_seq", F.lit(seq))
             dfs.append(self._maybe_filter_dir(df, d, partition_filter, scope))
-        if not dfs:
-            return None
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
-        return out
+        return _union_all(dfs)
+
+    def _read_eq_keys(self, entry: dict) -> DataFrame:
+        """An equality-delete dir's key rows, typed as declared."""
+        types = {
+            f.name: f.dataType.simpleString() for f in self.declared_schema()
+        }
+        return self.spark.read.schema(
+            ", ".join(f"{c} {types[c]}" for c in entry["cols"])
+        ).parquet(entry["dir"])
 
     def _apply_eq_deletes(self, snap: Snapshot, data: DataFrame) -> DataFrame:
         """Anti-join each equality-delete key set against data rows with
         an OLDER commit sequence (broadcast — key sets are O(deleted
         keys), the fact side never shuffles)."""
-        declared = {
-            f.name: f.dataType.simpleString()
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema
-        }
         for entry in snap.eq_deletes:
             cols = entry["cols"]
-            read_ddl = ", ".join(f"{c} {declared[c]}" for c in cols)
-            keys = (
-                self.spark.read.schema(read_ddl)
-                .parquet(entry["dir"])
-                .select(*[F.col(c).alias(f"_eq_{c}") for c in cols])
+            keys = self._read_eq_keys(entry).select(
+                *[F.col(c).alias(f"_eq_{c}") for c in cols]
             )
             cond = F.lit(True)
             for c in cols:
@@ -2345,8 +2333,7 @@ class LocalTable:
         broadcast; the data side never shuffles."""
         dfs = []
         for d in snap.delete_dirs:
-            m = re.search(r"snap-(\d+)", os.path.basename(d))
-            dseq = int(m.group(1)) if m else 10**9
+            dseq = self._parse_dir_seq(d, default=10**9)
             dfs.append(
                 self._read_one_dir(d, f"{_ROW_ID} long")
                 .select(F.col(_ROW_ID).alias("_del_row_id"))
@@ -2354,13 +2341,31 @@ class LocalTable:
             )
         if not dfs:
             return data
-        deletes = dfs[0]
-        for df in dfs[1:]:
-            deletes = deletes.unionByName(df)
+        deletes = _union_all(dfs)
         cond = (F.col(_ROW_ID) == F.col("_del_row_id")) & (
             F.col("_seq") < F.col("_dseq")
         )
         return data.join(F.broadcast(deletes), on=cond, how="left_anti")
+
+    def _apply_deletes(self, snap: Snapshot, data: DataFrame) -> DataFrame:
+        """The MoR merge: ``snap``'s equality and positional deletes
+        applied to ``data`` (rows tagged with ``_seq`` when the snapshot
+        needs sequence scoping — see ``_scan_raw``)."""
+        if snap.eq_deletes:
+            data = self._apply_eq_deletes(snap, data)
+        if self._meta.get("carried_row_ids"):
+            # V3 row lineage: an UPDATE re-appends the row with its
+            # ORIGINAL _row_id (Iceberg V3 carried-over row ids), so a
+            # positional tombstone must only hit rows committed BEFORE
+            # it — the per-(file,position) scoping Iceberg gets from
+            # file-referenced delete files, modeled here by commit seq.
+            return self._apply_pos_deletes_seq_scoped(snap, data)
+        deletes = self._read_dirs(snap.delete_dirs, f"{_ROW_ID} long")
+        if deletes is None:
+            return data
+        # The C1 implicit MoR anti-join (README.md:7): delete files are
+        # O(deleted rows), broadcast them; data side never shuffles.
+        return data.join(F.broadcast(deletes), _ROW_ID, "left_anti")
 
     def _scan_raw(
         self,
@@ -2403,23 +2408,8 @@ class LocalTable:
             # residual: stats pruning only skips whole dirs; the row-level
             # predicate still applies (and commutes with the MoR anti-join)
             data = data.filter(data_filter)
-        if snap.eq_deletes:
-            data = self._apply_eq_deletes(snap, data)
-        if self._meta.get("carried_row_ids"):
-            # V3 row lineage: an UPDATE re-appends the row with its
-            # ORIGINAL _row_id (Iceberg V3 carried-over row ids), so a
-            # positional tombstone must only hit rows committed BEFORE
-            # it — the per-(file,position) scoping Iceberg gets from
-            # file-referenced delete files, modeled here by commit seq.
-            data = self._apply_pos_deletes_seq_scoped(snap, data)
-        else:
-            deletes = self._read_dirs(snap.delete_dirs, f"{_ROW_ID} long")
-            if deletes is not None:
-                # The C1 implicit MoR anti-join (README.md:7): delete files
-                # are O(deleted rows), broadcast them; data side never
-                # shuffles.
-                data = data.join(F.broadcast(deletes), _ROW_ID, "left_anti")
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        data = self._apply_deletes(snap, data)
+        declared = self.declared_schema()
         projection = [
             F.col(f.name)
             if f.name in data.columns
@@ -2634,7 +2624,7 @@ class LocalTable:
         # inherits to descendants at commit); the staging branch's own
         # snapshots keep the staged seq, so deletes committed on the
         # branch after staging still apply when reading the branch.
-        publish_seq = max(s["id"] for s in self._meta["snapshots"]) + 1
+        publish_seq = _next_snapshot_id(self._meta)
         return self._commit(
             "append",
             list(cur.data_dirs) + add,
@@ -2673,14 +2663,15 @@ class LocalTable:
         its row count == rows the MoR anti-join will drop, which is how
         compaction tooling decides when delete-file debt is worth
         rewriting (delete-file-threshold)."""
-        snap = self.current_snapshot()
-        out = None
-        for d in snap.delete_dirs:
-            df = self._read_one_dir(d, f"{_ROW_ID} long").select(
-                F.lit(d).alias("delete_dir"),
-                F.col(_ROW_ID).alias("deleted_row_id"),
-            )
-            out = df if out is None else out.unionByName(df)
+        out = _union_all(
+            [
+                self._read_one_dir(d, f"{_ROW_ID} long").select(
+                    F.lit(d).alias("delete_dir"),
+                    F.col(_ROW_ID).alias("deleted_row_id"),
+                )
+                for d in self.current_snapshot().delete_dirs
+            ]
+        )
         if out is None:
             return self.spark.createDataFrame(
                 [], "delete_dir string, deleted_row_id long"
@@ -2916,8 +2907,7 @@ class LocalTable:
         frames = []
         ddl = self._data_read_schema()
         for d in snap.data_dirs:
-            m = re.search(r"snap-(\d+)", os.path.basename(d))
-            seq = int(m.group(1)) if m else 0
+            seq = self._parse_dir_seq(d)
             d_names = {
                 n for n, _c, _d2, _s in self._spec_names(self._spec_for_seq(seq))
             }
@@ -2961,19 +2951,7 @@ class LocalTable:
         if not frames:
             counts = self.spark.createDataFrame([], counts_schema)
         else:
-            data = frames[0]
-            for f in frames[1:]:
-                data = data.unionByName(f)
-            if snap.eq_deletes:
-                data = self._apply_eq_deletes(snap, data)
-            if self._meta.get("carried_row_ids"):
-                data = self._apply_pos_deletes_seq_scoped(snap, data)
-            else:
-                deletes = self._read_dirs(snap.delete_dirs, f"{_ROW_ID} long")
-                if deletes is not None:
-                    data = data.join(
-                        F.broadcast(deletes), _ROW_ID, "left_anti"
-                    )
+            data = self._apply_deletes(snap, _union_all(frames))
             counts = data.groupBy(
                 F.col("_spec_id").alias("spec_id"),
                 *[
@@ -3000,7 +2978,7 @@ class LocalTable:
         """DESCRIBE TABLE (reference verify_in_databricks.py:66-75)."""
         fields = [
             (f.name, f.dataType.simpleString(), "")
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema
+            for f in self.declared_schema()
         ]
         for c in self.partition_by:
             fields.append((c, "", "partition"))
@@ -3039,7 +3017,7 @@ class LocalTable:
                 f"changes(): snapshot {from_snapshot_id} is not an "
                 f"ancestor of {to_snapshot_id} — no linear delta exists"
             )
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        declared = self.declared_schema()
         out: DataFrame | None = None
         prev = None
         # ids strictly increase along the parent chain (allocation is a
@@ -3123,29 +3101,18 @@ class LocalTable:
                         # seq below this snapshot's, so the delta is
                         # simply prev's visible scan inner-joined with
                         # the new key sets (broadcast — O(deleted keys)).
-                        types = {
-                            f.name: f.dataType.simpleString()
-                            for f in declared
-                        }
                         vis_prev = self._scan_raw(prev)
-                        eq_dels: DataFrame | None = None
-                        for entry in new_eq:
-                            cols = entry["cols"]
-                            ddl = ", ".join(
-                                f"{c} {types[c]}" for c in cols
-                            )
-                            keys = (
-                                self.spark.read.schema(ddl)
-                                .parquet(entry["dir"])
-                                .distinct()
-                            )
-                            hit = vis_prev.join(F.broadcast(keys), cols)
-                            eq_dels = (
-                                hit
-                                if eq_dels is None
-                                else eq_dels.unionByName(hit)
-                            )
-                        eq_dels = eq_dels.dropDuplicates(
+                        eq_dels = _union_all(
+                            [
+                                vis_prev.join(
+                                    F.broadcast(
+                                        self._read_eq_keys(entry).distinct()
+                                    ),
+                                    entry["cols"],
+                                )
+                                for entry in new_eq
+                            ]
+                        ).dropDuplicates(
                             [_ROW_ID]
                         ).withColumn("_change_type", F.lit("delete"))
                         step = (
@@ -3270,10 +3237,11 @@ class LocalTable:
             # cluster within files so parquet min/max stats prune range
             # predicates on these columns (Iceberg sort-order compaction)
             merged = merged.sortWithinPartitions(*sort_by)
-        snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
-        path = self._next_dir("data", snap_id)
-        self._write_data_dir(
-            merged, path, max_records_per_file=max_records_per_file
+        path, _ = self._write_new_rows(
+            merged,
+            _next_snapshot_id(self._meta),
+            keep_row_ids=True,
+            max_records_per_file=max_records_per_file,
         )
         return self._commit("replace", [path], [])
 
@@ -3306,12 +3274,10 @@ class LocalTable:
         tombstones = self._read_dirs(
             cur.delete_dirs, f"{_ROW_ID} long"
         ).distinct()
-        snap_id = max(s["id"] for s in self._meta["snapshots"]) + 1
-        dv_path = self._reserve_dir(
-            os.path.join(self.root, "deletes", f"snap-{snap_id:05d}-dv")
-        )
         # single file: the whole point is one tombstone blob per scan
-        tombstones.coalesce(1).write.mode("overwrite").parquet(dv_path)
+        dv_path = self._write_delete_dir(
+            tombstones.coalesce(1), _next_snapshot_id(self._meta), "-dv"
+        )
         return self._commit(
             "maintenance",
             list(cur.data_dirs),
@@ -3370,11 +3336,33 @@ class LocalTable:
                 pass
             self._check_gc_enabled("remove_orphan_files")
             orphans = self._orphan_walk(older_than_seconds)
+            if self._prune_dir_stats(self._referenced_dirs(self.snapshots())):
+                self._write_meta(locked=True)
             for d in orphans:
                 shutil.rmtree(d)
                 self._remove_reservation_marker(d)
             self._sweep_stale_markers(older_than_seconds)
         return orphans
+
+    @staticmethod
+    def _referenced_dirs(snaps: list[Snapshot]) -> set[str]:
+        """Every data / delete / equality-delete dir ``snaps`` cite."""
+        referenced: set[str] = set()
+        for s in snaps:
+            referenced.update(s.data_dirs)
+            referenced.update(s.delete_dirs)
+            referenced.update(e["dir"] for e in s.eq_deletes)
+        return referenced
+
+    def _prune_dir_stats(self, referenced: set[str]) -> bool:
+        """Drop ``dir_stats`` entries for dirs no retained snapshot cites
+        (expired or orphaned dirs are deleted; their stats would grow the
+        metadata forever). Returns whether anything was dropped."""
+        stats = self._meta.get("dir_stats", {})
+        stale = [d for d in stats if d not in referenced]
+        for d in stale:
+            del stats[d]
+        return bool(stale)
 
     def _sweep_stale_markers(self, older_than_seconds: float) -> None:
         """Remove ``.X.rsv`` reservation markers whose dir X is gone
@@ -3408,11 +3396,7 @@ class LocalTable:
     def _orphan_walk(self, older_than_seconds: float) -> list[str]:
         import time as _time
 
-        referenced: set[str] = set()
-        for s in self.snapshots():
-            referenced.update(s.data_dirs)
-            referenced.update(s.delete_dirs)
-            referenced.update(e["dir"] for e in s.eq_deletes)
+        referenced = self._referenced_dirs(self.snapshots())
         now = _time.time()
         orphans = []
         for kind in ("data", "deletes"):
@@ -3492,11 +3476,7 @@ class LocalTable:
         ]
         expired_ids = {s.id for s in expired}
         survivors = [s for s in snaps if s.id not in expired_ids]
-        referenced: set[str] = set()
-        for s in survivors:
-            referenced.update(s.data_dirs)
-            referenced.update(s.delete_dirs)
-            referenced.update(e["dir"] for e in s.eq_deletes)
+        referenced = self._referenced_dirs(survivors)
         to_delete: list[str] = []
         for s in expired:
             expired_dirs = (
@@ -3557,6 +3537,7 @@ class LocalTable:
                 # and flip its is_current_ancestor back to true.
                 s.parent_id = _nearest_survivor(s.parent_id) or 0
         self._meta["snapshots"] = [s.to_json() for s in survivors]
+        self._prune_dir_stats(referenced)
         self._write_meta(locked=True)
         # publish first, delete last (see expire_snapshots docstring)
         for d in to_delete:

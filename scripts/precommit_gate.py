@@ -53,6 +53,8 @@ SMOKE_QUERIES = [
     "k2_salted_join",
     "k12_aqe_skew_join",
     "n2b_ngram_jaccard_pairs",
+    # streaming CDC: delete_by_keys + merge_into through foreachBatch
+    "l8_stream_cdc_apply",
 ]
 
 

@@ -30,18 +30,6 @@ def test_front_slots_hold_unevidenced_queries():
     )
 
 
-def test_round1_failures_lead():
-    # the two round-1 red queries were fixed in round 2 and must be
-    # re-checked before anything else — UNTIL a later CORRECTNESS file
-    # records them green, after which the rotation retires them to the
-    # back like any other evidenced query
-    evidenced = _driver_evidenced()
-    names = list(load_all_operators())
-    for i, name in enumerate(["c7_asof_join", "h5_array_agg"]):
-        if name not in evidenced:
-            assert names[i] == name
-
-
 def test_evidenced_set_reads_correctness_files():
     with open(os.path.join(REPO, "CORRECTNESS_r01.json")) as f:
         r01 = json.load(f)

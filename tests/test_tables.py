@@ -929,3 +929,74 @@ def test_changes_across_snapshot_adopt_commit(catalog):
     assert sorted((r.id, r._change_type) for r in ch) == [
         (1, "delete"), (1, "insert"), (2, "insert"), (3, "insert"),
     ]
+
+
+def test_dir_stats_pruned_to_surviving_snapshots(catalog):
+    """Per-dir min/max stats must not outlive their dirs: expiry and
+    orphan GC delete dirs, and metadata that kept their stats would grow
+    by one entry per compaction forever."""
+    t = catalog.create_table("stats_db", "cycles", "id bigint, v double")
+    for i in range(4):
+        t.insert(t.spark.createDataFrame([(i, i * 1.5)], t.schema_ddl))
+        t.rewrite_data_files()
+        t.expire_snapshots(
+            older_than=datetime.datetime(2030, 1, 1), retain_last=1
+        )
+    t = catalog.load_table("stats_db", "cycles")
+    referenced = {
+        d for s in t.snapshots() for d in s.data_dirs + s.delete_dirs
+    }
+    assert t._meta["dir_stats"]
+    assert set(t._meta["dir_stats"]) <= referenced
+    # metadata that already carries stale entries is cleaned by orphan GC
+    t._meta["dir_stats"]["/gone/data/snap-00001"] = {"id": [0, 0]}
+    t._write_meta()
+    t.remove_orphan_files(older_than_seconds=0)
+    t = catalog.load_table("stats_db", "cycles")
+    assert set(t._meta["dir_stats"]) <= referenced
+    assert sorted(r.id for r in t.scan().collect()) == [0, 1, 2, 3]
+
+
+_SCHEMA_CASES = {
+    "primitive": ("id bigint, name string, ok boolean, d date", None),
+    "decimal_ts": (
+        "amount decimal(12,2), ts timestamp, local_ts timestamp_ntz", None
+    ),
+    "nested": (
+        "tags array<string>, attrs map<string,int>, "
+        "addr struct<city:string,zip:int>",
+        None,
+    ),
+    "not_null_comment": ("id int NOT NULL, note string COMMENT 'free'", None),
+    "add_column": ("id int, v float", lambda t: t.add_column("x", "string")),
+    "rename_column": ("id int, v float", lambda t: t.rename_column("v", "w")),
+    "widen_column": (
+        "id int, v float", lambda t: t.widen_column("v", "double")
+    ),
+    "drop_column": ("id int, v float", lambda t: t.drop_column("v")),
+    "char": ("code char(4)", None),
+    "varchar": ("id int, label varchar(16)", None),
+    "nested_varchar": ("id int, names array<varchar(8)>", None),
+}
+
+
+@pytest.mark.parametrize("case", list(_SCHEMA_CASES))
+def test_declared_schema_matches_session_parser(catalog, case):
+    """``declared_schema`` is the one schema source for DML: it must
+    equal what ``createDataFrame([], ddl).schema`` gives, follow schema
+    evolution on the same handle, and refuse CHAR/VARCHAR as that path
+    does."""
+    ddl, alter = _SCHEMA_CASES[case]
+    t = catalog.create_table("schema_db", case, ddl)
+    if "char(" in ddl:
+        with pytest.raises(Exception):
+            t.spark.createDataFrame([], ddl).schema
+        with pytest.raises(TableError, match="CHAR/VARCHAR"):
+            t.declared_schema()
+        return
+    if alter is not None:
+        t.declared_schema()  # memoized before the ALTER on this handle
+        alter(t)
+    assert t.declared_schema() == t.spark.createDataFrame(
+        [], t.schema_ddl
+    ).schema
