@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -185,13 +186,13 @@ def e10_seasonal_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events")
     )
     w_ma = Window.orderBy("day").rowsBetween(-3, 3)
-    trended = daily.select(
+    trended = scope.persist(daily.select(
         "day",
         "n_events",
         F.avg(F.col("n_events") * 1.0).over(w_ma).alias("trend"),
         (F.datediff(F.col("day"), epoch) % 7).alias("dow"),
         F.row_number().over(Window.orderBy("day")).alias("di"),
-    ).cache()
+    ))
     season = trended.groupBy("dow").agg(
         F.avg(F.col("n_events") - F.col("trend")).alias("s")
     )

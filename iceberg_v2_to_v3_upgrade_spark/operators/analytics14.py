@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.functions.arrays import (
     as_double_array,
     cosine_similarity,
@@ -196,10 +197,9 @@ def n109_length_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without a persist the 100 TB scan would re-run per branch —
     # exchange reuse does not fire across these differing aggregates.
     # The frame itself is O(sources x buckets) — metadata-sized.
-    per_src = (
-        docs.groupBy("source", "bucket")
-        .agg(F.count("*").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    per_src = scope.persist(
+        docs.groupBy("source", "bucket").agg(F.count("*").alias("n")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     sources = per_src.select("source").distinct()
     buckets = per_src.select("bucket").distinct()

@@ -34,6 +34,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -203,7 +204,7 @@ def _assign_to_centroids(df: DataFrame, cents) -> DataFrame:
 
     labels = np.array([c for c, _vec in cents], dtype=np.int32)
     cmat = np.array([vec for _c, vec in cents], dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast((labels, cmat))
+    bc = scope.broadcast(df.sparkSession, (labels, cmat))
 
     def assign_blocks(batches):
         import numpy as np
@@ -282,20 +283,16 @@ def _cluster_assignments(
     # aggregate, final assignment): without the cache each job re-runs
     # the HOF normalization over the corpus (round-10 optimization —
     # the same n2b lesson one level earlier in the lineage)
-    normed = _normalize_embeddings(emb).persist()
-    try:
-        cents = _fit_centroids(normed)
-        if cents is None:
-            return None
-        a1 = (
-            _assign_to_centroids(normed, cents)
-            .select("vec_id", "v", "c")
-            .persist()
-        )
-        a1.count()  # materialize off the normed cache before release
-        return a1
-    finally:
-        normed.unpersist()
+    normed = scope.persist(_normalize_embeddings(emb))
+    cents = _fit_centroids(normed)
+    if cents is None:
+        return None
+    a1 = scope.persist(
+        _assign_to_centroids(normed, cents).select("vec_id", "v", "c")
+    )
+    a1.count()  # materialize off the normed cache before release
+    normed.unpersist()
+    return a1
 
 
 def _fold_gram(M) -> "object":
@@ -443,11 +440,7 @@ def n113_semdedup_cluster_prune(
         )
 
     out = _semdedup_accounting(a1).orderBy("cluster")
-    # materialize the <= k output rows, then release the cached corpus —
-    # long sweep sessions run hundreds of queries and a leaked persist
-    # pins executor storage until LRU thrash (the dedup.py convention)
     rows = out.collect()
-    a1.unpersist()
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -537,18 +530,15 @@ def n114_cluster_leakage_safe_split(
     reps = a1.groupBy("c").agg(F.min("vec_id").alias("rep"))
     is_test = lambda col: F.substring(F.md5(col.cast("string")), 1, 2) < _TEST_CUT
     # marked supersedes a1 as the shared frame (pair join both sides +
-    # both per-strategy aggregates); a1's cache is released after the
-    # final bounded collect below
-    marked = (
-        a1.join(F.broadcast(reps), "c")
-        .select(
+    # both per-strategy aggregates)
+    marked = scope.persist(
+        a1.join(F.broadcast(reps), "c").select(
             "vec_id",
             "v",
             "c",
             is_test(F.col("vec_id")).alias("t_id"),
             is_test(F.col("rep")).alias("t_cl"),
         )
-        .persist()
     )
     # within-cluster near-dup pairs + split-crossing counts, one
     # per-cluster GEMM task each (same bit-identical per-dimension fold
@@ -639,9 +629,5 @@ def n114_cluster_leakage_safe_split(
         .unionByName(side("by_id", "t_id", "x_id"))
         .orderBy("strategy")
     )
-    # materialize the 2 output rows, then release both cached corpora
-    # (leaked persists accumulate across a 300-query sweep session)
     rows = out.collect()
-    marked.unpersist()
-    a1.unpersist()
     return spark.createDataFrame(rows, out.schema)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -112,7 +113,7 @@ def n117_margin_bitext_mining(
     if not tgt_rows:
         pairs = spark.createDataFrame(
             [], "src_id long, tgt_id long, cos double"
-        ).persist()
+        )
     else:
         import numpy as np
 
@@ -126,7 +127,7 @@ def n117_margin_bitext_mining(
             return np.sqrt(acc)
 
         t_nrm = _fold_norms(t_mat)
-        bc = spark.sparkContext.broadcast((t_ids, t_mat, t_nrm))
+        bc = scope.broadcast(spark, (t_ids, t_mat, t_nrm))
 
         def cos_blocks(batches):
             import pandas as pd
@@ -153,7 +154,7 @@ def n117_margin_bitext_mining(
                 )
 
         par = spark.sparkContext.defaultParallelism
-        pairs = (
+        pairs = scope.persist(
             src.repartition(par)
             .mapInPandas(
                 cos_blocks, "src_id long, tgt_id long, cos_raw double"
@@ -163,7 +164,6 @@ def n117_margin_bitext_mining(
                 "tgt_id",
                 F.round(F.col("cos_raw"), 6).alias("cos"),
             )
-            .persist()
         )
 
     def _knn_mean(key: str, other: str, alias: str) -> DataFrame:
@@ -210,10 +210,7 @@ def n117_margin_bitext_mining(
         .select("src_id", "tgt_id", "margin")
         .orderBy("src_id")
     )
-    try:
-        rows = out.collect()
-    finally:
-        pairs.unpersist()
+    rows = out.collect()
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -565,10 +562,9 @@ def n120_kneser_ney_bigram(
         )
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    c12 = bg.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
+    c12 = scope.persist(
+        bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    c12 = c12.persist()
     c1 = c12.groupBy("w1").agg(
         F.sum("c").cast("bigint").alias("ctx"),
         F.count(F.lit(1)).cast("bigint").alias("types_fw"),
@@ -594,10 +590,7 @@ def n120_kneser_ney_bigram(
         .orderBy(F.desc("c"), "w1", "w2")
         .limit(25)
     )
-    try:
-        rows = out.collect()
-    finally:
-        c12.unpersist()
+    rows = out.collect()
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -690,43 +683,36 @@ def n123_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = (
+    tok = scope.persist(
         docs.select(
             "lang",
-            F.explode(F.split(_letters_only(F.col("text")), " ")).alias(
-                "t"
-            ),
-        )
-        .filter(F.col("t") != "")
+            F.explode(F.split(_letters_only(F.col("text")), " ")).alias("t"),
+        ).filter(F.col("t") != "")
     )
-    tok = tok.persist()
-    try:
-        # orderBy+limit compiles to a distributed TakeOrdered — a
-        # partitionless window row_number would sort ALL distinct
-        # tokens in one task (review finding); same (count desc, t)
-        # total order, same rows
-        vocab = (
-            tok.groupBy("t")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .orderBy(F.desc("c"), F.col("t"))
-            .limit(_DM_VOCAB)
-            .select("t")
+    # orderBy+limit compiles to a distributed TakeOrdered — a
+    # partitionless window row_number would sort ALL distinct
+    # tokens in one task (review finding); same (count desc, t)
+    # total order, same rows
+    vocab = (
+        tok.groupBy("t")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.desc("c"), F.col("t"))
+        .limit(_DM_VOCAB)
+        .select("t")
+    )
+    dom = (
+        tok.join(
+            F.broadcast(vocab.withColumn("iv", F.lit(1))), "t", "left"
         )
-        dom = (
-            tok.join(
-                F.broadcast(vocab.withColumn("iv", F.lit(1))), "t", "left"
-            )
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-                F.sum(F.coalesce("iv", F.lit(0)))
-                .cast("bigint")
-                .alias("in_vocab"),
-            )
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
+            F.sum(F.coalesce("iv", F.lit(0)))
+            .cast("bigint")
+            .alias("in_vocab"),
         )
-        rows = dom.collect()  # #domains rows — bounded, not data-sized
-    finally:
-        tok.unpersist()
+    )
+    rows = dom.collect()  # #domains rows — bounded, not data-sized
     langs = sorted(r["lang"] for r in rows)
     by = {r["lang"]: r for r in rows}
     loss = {

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -172,7 +173,6 @@ def n54_neardup_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
       on true Jaccard, so it cannot feed a hash-exact oracle.
     """
     from iceberg_v2_to_v3_upgrade_spark.operators.dedup import (
-        _JACCARD_CACHES,
         _exact_jaccard_pairs,
     )
 
@@ -183,17 +183,14 @@ def n54_neardup_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emptiness. fam is PERSISTED: it feeds three consumers (reps via the
     # pair machinery, mult twice) and each re-evaluation re-ran the
     # filter+group over the raw scan (round-10 measurement: ~2.1 s per
-    # evaluation at sf0.1 with the old filter). Registered in the dedup
-    # cache list so the next pairs invocation releases it.
-    fam = (
+    # evaluation at sf0.1 with the old filter).
+    fam = scope.persist(
         docs.filter(F.size(F.split("text", " ")) >= 3)
         .groupBy("text")
         .agg(F.count(F.lit(1)).alias("m"), F.min("doc_id").alias("doc_id"))
-        .persist()
     )
     reps = fam.select("doc_id", "text")
     pairs = _exact_jaccard_pairs(reps, tau=0.8).select("doc_a", "doc_b")
-    _JACCARD_CACHES.append(fam)  # released by the next pairs invocation
     mult = fam.select("doc_id", "m")
     cross = (
         pairs.select(F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("nbr"))

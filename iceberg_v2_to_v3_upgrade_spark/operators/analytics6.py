@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -571,11 +572,6 @@ _BFS_ORACLE = """
 """
 
 
-#: size guard for the driver BFS fast path (the n2f/_star_components
-#: convention: a bounded collect, never corpus-shaped)
-_BFS_DRIVER_MAX_EDGES = 500_000
-
-
 def _bfs_hop_counts(
     edges: DataFrame,
     source: int = 1,
@@ -586,7 +582,7 @@ def _bfs_hop_counts(
     (src, dst) edge frame — exact min-hop layers, sorted by hops.
 
     Round-11 (VERDICT r10 item 4, the n2f pattern): when the edge set
-    fits the 500k-row guard, a DRIVER BFS over a collected adjacency
+    fits ``scope.DRIVER_MAX_ROWS``, a DRIVER BFS over a collected adjacency
     dict replaces the 6-hop distributed loop — each hop of which was a
     join + distinct + anti-join + localCheckpoint round-trip of pure
     job machinery over a frontier bounded by the part dimension
@@ -594,8 +590,8 @@ def _bfs_hop_counts(
     (exact integer BFS either way). ``stats`` is the instrumentation
     hook and forces the distributed path (tests measure both)."""
     if stats is None:
-        edge_rows = edges.limit(_BFS_DRIVER_MAX_EDGES + 1).collect()
-        if len(edge_rows) <= _BFS_DRIVER_MAX_EDGES:
+        edge_rows = scope.bounded_collect(edges)
+        if edge_rows is not None:
             adj: dict[int, list[int]] = {}
             for e in edge_rows:
                 adj.setdefault(e["src"], []).append(e["dst"])
@@ -616,7 +612,7 @@ def _bfs_hop_counts(
             c = Counter(dist.values())
             return sorted(c.items())
     spark = edges.sparkSession
-    edges = edges.persist()  # reused by every hop's join
+    edges = scope.persist(edges)  # reused by every hop's join
     dist_df = spark.createDataFrame(
         [(source, 0)], "node long, hops int"
     )
@@ -644,7 +640,6 @@ def _bfs_hop_counts(
         .orderBy("hops")
         .collect()
     )
-    edges.unpersist()
     return [(int(r["hops"]), int(r["n_nodes"])) for r in rows]
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.functions.hashing import (
     lsh_bands,
     minhash_signatures,
@@ -141,27 +142,6 @@ def n2b_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Persisted intermediates from the PREVIOUS _exact_jaccard_pairs call.
-#: The returned frame is lazy, so this function cannot unpersist its own
-#: caches (the caller materializes later); instead each new invocation
-#: evicts the previous one's, bounding accumulation to a single call's
-#: worth across min-of-2 bench passes and long soak sessions (round-9
-#: ADVICE — the same session-leak class as the r9 file-sink fix).
-_JACCARD_CACHES: list[DataFrame] = []
-
-#: Broadcast variables from the PREVIOUS broadcast-verify call — same
-#: eviction convention as _JACCARD_CACHES (the returned frame is lazy, so
-#: a call cannot reclaim its own broadcast; the next call evicts it).
-#: Bounds executor/driver block accumulation across min-of-2 bench passes
-#: and soak sessions (round-10 VERDICT item 6). unpersist(False), NOT
-#: destroy(): an in-session A/B measured destroy() stalling the next
-#: query by 2-4 s (blocking cleanup churn), while async unpersist is
-#: free and still drops the blocks; a destroyed broadcast also could
-#: never be lazily re-read if a stale frame were re-executed, whereas
-#: an unpersisted one is transparently re-broadcast.
-_JACCARD_BROADCASTS: list = []
-
-
 def _ensure_wide(df: DataFrame) -> DataFrame:
     """Round-robin rebalance ONLY when the scan is narrower than the
     session parallelism. The single-row-group fixture files scan as ONE
@@ -225,20 +205,16 @@ def _exact_jaccard_pairs(docs: DataFrame, tau: float = 0.8) -> DataFrame:
       counts verified unchanged at both taus and both scales.
     """
     num, den = _tau_fraction(tau)
-    while _JACCARD_CACHES:
-        _JACCARD_CACHES.pop().unpersist()
-    while _JACCARD_BROADCASTS:
-        _JACCARD_BROADCASTS.pop().unpersist(False)
     # widen the narrow fixture scan (gated — see _ensure_wide) so the
     # shingling and the persisted frame's downstream map passes use
     # every core; already-wide inputs pass through with no exchange
-    shingled = (
+    shingled = scope.persist(
         _ensure_wide(docs)
         .select(
             "doc_id", word_shingles(F.col("text"), 3).alias("shingles")
         )
-        .withColumn("n", F.size("shingles"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("n", F.size("shingles")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     sh = shingled.select(
         "doc_id", "n", F.explode("shingles").alias("shingle")
@@ -247,12 +223,10 @@ def _exact_jaccard_pairs(docs: DataFrame, tau: float = 0.8) -> DataFrame:
     # EAGERLY and the prefix join consumes it again inside the real
     # query action — without the cache that is two corpus-shaped token
     # aggregations where one suffices (round-9 second-review finding)
-    df_counts = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    df_counts = scope.persist(
+        sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _JACCARD_CACHES.extend([shingled, df_counts])
     rarity = Window.partitionBy("doc_id").orderBy("df", "shingle")
     prefix = (
         sh.join(df_counts, "shingle")
@@ -335,13 +309,12 @@ def _exact_jaccard_pairs(docs: DataFrame, tau: float = 0.8) -> DataFrame:
     # (~400 MB at tau=0.5, sf0.1) where the broadcast ships the corpus
     # once per executor. |A ∩ B| is an exact integer either way and the
     # division is the same IEEE op; rounding stays JVM-side F.round.
-    if int(vocab["n_entries"] or 0) * 8 <= _NEARDUP_BROADCAST_MAX_ROWS * 64:
+    if int(vocab["n_entries"] or 0) * 8 <= scope.JACCARD_VERIFY_MAX_BYTES:
         sets = {
             int(r["doc_id"]): (frozenset(r["hs"]), int(r["n"]))
             for r in hashed.collect()
         }
-        bc = docs.sparkSession.sparkContext.broadcast(sets)
-        _JACCARD_BROADCASTS.append(bc)
+        bc = scope.broadcast(docs.sparkSession, sets)
 
         def verify(batches):
             import pandas as pd
@@ -520,13 +493,7 @@ _COSINE_NEARDUP_ORACLE = """
 """
 
 
-#: Corpus sizes at or below this use broadcast-GEMM (one numpy matrix per
-#: executor, ~500k x 64 dims x 8B = 256 MB); above it, the block-pair grid
-#: runs instead — no driver collect on any path for a large corpus.
-_NEARDUP_BROADCAST_MAX_ROWS = 500_000
 _NEARDUP_THRESHOLD = 0.45
-#: connected-components driver fast-path guard (see _star_components)
-_CC_DRIVER_MAX_EDGES = 500_000
 
 
 @declare(
@@ -554,29 +521,25 @@ def n2e_embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
       threshold scan — the grid distributes them evenly.
     """
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if emb.count() <= _NEARDUP_BROADCAST_MAX_ROWS:
-        return _cosine_neardup_broadcast_gemm(spark, emb)
+    rows = scope.bounded_collect(emb)
+    if rows is not None:
+        return _cosine_neardup_broadcast_gemm(spark, emb, rows)
     return _cosine_neardup_block_grid(spark, emb)
 
 
 def _cosine_neardup_broadcast_gemm(
-    spark: SparkSession, emb: DataFrame, threshold: float = _NEARDUP_THRESHOLD
+    spark: SparkSession, emb: DataFrame, rows: list, threshold: float = _NEARDUP_THRESHOLD
 ) -> DataFrame:
-    """Exact pairs via broadcast corpus x streamed row-blocks (small corpus)."""
+    """Exact pairs via broadcast corpus (``rows``) x streamed row-blocks."""
     from collections.abc import Iterator
 
     import numpy as np
 
-    rows = emb.collect()  # broadcast side only (guarded by the row-count
-    # check in n2e_embedding_cosine_neardup), not an unbounded data-path collect
     ids = np.array([r.vec_id for r in rows], dtype=np.int64)
     mat = np.array([r.embedding for r in rows], dtype=np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    while _JACCARD_BROADCASTS:  # evict the previous call's broadcasts
-        _JACCARD_BROADCASTS.pop().unpersist(False)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    _JACCARD_BROADCASTS.extend([b_ids, b_mat])
+    b_ids = scope.broadcast(spark, ids)
+    b_mat = scope.broadcast(spark, mat)
 
     def block_gemm(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -826,12 +789,13 @@ def _star_components(
     # pair computation feeds BOTH derived frames — without this, nodes
     # and edges would each re-run e.g. n2b's prefix-filtered Jaccard
     # join (review finding)
-    pairs = pairs.select(
-        F.col(a).alias("x"), F.col(b).alias("y")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = scope.persist(
+        pairs.select(F.col(a).alias("x"), F.col(b).alias("y")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     # Size-gated driver fast path (round-10; the n2e broadcast-GEMM
     # pattern): a near-dup pair graph is OUTPUT-bounded, and when the
-    # canonical edge set fits the same 500k-row guard n2e uses, a
+    # canonical edge set fits the driver row bound n2e uses, a
     # driver union-find replaces ~6-12 contraction rounds x several
     # keyed shuffles each with one collect + one createDataFrame.
     # Labels are identical (min id per component, exact integer math).
@@ -842,15 +806,12 @@ def _star_components(
         # guard then bounds the whole collect — the previous separate
         # self-loop collect ran outside the guard (round-10 ADVICE) and
         # cost an extra job
-        small = (
+        edge_rows = scope.bounded_collect(
             pairs.select(
-                F.least("x", "y").alias("lo"),
-                F.greatest("x", "y").alias("hi"),
-            )
-            .distinct()
+                F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi")
+            ).distinct()
         )
-        edge_rows = small.limit(_CC_DRIVER_MAX_EDGES + 1).collect()
-        if len(edge_rows) <= _CC_DRIVER_MAX_EDGES:
+        if edge_rows is not None:
             parent: dict[int, int] = {}
 
             def find(u: int) -> int:
@@ -878,19 +839,19 @@ def _star_components(
             )
             pairs.unpersist()
             return out
-    nodes = (
+    nodes = scope.persist(
         pairs.select(F.col("x").alias("id"))
         .union(pairs.select(F.col("y").alias("id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    edges = (
+    edges = scope.persist(
         pairs.filter(F.col("x") != F.col("y"))
         .select(
             F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi")
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
 
     def _checksum(e: DataFrame) -> tuple:
@@ -922,12 +883,12 @@ def _star_components(
                     .select("u", F.least("mn", F.col("u")).alias("m"))
                 )
                 # m ≤ u < v, so (m, v) is already canonical and loop-free
-                ls = (
+                ls = scope.persist(
                     sym.join(lmin, "u")
                     .filter(F.col("v") > F.col("u"))
                     .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
-                    .distinct()
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+                    .distinct(),
+                    StorageLevel.MEMORY_AND_DISK,
                 )
                 smin = ls.groupBy("hi").agg(F.min("lo").alias("m"))
                 # localCheckpoint (not bare persist): the symmetric-union

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.functions.arrays import (
     as_double_array,
 )
@@ -164,7 +165,7 @@ def n45_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             return np.sqrt(acc)
 
         q_nrm = _fold_norms(q_mat)
-        bc = spark.sparkContext.broadcast((q_ids, q_lab, q_mat, q_nrm))
+        bc = scope.broadcast(spark, (q_ids, q_lab, q_mat, q_nrm))
 
         def sim_blocks(batches):
             import pandas as pd

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -330,14 +331,14 @@ def n24_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     # cast to date: DuckDB's date_trunc('week', ts) yields DATE
-    per_user = (
+    per_user = scope.persist(
         ev.select(
             "user_id", F.date_trunc("week", "ts").cast("date").alias("wk")
         )
         .groupBy("user_id")
         .agg(F.collect_set("wk").alias("wks"))
-        .withColumn("cohort", F.array_min("wks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("cohort", F.array_min("wks")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     sizes = per_user.groupBy("cohort").agg(
         F.count(F.lit(1)).alias("cohort_size")

@@ -18,6 +18,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -219,13 +220,13 @@ def i45_eq_delete_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(-1))
         .alias("s"),
     )
-    mv = (
+    mv = scope.persist(
         seed.unionByName(delta)
         .groupBy(*cols)
         .agg(F.sum("s").alias("m"))
         .filter(F.col("m") > 0)
         .select(*cols)
-    ).persist()
+    )
 
     # in-query equivalence: the replayed MV must equal the MoR scan
     scan = t.scan().select(*cols)
@@ -234,7 +235,6 @@ def i45_eq_delete_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = mv.orderBy("c_custkey", "c_mktsegment")
     result = out.collect()
-    mv.unpersist()
     return spark.createDataFrame(result, out.schema)
 
 

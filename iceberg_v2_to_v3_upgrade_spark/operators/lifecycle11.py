@@ -24,6 +24,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -279,30 +280,26 @@ def i51_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides persist: each exceptAll direction is its own count job, and
     # an unpersisted rebuild re-scans + re-aggregates the whole corpus
     # per direction (round-9 second-review finding)
-    rebuilt = postings(t.scan().select("doc_id", "text")).persist()
-    m = maintained.persist()
-    try:
-        assert m.exceptAll(rebuilt).count() == 0, "maintained ⊃ rebuild"
-        assert rebuilt.exceptAll(m).count() == 0, "rebuild ⊃ maintained"
-        out = (
-            m.filter(
-                F.col("term").isin(
-                    "retrieval", "refreshed", "table", "join", "scan",
-                    "customer", "vector",
-                )
+    rebuilt = scope.persist(postings(t.scan().select("doc_id", "text")))
+    m = scope.persist(maintained)
+    assert m.exceptAll(rebuilt).count() == 0, "maintained ⊃ rebuild"
+    assert rebuilt.exceptAll(m).count() == 0, "rebuild ⊃ maintained"
+    out = (
+        m.filter(
+            F.col("term").isin(
+                "retrieval", "refreshed", "table", "join", "scan",
+                "customer", "vector",
             )
-            .groupBy("term")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("tf").cast("bigint").alias("total_tf"),
-                F.min("doc_id").cast("bigint").alias("min_doc"),
-            )
-            .orderBy("term")
         )
-        rows = out.collect()
-    finally:
-        m.unpersist()
-        rebuilt.unpersist()
+        .groupBy("term")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("tf").cast("bigint").alias("total_tf"),
+            F.min("doc_id").cast("bigint").alias("min_doc"),
+        )
+        .orderBy("term")
+    )
+    rows = out.collect()
     return spark.createDataFrame(rows, out.schema)
 
 

@@ -19,6 +19,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -123,7 +124,7 @@ def i18_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.scan(with_row_lineage=True)
         .select("c_custkey", F.col("_row_id").alias("id_before"))
     )
-    before.cache().count()  # pin pre-update ids before the table mutates
+    scope.persist(before).count()  # pin pre-update ids before the table mutates
     t.update_set(
         {"c_acctbal": "c_acctbal + 10.0"}, "c_mktsegment = 'BUILDING'"
     )

@@ -16,6 +16,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -492,22 +493,21 @@ def i41_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted across the fit's ~4 jobs + the assignment below; without
     # the cache every job re-runs the HOF normalization over the base
     # corpus (round-10 optimization, same as _cluster_assignments)
-    base_normed = _normed(t.scan()).persist()
+    base_normed = scope.persist(_normed(t.scan()))
     cents = _fit_centroids(base_normed)
     if cents is None:
-        base_normed.unpersist()
         return spark.createDataFrame(
             [],
             "cluster int, n_docs bigint, n_dups bigint, n_survivors "
             "bigint, min_survivor bigint, recomputed boolean",
         )
     # yesterday's materialized state: base assignments + accounting
-    base_assign = _assign_to_centroids(base_normed, cents).select(
-        "vec_id", "v", "c"
-    ).persist()
+    base_assign = scope.persist(
+        _assign_to_centroids(base_normed, cents).select("vec_id", "v", "c")
+    )
     base_assign.count()  # materialize off the normed cache, then release
     base_normed.unpersist()
-    yesterday = _semdedup_accounting(base_assign).persist()
+    yesterday = scope.persist(_semdedup_accounting(base_assign))
     yesterday.count()  # pin before the delta commit mutates the table
 
     # today: the delta lands; read it back as CDC — O(delta)
@@ -517,13 +517,13 @@ def i41_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_change_type") == "insert")
         .select("vec_id", "embedding")
     )
-    delta_assign = _assign_to_centroids(_normed(delta), cents).select(
-        "vec_id", "v", "c"
-    ).persist()
+    delta_assign = scope.persist(
+        _assign_to_centroids(_normed(delta), cents).select("vec_id", "v", "c")
+    )
     # persisted: feeds the incremental accounting AND the
     # equivalence-proof recompute — without it the normalize + 2k-dot
     # assignment lineage re-executes per consumer
-    all_assign = base_assign.unionByName(delta_assign).persist()
+    all_assign = scope.persist(base_assign.unionByName(delta_assign))
     touched = [
         int(r.c) for r in delta_assign.select("c").distinct().collect()
     ]  # <= k rows — bounded by the cluster count, never the corpus
@@ -554,6 +554,4 @@ def i41_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows
     }
     assert inc_rows == full_rows, "incremental != full recompute"
-    for frame in (base_assign, delta_assign, all_assign, yesterday):
-        frame.unpersist()
     return spark.createDataFrame(rows, stitched.schema)

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.functions.arrays import as_double_array
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
@@ -300,10 +301,10 @@ def n67_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
-    flat = (
+    flat = scope.persist(
         emb.select("vec_id", F.posexplode("v").alias("pos", "x"))
-        .select("vec_id", (F.col("pos") + 1).alias("dim"), "x")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("vec_id", (F.col("pos") + 1).alias("dim"), "x"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     w_all = Window.partitionBy(F.lit(1))
     v_t: DataFrame | None = None  # None == uniform 1/8 start vector
@@ -323,9 +324,9 @@ def n67_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.col("x") * F.col("d")).alias("s"))
         )
         lam = F.sqrt(F.sum(F.col("s") * F.col("s")).over(w_all))
-        v_t = (
-            s.select("dim", (F.col("s") / lam).alias("w"), lam.alias("lam"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        v_t = scope.persist(
+            s.select("dim", (F.col("s") / lam).alias("w"), lam.alias("lam")),
+            StorageLevel.MEMORY_AND_DISK,
         )
         v_t.count()  # materialize: the next iteration must not replay this one
     return v_t.select(
@@ -448,10 +449,10 @@ def n68_embedding_standardization(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings").select(
         as_double_array("embedding").alias("v")
     )
-    flat = (
+    flat = scope.persist(
         emb.select(F.posexplode("v").alias("pos", "x"))
-        .select((F.col("pos") + 1).alias("dim"), "x")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select((F.col("pos") + 1).alias("dim"), "x"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     stats = flat.groupBy("dim").agg(
         F.avg("x").alias("mu"), F.stddev_pop("x").alias("sigma")
@@ -650,11 +651,11 @@ def n72_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical counts, and the join now touches |docs| rows, not
     # |grams|.
     par = spark.sparkContext.defaultParallelism
-    g = docs.repartition(par).select(
+    g = scope.persist(docs.repartition(par).select(
         "doc_id",
         "source",
         F.explode(word_shingles(F.col("text"), 3)).alias("gram"),
-    ).persist()
+    ))
     novel = (
         g.groupBy("gram")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -681,7 +682,6 @@ def n72_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source")
     )
     rows = out.collect()
-    g.unpersist()
     return spark.createDataFrame(rows, out.schema)
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -59,7 +60,7 @@ def n75_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, the same expression works with the adjacency hash-joined
     on the edge key — still edge-linear, never wedge-materializing."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
+    edges = scope.persist(
         li.alias("a")
         .join(li.alias("b"), "l_orderkey")
         .filter(F.col("a.l_suppkey") < F.col("b.l_suppkey"))
@@ -67,7 +68,6 @@ def n75_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.l_suppkey").alias("sa"), F.col("b.l_suppkey").alias("sb")
         )
         .distinct()
-        .persist()
     )
     # Round-10: per-edge |N+(a) ∩ N+(b)| via a broadcast BITSET
     # adjacency + vectorized popcount in mapInPandas — the previous
@@ -79,12 +79,11 @@ def n75_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-11 gate (ADVICE r10): the bitset is DENSE —
     # (max_id+1) x ceil((max_id+1)/64) words ~= max_id²/8 bytes
     # regardless of edge count — so it only broadcasts for id spaces up
-    # to ~50k (the 256 MB budget below). Bigger graphs fall back to the
+    # to ~50k (scope.BITSET_MAX_BYTES). Bigger graphs fall back to the
     # O(edges) array-adjacency join form: still edge-linear, never
     # wedge-materializing, and nothing corpus-shaped on the driver.
     import numpy as np
 
-    bc = bc_pop = None
     max_id = int(
         edges.agg(
             F.max(F.greatest("sa", "sb")).alias("m")
@@ -92,7 +91,7 @@ def n75_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         or 0
     )
     words = (max_id >> 6) + 1
-    if (max_id + 1) * words * 8 <= 256 * 1024 * 1024:
+    if (max_id + 1) * words * 8 <= scope.BITSET_MAX_BYTES:
         adj_rows = edges.groupBy("sa").agg(
             F.collect_set("sb").alias("nbrs")
         ).collect()  # bounded by the (gated) supplier id space
@@ -104,11 +103,11 @@ def n75_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nb >> 6,
                 np.uint64(1) << (nb & 63).astype(np.uint64),
             )
-        bc = spark.sparkContext.broadcast(bits)
+        bc = scope.broadcast(spark, bits)
         popcnt = np.array(
             [bin(i).count("1") for i in range(256)], dtype=np.int64
         )
-        bc_pop = spark.sparkContext.broadcast(popcnt)
+        bc_pop = scope.broadcast(spark, popcnt)
 
         def edge_tris(batches):
             import pandas as pd
@@ -162,11 +161,6 @@ def n75_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     rows = out.collect()
-    edges.unpersist()
-    if bc is not None:  # materialized above: reclaim the block copies
-        # (async unpersist — destroy() measurably stalls the session)
-        bc.unpersist(False)
-        bc_pop.unpersist(False)
     return spark.createDataFrame(rows, out.schema)
 
 

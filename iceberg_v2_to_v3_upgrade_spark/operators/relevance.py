@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -182,10 +183,9 @@ def n22_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.array().cast("array<string>"))
     from pyspark import StorageLevel
 
-    g = (
-        docs.select("source", F.explode(grams_arr).alias("gram"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    g = scope.persist(
+        docs.select("source", F.explode(grams_arr).alias("gram")).distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     n = g.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
     ga = g.select(F.col("source").alias("sa"), "gram")

@@ -18,6 +18,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.functions.arrays import (
     as_double_array,
     cosine_similarity,
@@ -167,7 +168,7 @@ def n3c_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(members):
                 centroids[c] = members.mean(axis=0)
         centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-    b_cent = spark.sparkContext.broadcast(centroids)
+    b_cent = scope.broadcast(spark, centroids)
 
     # --- assign corpus to cells (GEMM argmax, partition-parallel) --------
     def assign_cells(batches: Iterator) -> Iterator:
@@ -698,7 +699,7 @@ def n103_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", as_double_array("embedding").alias("v")
     )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cand = (
+    cand = scope.persist(
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qv))
         .select(
@@ -708,7 +709,6 @@ def n103_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("sim"), "vec_id")
         .limit(8)
-        .cache()
     )
     a, b = cand.alias("a"), cand.alias("b")
     pairs = a.crossJoin(b).select(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.registry import declare
 
@@ -78,14 +79,14 @@ def n121_quantile_sketch_audit(
         "event_id", "event_type", "value"
     )
     n_w = Window.partitionBy("event_type")
-    ranked = ev.select(
+    ranked = scope.persist(ev.select(
         "event_type",
         "value",
         F.row_number()
         .over(n_w.orderBy("value", "event_id"))
         .alias("rn"),
         F.count(F.lit(1)).over(n_w).alias("n"),
-    ).persist()
+    ))
     # ceil(p·n) in integer arithmetic (see the oracle comment): the
     # numerator/denominator pairs for 0.5 / 0.95 / 0.99
     rank_expr = {
@@ -93,77 +94,74 @@ def n121_quantile_sketch_audit(
         "p95": "(95 * n + 99) DIV 100",
         "p99": "(99 * n + 99) DIV 100",
     }
-    try:
-        exact = (
-            ranked.groupBy("event_type", "n")
-            .agg(
-                *[
-                    F.max(
-                        F.when(
-                            F.col("rn") == F.expr(expr), F.col("value")
-                        )
-                    ).alias(name)
-                    for name, expr in rank_expr.items()
-                ]
-            )
-        )
-        approx = ev.groupBy("event_type").agg(
-            F.percentile_approx(
-                "value", list(_Q_PCTS), _Q_ACC
-            ).alias("est")
-        )
-        # audit: a duplicated value occupies a rank RUN [count(value <
-        # est)+1, count(value <= est)]; the sketch is within bound if
-        # that interval comes within n/accuracy (+1 discrete slack) of
-        # the target rank. Comparing only the run-max rank would fail a
-        # CORRECT estimate that lands on a tie run straddling the
-        # target (review finding — the exact sf0.1 click median does
-        # exactly that)
-        audit = (
-            ranked.join(approx, "event_type")
-            .groupBy("event_type", "n")
-            .agg(
-                *[
-                    agg
-                    for i in range(len(_Q_PCTS))
-                    for agg in (
-                        F.sum(
-                            F.when(
-                                F.col("value") < F.col("est")[i], 1
-                            ).otherwise(0)
-                        ).alias(f"lo{i}"),
-                        F.sum(
-                            F.when(
-                                F.col("value") <= F.col("est")[i], 1
-                            ).otherwise(0)
-                        ).alias(f"hi{i}"),
+    exact = (
+        ranked.groupBy("event_type", "n")
+        .agg(
+            *[
+                F.max(
+                    F.when(
+                        F.col("rn") == F.expr(expr), F.col("value")
                     )
-                ]
-            )
+                ).alias(name)
+                for name, expr in rank_expr.items()
+            ]
         )
-        targets = list(rank_expr.values())
-        bad = audit.filter(
-            " OR ".join(
-                f"greatest(lo{i} + 1 - ({targets[i]}), "
-                f"({targets[i]}) - hi{i}, 0) > n / {_Q_ACC} + 1"
+    )
+    approx = ev.groupBy("event_type").agg(
+        F.percentile_approx(
+            "value", list(_Q_PCTS), _Q_ACC
+        ).alias("est")
+    )
+    # audit: a duplicated value occupies a rank RUN [count(value <
+    # est)+1, count(value <= est)]; the sketch is within bound if
+    # that interval comes within n/accuracy (+1 discrete slack) of
+    # the target rank. Comparing only the run-max rank would fail a
+    # CORRECT estimate that lands on a tie run straddling the
+    # target (review finding — the exact sf0.1 click median does
+    # exactly that)
+    audit = (
+        ranked.join(approx, "event_type")
+        .groupBy("event_type", "n")
+        .agg(
+            *[
+                agg
                 for i in range(len(_Q_PCTS))
-            )
-        ).count()
-        assert bad == 0, f"{bad} groups outside the sketch rank bound"
-        out = (
-            exact.select(
-                "event_type",
-                F.col("n").cast("bigint").alias("n_events"),
-                "p50",
-                "p95",
-                "p99",
-                F.lit(True).alias("sketch_ok"),
-            )
-            .orderBy("event_type")
+                for agg in (
+                    F.sum(
+                        F.when(
+                            F.col("value") < F.col("est")[i], 1
+                        ).otherwise(0)
+                    ).alias(f"lo{i}"),
+                    F.sum(
+                        F.when(
+                            F.col("value") <= F.col("est")[i], 1
+                        ).otherwise(0)
+                    ).alias(f"hi{i}"),
+                )
+            ]
         )
-        rows = out.collect()
-    finally:
-        ranked.unpersist()
+    )
+    targets = list(rank_expr.values())
+    bad = audit.filter(
+        " OR ".join(
+            f"greatest(lo{i} + 1 - ({targets[i]}), "
+            f"({targets[i]}) - hi{i}, 0) > n / {_Q_ACC} + 1"
+            for i in range(len(_Q_PCTS))
+        )
+    ).count()
+    assert bad == 0, f"{bad} groups outside the sketch rank bound"
+    out = (
+        exact.select(
+            "event_type",
+            F.col("n").cast("bigint").alias("n_events"),
+            "p50",
+            "p95",
+            "p99",
+            F.lit(True).alias("sketch_ok"),
+        )
+        .orderBy("event_type")
+    )
+    rows = out.collect()
     return spark.createDataFrame(rows, out.schema)
 
 

@@ -14,6 +14,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from iceberg_v2_to_v3_upgrade_spark import scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -59,11 +61,14 @@ def _driver_evidenced() -> frozenset[str]:
 def declare(
     name: str, oracle: str | None = None, tags: tuple[str, ...] = ()
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register ``fn`` as a declared query under ``name``."""
+    """Decorator: register ``fn`` as a declared query under ``name``.
+    What it persists or broadcasts through ``scope`` is released at the
+    next top-level declared call; nested declared calls join its scope."""
 
     def wrap(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate declared query: {name}")
+        fn = scope.scoped(fn)
         REGISTRY[name] = DeclaredQuery(name=name, fn=fn, oracle=oracle, tags=tags)
         return fn
 

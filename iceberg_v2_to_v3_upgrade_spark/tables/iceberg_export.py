@@ -51,6 +51,7 @@ import uuid
 import pyarrow.parquet as pq
 
 from iceberg_v2_to_v3_upgrade_spark.tables.avro_io import write_avro
+from iceberg_v2_to_v3_upgrade_spark.tables.dv_import import _plain
 from iceberg_v2_to_v3_upgrade_spark.tables.table import LocalTable, Snapshot
 
 #: Spark simpleString -> Iceberg primitive type name
@@ -1130,15 +1131,6 @@ def export_deletion_vectors(
         # entirely (second-review finding: a clean V3 table should not
         # pay corpus-shaped anti-joins to learn it has nothing to say)
         return write_puffin(puffin_path, [])
-
-    def _plain(uri: str) -> str:
-        # input_file_name() returns a percent-encoded file:/, file:// or
-        # file:/// URI — decode it or paths with spaces/% break
-        import urllib.parse
-
-        if uri.startswith("file:"):
-            uri = "/" + uri.split(":", 1)[1].lstrip("/")
-        return urllib.parse.unquote(uri)
 
     imported = table.imported_dirs
     by_file: dict[str, set[int]] = {}

@@ -10,7 +10,7 @@ committing"). Install with::
 
 Behavior:
 - No staged changes under ``iceberg_v2_to_v3_upgrade_spark/`` -> pass.
-- Engine-core files (tables/, sql_router, session, io, registry) touched
+- Engine-core files (tables/, sql_router, session, io, registry, scope) touched
   -> run the smoke subset (SMOKE_QUERIES) at sf0.001.
 - operators/ modules touched -> strict-sweep EVERY query declared in
   those modules at sf0.001 (exact Spark-vs-DuckDB values) and run the
@@ -38,6 +38,7 @@ CORE_PREFIXES = (
     "iceberg_v2_to_v3_upgrade_spark/session.py",
     "iceberg_v2_to_v3_upgrade_spark/io.py",
     "iceberg_v2_to_v3_upgrade_spark/registry.py",
+    "iceberg_v2_to_v3_upgrade_spark/scope.py",
     "iceberg_v2_to_v3_upgrade_spark/streaming/",
     "iceberg_v2_to_v3_upgrade_spark/multimodal/",
     "iceberg_v2_to_v3_upgrade_spark/functions/",
@@ -53,6 +54,8 @@ SMOKE_QUERIES = [
     "k2_salted_join",
     "k12_aqe_skew_join",
     "n2b_ngram_jaccard_pairs",
+    # broadcast-GEMM: a scope-released broadcast on the benchmark path
+    "n2e_embedding_cosine_neardup",
     # streaming CDC: delete_by_keys + merge_into through foreachBatch
     "l8_stream_cdc_apply",
 ]

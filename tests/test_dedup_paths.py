@@ -7,9 +7,9 @@ collect on any data path).
 
 from __future__ import annotations
 
+from iceberg_v2_to_v3_upgrade_spark import scope
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
 from iceberg_v2_to_v3_upgrade_spark.operators.dedup import (
-    _NEARDUP_BROADCAST_MAX_ROWS,
     _cosine_neardup_block_grid,
     _cosine_neardup_broadcast_gemm,
 )
@@ -23,7 +23,7 @@ def _pairs(df):
 
 def test_block_grid_matches_broadcast_gemm(spark):
     emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    exact = _pairs(_cosine_neardup_broadcast_gemm(spark, emb))
+    exact = _pairs(_cosine_neardup_broadcast_gemm(spark, emb, emb.collect()))
     assert exact, "fixture should contain near-dup pairs"
     # small block count so every grid-cell shape (diagonal, off-diagonal,
     # smaller-id-in-higher-block) occurs on the tiny fixture
@@ -33,14 +33,14 @@ def test_block_grid_matches_broadcast_gemm(spark):
 
 def test_block_grid_single_block_degenerate(spark):
     emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    exact = _pairs(_cosine_neardup_broadcast_gemm(spark, emb))
+    exact = _pairs(_cosine_neardup_broadcast_gemm(spark, emb, emb.collect()))
     assert _pairs(_cosine_neardup_block_grid(spark, emb, n_blocks=1)) == exact
 
 
 def test_broadcast_guard_threshold_is_bounded():
     # the guard must stay a real bound (not float("inf") snuck in later):
     # 500k rows x 64 dims x 8 bytes = 256 MB broadcast, the documented cap
-    assert _NEARDUP_BROADCAST_MAX_ROWS <= 1_000_000
+    assert scope.DRIVER_MAX_ROWS <= 1_000_000
 
 
 def test_per_row_minhash_sig_matches_grouped_formulation(spark):

@@ -32,6 +32,8 @@ from iceberg_v2_to_v3_upgrade_spark.tables.puffin_io import (
 )
 from iceberg_v2_to_v3_upgrade_spark.operators.dedup import _tau_fraction
 
+from tests.conftest import SF_SMALL
+
 
 # --------------------------------------------- run-container WRITE path
 
@@ -152,22 +154,18 @@ def test_tau_fraction_never_exceeds_tau(tau):
 
 
 def test_exact_jaccard_unpersists_previous_caches(spark):
-    from iceberg_v2_to_v3_upgrade_spark.operators import dedup as D
+    from iceberg_v2_to_v3_upgrade_spark import scope
+    from iceberg_v2_to_v3_upgrade_spark.registry import load_all_operators
 
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " + str(i % 3))
-         for i in range(30)],
-        "doc_id BIGINT, text STRING",
-    )
-    D._exact_jaccard_pairs(docs, tau=0.8).collect()
-    first = list(D._JACCARD_CACHES)
+    registry = load_all_operators()
+    registry["n2b_ngram_jaccard_pairs"].fn(spark, SF_SMALL).collect()
+    first = list(scope._frames)
     assert len(first) == 2
-    # a DIFFERENT corpus: storageLevel resolves via the cache manager
-    # by logical plan, so an identical second call would shadow the
-    # unpersisted first frames with its own same-plan cache entries
-    docs2 = docs.limit(20)
-    D._exact_jaccard_pairs(docs2, tau=0.8).collect()
-    # previous invocation's frames were evicted, not accumulated
-    assert len(D._JACCARD_CACHES) == 2
-    assert all(f.storageLevel.useMemory for f in D._JACCARD_CACHES)
+    assert all(f.storageLevel.useMemory for f in first)
+    # the next declared call releases the previous call's frames before
+    # it runs (a DIFFERENT query: storageLevel resolves via the cache
+    # manager by logical plan, so a second n2b call would shadow the
+    # released frames with its own same-plan cache entries)
+    registry["q1_pricing_summary"].fn(spark, SF_SMALL).collect()
     assert not any(f.storageLevel.useMemory for f in first)
+    assert scope._frames == []
