@@ -19,14 +19,13 @@ spec-field file form).
 Fidelity covered by the generated SQL:
 - hive-partitioned data dirs (identity and transform partition columns
   are directory-encoded; DuckDB's ``hive_partitioning`` recovers them),
-- positional deletes via global ``_row_id`` anti-join,
-- V3 carried row ids: delete files scope to data committed BEFORE them
-  (``data._seq < delete._dseq``), so an UPDATE's rewritten row — same
-  ``_row_id``, newer sequence — survives its own tombstone,
-- equality deletes: key anti-join against older-sequence data only,
-  with the ENGINE's null-unsafe ``=`` semantics (a NULL key never
-  matches — review finding: ``IS NOT DISTINCT FROM`` would delete
-  NULL-keyed rows the engine keeps),
+- the engine's ``_apply_deletes`` shape: one ``NOT EXISTS`` over a
+  ``UNION ALL`` of every positional dir, scoped to data committed BEFORE
+  it (``d._seq < x._dseq``, so a V3 UPDATE's row keeping its ``_row_id``
+  survives its own tombstone), and one per equality-key-column set over
+  that set's dirs, scoped by ``_eq_seq`` with the ENGINE's null-unsafe
+  ``=`` (a NULL key never matches — review finding: ``IS NOT DISTINCT
+  FROM`` would delete NULL-keyed rows the engine keeps),
 - cherry-pick/rebase sequence overrides (``Snapshot.seq_overrides``),
 - column renames: each dir projects the PHYSICAL name its files were
   written under back to the current name (the engine's
@@ -174,7 +173,7 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
             )
         if not _has_parquet(d):
             # a zero-row partitioned write leaves a dir with no parquet
-            # files at all (engine-supported state — see _read_dirs);
+            # files at all (engine-supported state — see _read_layout);
             # a bare read_parquet glob on it is an IO error in DuckDB
             continue
         seq = table._delete_scope_seq(d, snap)
@@ -197,10 +196,7 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
             name = f.name
             # the engine's newest->oldest rename walk (_read_one_dir):
             # the files store the name the column had at the dir's seq
-            phys = name
-            for r in reversed(renames):
-                if r["to"] == phys and write_seq <= r["seq"]:
-                    phys = r["from"]
+            phys = table._physical_name(name, write_seq)
             entry = defaults.get(name)
             if entry is not None and write_seq <= int(entry["seq"]):
                 # V3 initial-default: pre-ALTER dirs read the literal
@@ -228,35 +224,37 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
     if not data_parts:  # every data dir was a zero-row write
         return _empty_select(declared)
     data_sql = "\nUNION ALL BY NAME\n".join(data_parts)
+    # the engine's _apply_deletes: one anti-join (NOT EXISTS) over every
+    # positional dir, one per equality-key-column set
     filters = []
-    del_parts = []
-    for d in snap.delete_dirs:
-        if not _has_parquet(d):  # zero-match delete: nothing to mask
-            continue
-        dseq = LocalTable._parse_dir_seq(d) or 10**9
-        del_parts.append(
-            f"SELECT \"{_ROW_ID}\" AS _del_row_id, "
-            f"CAST({dseq} AS BIGINT) AS _dseq "
-            f"FROM read_parquet('{_dir_glob(d)}')"
-        )
+    del_parts = [
+        f"SELECT \"{_ROW_ID}\" AS _del_row_id, "
+        f"CAST({LocalTable._parse_dir_seq(d, default=10**9)} AS BIGINT) AS _dseq "
+        f"FROM read_parquet('{_dir_glob(d)}')"
+        for d in snap.delete_dirs
+        if _has_parquet(d)  # zero-match delete: nothing to mask
+    ]
     if del_parts:
-        dels_sql = " UNION ALL ".join(del_parts)
         filters.append(
-            f"NOT EXISTS (SELECT 1 FROM ({dels_sql}) x "
+            f"NOT EXISTS (SELECT 1 FROM ({' UNION ALL '.join(del_parts)}) x "
             f"WHERE x._del_row_id = d.\"{_ROW_ID}\" AND d._seq < x._dseq)"
         )
-    for entry in snap.eq_deletes:
-        if not _has_parquet(entry["dir"]):
+    for keys, entries in LocalTable._eq_sets(snap.eq_deletes).items():
+        quoted = ", ".join(f'"{c}"' for c in keys)
+        key_parts = [
+            f"SELECT {quoted}, CAST({int(e['seq'])} AS BIGINT) AS _eq_seq "
+            f"FROM read_parquet('{_dir_glob(e['dir'])}')"
+            for e in entries
+            if _has_parquet(e["dir"])
+        ]
+        if not key_parts:
             continue
         # null-UNSAFE key equality, matching the engine's == semantics
-        # (_apply_eq_deletes): a NULL key deletes nothing
-        key_cond = " AND ".join(
-            f"k.\"{c}\" = d.\"{c}\"" for c in entry["cols"]
-        )
+        # (_keys_match): a NULL key deletes nothing
+        key_cond = " AND ".join(f'k."{c}" = d."{c}"' for c in keys)
         filters.append(
-            f"NOT EXISTS (SELECT 1 FROM "
-            f"read_parquet('{_dir_glob(entry['dir'])}') k "
-            f"WHERE {key_cond} AND d._seq < {int(entry['seq'])})"
+            f"NOT EXISTS (SELECT 1 FROM ({' UNION ALL '.join(key_parts)}) k "
+            f"WHERE {key_cond} AND d._seq < k._eq_seq)"
         )
     where = ("WHERE " + "\n  AND ".join(filters)) if filters else ""
     return f"SELECT {cols} FROM (\n{data_sql}\n) d\n{where}"

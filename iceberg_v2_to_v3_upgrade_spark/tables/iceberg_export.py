@@ -1132,35 +1132,24 @@ def export_deletion_vectors(
         # pay corpus-shaped anti-joins to learn it has nothing to say)
         return write_puffin(puffin_path, [])
 
-    imported = table.imported_dirs
+    # one pass over every data dir, positional deletes only: EQUALITY
+    # deletes stay parquet manifests in v3 and must not double-report
+    # here; the file name keys a V3 carried row apart from its tombstone
+    pos_only = dataclasses.replace(cur, eq_deletes=[])
+    rows = table._read_data(
+        pos_only, cur.data_dirs, extra=lambda d: [F.input_file_name().alias("f")]
+    )
     by_file: dict[str, set[int]] = {}
-    for d in cur.data_dirs:
-        if d in imported:
-            # add_files dirs carry no physical _row_id column; the
-            # engine synthesizes first_row_id + row index at read time
-            physical = table._read_imported_dir(
-                d, table._data_read_schema(), imported[d]
-            )
-        else:
-            physical = table._read_one_dir(d, table._data_read_schema())
-        physical = physical.select(
-            F.col(_ROW_ID).alias("rid"), F.input_file_name().alias("f")
-        )
-        # single-dir clone; EQUALITY deletes are stripped — they stay
-        # parquet manifests in v3 and must not double-report here
-        snap_d = dataclasses.replace(cur, data_dirs=[d], eq_deletes=[])
-        visible = table._scan_raw(snap_d).select(
-            F.col(_ROW_ID).alias("rid")
-        )
-        deleted = physical.join(visible, ["rid"], "left_anti").collect()
-        for r in deleted:
-            by_file.setdefault(_plain(r["f"]), set()).add(int(r["rid"]))
+    if rows is not None:
+        visible = table._apply_deletes(pos_only, rows)
+        for r in rows.join(visible, [_ROW_ID, "f"], "left_anti").collect():
+            by_file.setdefault(_plain(r["f"]), set()).add(int(r[_ROW_ID]))
 
     # imported files: positions are rid - first_row_id by construction
     # (keys recorded as file:/ URIs — normalize like input_file_name's)
     import_bases: dict[str, int] = {
         _plain(fp): int(b)
-        for entry in imported.values()
+        for entry in table.imported_dirs.values()
         for fp, b in entry["files"].items()
     }
     blobs = []

@@ -17,10 +17,11 @@ Physical layout (one directory per table):
     <table_root>/data/snap-<id>/      # parquet, partitioned by identity cols
     <table_root>/deletes/snap-<id>/   # parquet delete files (_row_id)
 
-Every scan is `union(data dirs) LEFT ANTI JOIN union(delete dirs) ON
-_row_id` with the delete side broadcast — the exact shape of Iceberg's MoR
-read path. Delete files are tiny relative to data (O(deleted rows)), so at
-100 TB the anti-join never shuffles the fact side.
+Every scan is `data dirs LEFT ANTI JOIN delete dirs ON _row_id` (plus one
+anti-join per equality-key set), each side read as few relations as the
+dirs' layouts allow and the delete side broadcast — the exact shape of
+Iceberg's MoR read path. Delete files are tiny relative to data
+(O(deleted rows)), so at 100 TB the anti-join never shuffles the fact side.
 
 Row identity: `_row_id` is assigned at write from
 `monotonically_increasing_id()` plus a per-commit base offset — unique and
@@ -39,6 +40,7 @@ import math
 import os
 import re
 import shutil
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -203,6 +205,26 @@ def _stats_range(lo: Any, hi: Any) -> list:
 def _union_all(dfs: list[DataFrame]) -> DataFrame | None:
     """Left-fold ``unionByName`` over ``dfs``; None when there are none."""
     return functools.reduce(DataFrame.unionByName, dfs) if dfs else None
+
+
+def _keys_match(cols) -> Column:
+    """Data columns equal to their ``_eq_<col>`` equality-delete keys —
+    null-UNSAFE: a NULL key deletes nothing."""
+    return functools.reduce(
+        Column.__and__, [F.col(c) == F.col(f"_eq_{c}") for c in cols]
+    )
+
+
+def _seq_tag(seq: int | None, default: int = 0) -> Column:
+    """The literal ``seq``, or for None ``LocalTable._parse_dir_seq`` of
+    the dir holding each row's file — so one relation over many dirs
+    tags each row with its own dir's seq."""
+    if seq is not None:
+        return F.lit(seq)
+    m = F.regexp_extract(
+        F.col("_metadata.file_path"), r"snap-(\d+)[^/]*/[^/]+$", 1
+    )
+    return F.when(m == "", F.lit(default)).otherwise(m.cast("long"))
 
 
 def _has_char_type(dt: DataType) -> bool:
@@ -1084,13 +1106,13 @@ class LocalTable:
         self._write_meta()
         return spec_id
 
-    def _spec_for_seq(self, seq: int) -> list[str]:
-        """The partition spec active at commit sequence ``seq``."""
+    def _spec_for_seq(self, seq: int) -> dict:
+        """The partition-spec log entry active at commit sequence ``seq``."""
         best = None
         for e in self.partition_spec_log:
             if e["seq"] <= seq and (best is None or e["seq"] >= best["seq"]):
                 best = e
-        return list((best or {"partition_by": []})["partition_by"])
+        return best or {"spec_id": 0, "partition_by": []}
 
     @staticmethod
     def _spec_names(
@@ -1216,44 +1238,28 @@ class LocalTable:
         return {name: ref_defs[name] for name in referenced}
 
     def _partition_filter_applies(
-        self, d: str, pf: str, scope: dict[str, str] | None = ...
+        self, d: str, scope: dict[str, str] | None
     ) -> bool:
-        """Whether ``pf`` may be applied to rows read from dir ``d``.
-
-        Partition evolution makes transform-derived dir columns
-        spec-dependent: a dir written under a spec that never encoded
-        ``p_partkey_bucket`` reads it as NULL, and filtering on it would
-        silently DROP every row of that dir. A filter therefore only
-        applies to dirs whose own spec derives every referenced transform
-        column WITH THE SAME canonical transform (name alone is not
-        enough — see ``_pf_scope``); other dirs pass through unfiltered —
-        conservative (extra rows for the residual to handle), never
-        wrong. Identity partition columns live in the table schema and
-        are recoverable from every dir (file or dir name), so they never
-        gate."""
-        if scope is ...:
-            scope = self._pf_scope(pf)
+        """Whether a partition filter with ``_pf_scope`` ``scope`` may be
+        applied to rows read from dir ``d``. Partition evolution makes
+        transform-derived dir columns spec-dependent: a dir whose spec
+        never encoded ``p_partkey_bucket`` reads it as NULL, and filtering
+        on it would DROP every row. So a filter applies only where the
+        dir's spec derives every referenced transform column WITH THE SAME
+        canonical transform; other dirs pass through unfiltered (extra
+        rows for the residual, never wrong). Identity partition columns
+        are recoverable from every dir, so they never gate."""
         if scope is None or len(self.partition_spec_log) == 1:
             return True
         seq = self._parse_dir_seq(d)
         mine = {
             name: canon
             for name, canon, derived, _src in self._spec_names(
-                self._spec_for_seq(seq)
+                self._spec_for_seq(seq)["partition_by"]
             )
             if derived
         }
         return all(mine.get(name) == canon for name, canon in scope.items())
-
-    def _maybe_filter_dir(
-        self, df: DataFrame, d: str, pf: str | None, scope
-    ) -> DataFrame:
-        """Shared per-dir filter application for both read paths (plain
-        and MoR-with-seq) so the scoping rule cannot diverge between
-        them."""
-        if pf and self._partition_filter_applies(d, pf, scope):
-            return df.filter(pf)
-        return df
 
     def _write_data_dir(
         self,
@@ -2145,35 +2151,50 @@ class LocalTable:
         )
 
     def _read_one_dir(self, d: str, ddl: str) -> DataFrame:
-        """Read one snapshot dir with an explicit schema, resolving any
-        column renames: a dir written at commit sequence s (from its
-        `snap-NNNNN` name) stores, for each current column, the name that
-        column had at sequence s (walk the rename log newest->oldest);
-        the read projects physical names back to current names. Pure
-        metadata resolution — the Iceberg field-id lookup, emulated."""
+        """Read one snapshot dir with an explicit schema (``_read_layout``
+        for managed dirs, ``_read_imported_dir`` for ``add_files`` ones)."""
         imported = self._meta.get("imported_dirs", {}).get(d)
         if imported is not None:
             return self._read_imported_dir(d, ddl, imported)
-        seq = self._parse_dir_seq(d)
-        df = None
-        if self._meta.get("renames"):
-            hist = [
-                (self._physical_name(f.name, seq), f.name,
-                 f.dataType.simpleString())
-                for f in self.declared_schema(ddl)
-            ]
-            if any(h != name for h, name, _ in hist):
-                read_ddl = ", ".join(f"{h} {dt}" for h, _, dt in hist)
-                df = (
-                    self.spark.read.schema(read_ddl)
-                    .option("basePath", d)
-                    .parquet(d)
-                    .select(*[F.col(h).alias(c) for h, c, _ in hist])
-                )
-        if df is None:
-            # per-dir basePath so identity-partition columns round-trip
-            df = self.spark.read.schema(ddl).option("basePath", d).parquet(d)
+        return self._read_layout([d], ddl, self._parse_dir_seq(d))
+
+    def _read_layout(
+        self,
+        dirs: list[str],
+        ddl: str,
+        seq: int,
+        seq_tag: Column | None = None,
+    ) -> DataFrame:
+        """Managed ``dirs`` (one, or several unpartitioned) written under
+        the layout of write sequence ``seq``, with an EXPLICIT schema: a
+        zero-row partitioned write leaves no file to infer one from, and
+        files written before an ADD COLUMN null-fill it. Columns read
+        their physical name at ``seq`` (the Iceberg field-id lookup,
+        emulated); ``seq_tag`` becomes ``_seq``."""
+        hist = [
+            (self._physical_name(f.name, seq), f)
+            for f in self.declared_schema(ddl)
+        ]
+        if any(h != f.name for h, f in hist):
+            ddl = ", ".join(f"{h} {f.dataType.simpleString()}" for h, f in hist)
+        cols = [F.col(h).alias(f.name) for h, f in hist]
+        if seq_tag is not None:
+            cols.append(seq_tag.alias("_seq"))
+        df = _union_all([r.select(*cols) for r in self._relations(ddl, dirs)])
         return self._apply_initial_defaults(df, seq)
+
+    def _relations(self, ddl: str, dirs: list[str]) -> list[DataFrame]:
+        """``dirs`` read with schema ``ddl``, one relation per run of at
+        most ``parallelPartitionDiscovery.threshold`` dirs: past it Spark
+        lists a relation's files with a job at every plan (over a second
+        per scan of a long-history table). One dir is its own
+        ``basePath`` so identity-partition columns round-trip."""
+        conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        n = int(self.spark.conf.get(conf))
+        reader = self.spark.read.schema(ddl)
+        if len(dirs) == 1:
+            reader = reader.option("basePath", dirs[0])
+        return [reader.parquet(*dirs[i : i + n]) for i in range(0, len(dirs), n)]
 
     def _physical_name(self, name: str, seq: int) -> str:
         """The name column ``name`` had when data at commit sequence
@@ -2230,142 +2251,139 @@ class LocalTable:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         return self._apply_initial_defaults(phys.select(*cols), seq)
 
-    def _read_dirs(
-        self,
-        dirs: list[str],
-        ddl: str,
-        partition_filter: str | None = None,
-    ) -> DataFrame | None:
-        """Read snapshot dirs with an EXPLICIT schema: a zero-row
-        partitioned write leaves a dir with no parquet files at all, and
-        schema inference would fail on it (found by the hypothesis DML
-        model test). With the schema given, empty dirs read as empty
-        frames, and files written before an ADD COLUMN null-fill the
-        missing column (schema evolution).
-
-        ``partition_filter`` is applied PER DIR, and only to dirs whose
-        own partition spec encodes the referenced transform columns
-        (partition evolution; see ``_partition_filter_applies``) — for
-        single-spec tables this is exactly the old union-then-filter
-        behavior (filter commutes with union), with the filter sitting at
-        the scan so Spark prunes directories before listing files."""
-        scope = self._pf_scope(partition_filter) if partition_filter else None
-        return _union_all(
-            [
-                self._maybe_filter_dir(
-                    self._read_one_dir(d, ddl), d, partition_filter, scope
-                )
-                for d in dirs
-            ]
-        )
-
     def _delete_scope_seq(self, d: str, snap: Snapshot) -> int:
         """The commit sequence deletes are scoped against for data dir
-        ``d`` when read through snapshot ``snap``: the snapshot's per-dir
-        override if one is recorded (cherry-picked dirs adopt the PUBLISH
-        snapshot's seq — Iceberg assigns cherry-picked files the new
-        snapshot's sequence number, so eq/pos deletes committed between
-        staging and publish do not apply to them), else the seq encoded
-        in the dir name. The override lives on the publish snapshot and
-        its descendants ONLY — the branch snapshot that staged the dir
-        keeps the staged seq, so branch-side deletes still apply there.
-        Schema/rename/spec scoping deliberately keeps the dir-name seq:
-        the files' physical layout is the one they were WRITTEN with,
-        only their delete visibility moves."""
-        override = snap.seq_overrides.get(d)
-        if override is not None:
-            return int(override)
-        return self._parse_dir_seq(d)
+        ``d`` read through ``snap``: ``snap``'s override for ``d`` (a
+        cherry-picked dir adopts the PUBLISH snapshot's seq, as Iceberg
+        gives picked files the new sequence number; the staging branch
+        keeps the staged seq), else the seq in the dir name. Layout
+        (schema, renames, spec) always follows the dir-name seq: files
+        keep the layout they were WRITTEN with."""
+        return int(snap.seq_overrides.get(d, self._parse_dir_seq(d)))
 
-    def _read_data_with_seq(
-        self, snap: Snapshot, partition_filter: str | None = None
+    def _read_data(
+        self,
+        snap: Snapshot,
+        dirs: list[str],
+        partition_filter: str | None = None,
+        extra: Callable[[str], list[Column]] | None = None,
     ) -> DataFrame | None:
-        """Union of the snapshot's data dirs, each row tagged with the
-        commit sequence parsed from its dir name (`.../snap-00007`),
-        or the cherry-pick override (``_delete_scope_seq``).
-        ``partition_filter`` follows the same per-dir spec-scoped rule as
-        ``_read_dirs`` (shared ``_maybe_filter_dir``)."""
-        dfs = []
+        """``snap``'s data ``dirs``, each row tagged ``_seq`` (its
+        ``_delete_scope_seq``), in relations per read layout, not per
+        commit. Unpartitioned managed dirs sharing rename epoch,
+        initial-defaults epoch, spec and seq override are one
+        ``_read_layout`` read (``_relations``). Partitioned and
+        ``add_files`` dirs are read one by one: Spark refuses one relation
+        over several partitioned roots (CONFLICTING_DIRECTORY_STRUCTURES).
+
+        ``partition_filter`` applies per read where the read's spec
+        encodes its transform columns (``_partition_filter_applies``), at
+        the scan so Spark prunes directories before listing files.
+        ``extra(d)`` adds columns set by the spec of a read's first dir."""
         ddl = self._data_read_schema()
         scope = self._pf_scope(partition_filter) if partition_filter else None
-        for d in snap.data_dirs:
-            seq = self._delete_scope_seq(d, snap)
-            df = self._read_one_dir(d, ddl).withColumn("_seq", F.lit(seq))
-            dfs.append(self._maybe_filter_dir(df, d, partition_filter, scope))
-        return _union_all(dfs)
+        imported = self._meta.get("imported_dirs", {})
+        defaults = self._meta.get("column_defaults", {})
+        names = self.declared_schema().fieldNames()
+        reads: dict[str | tuple, list[str]] = {}
+        for d in dirs:  # keyed in first-seen order: row order follows dirs
+            seq = self._parse_dir_seq(d)
+            spec = self._spec_for_seq(seq)
+            if d in imported or spec["partition_by"]:
+                reads[d] = [d]
+                continue
+            key = (
+                tuple(self._physical_name(n, seq) for n in names),
+                tuple(n for n, e in defaults.items() if seq <= e["seq"]),
+                spec["spec_id"],
+                snap.seq_overrides.get(d),  # None: the dir-name seq
+            )
+            reads.setdefault(key, []).append(d)
+        frames = []
+        for key, group in reads.items():
+            d = group[0]
+            if isinstance(key, str):
+                df = self._read_one_dir(d, ddl).withColumn(
+                    "_seq", F.lit(self._delete_scope_seq(d, snap))
+                )
+            else:
+                df = self._read_layout(
+                    group, ddl, self._parse_dir_seq(d), _seq_tag(key[-1])
+                )
+            if extra is not None:
+                df = df.select("*", *extra(d))
+            if partition_filter and self._partition_filter_applies(d, scope):
+                df = df.filter(partition_filter)
+            frames.append(df)
+        return _union_all(frames)
 
-    def _read_eq_keys(self, entry: dict) -> DataFrame:
-        """An equality-delete dir's key rows, typed as declared."""
+    def _read_eq_deletes(self, cols: list[str], entries: list[dict]) -> DataFrame:
+        """Equality-delete ``entries`` keyed on ``cols`` (``_relations``):
+        ``_eq_<col>`` typed as declared, and ``_eq_seq``, each entry's seq
+        (read per file when the dir name encodes it, as it does for every
+        entry this engine writes)."""
         types = {
             f.name: f.dataType.simpleString() for f in self.declared_schema()
         }
-        return self.spark.read.schema(
-            ", ".join(f"{c} {types[c]}" for c in entry["cols"])
-        ).parquet(entry["dir"])
-
-    def _apply_eq_deletes(self, snap: Snapshot, data: DataFrame) -> DataFrame:
-        """Anti-join each equality-delete key set against data rows with
-        an OLDER commit sequence (broadcast — key sets are O(deleted
-        keys), the fact side never shuffles)."""
-        for entry in snap.eq_deletes:
-            cols = entry["cols"]
-            keys = self._read_eq_keys(entry).select(
-                *[F.col(c).alias(f"_eq_{c}") for c in cols]
-            )
-            cond = F.lit(True)
-            for c in cols:
-                cond = cond & (F.col(c) == F.col(f"_eq_{c}"))
-            cond = cond & (F.col("_seq") < F.lit(entry["seq"]))
-            data = data.join(F.broadcast(keys), on=cond, how="left_anti")
-        return data
-
-    def _apply_pos_deletes_seq_scoped(
-        self, snap: Snapshot, data: DataFrame
-    ) -> DataFrame:
-        """Positional tombstones scoped to data committed BEFORE them.
-
-        Under V3 row lineage an UPDATE's rewritten row carries its
-        original ``_row_id`` into a NEW data dir in the SAME commit, so a
-        global row-id anti-join would tombstone the replacement too. Real
-        Iceberg scopes positional delete files to the specific data files
-        they reference; the analog here is commit sequence — a delete dir
-        at seq N only hits rows from data dirs with seq < N. Deletes stay
-        broadcast; the data side never shuffles."""
-        dfs = []
-        for d in snap.delete_dirs:
-            dseq = self._parse_dir_seq(d, default=10**9)
-            dfs.append(
-                self._read_one_dir(d, f"{_ROW_ID} long")
-                .select(F.col(_ROW_ID).alias("_del_row_id"))
-                .withColumn("_dseq", F.lit(dseq))
-            )
-        if not dfs:
-            return data
-        deletes = _union_all(dfs)
-        cond = (F.col(_ROW_ID) == F.col("_del_row_id")) & (
-            F.col("_seq") < F.col("_dseq")
+        ddl = ", ".join(f"{c} {types[c]}" for c in cols)
+        by_key: dict[int | None, list[str]] = {}
+        for e in entries:
+            seq = int(e["seq"])
+            key = None if seq == self._parse_dir_seq(e["dir"]) else seq
+            by_key.setdefault(key, []).append(e["dir"])
+        return _union_all(
+            [
+                r.select(
+                    *[F.col(c).alias(f"_eq_{c}") for c in cols],
+                    _seq_tag(key).alias("_eq_seq"),
+                )
+                for key, eq_dirs in by_key.items()
+                for r in self._relations(ddl, eq_dirs)
+            ]
         )
-        return data.join(F.broadcast(deletes), on=cond, how="left_anti")
+
+    def _read_pos_deletes(self, dirs: list[str]) -> DataFrame:
+        """Positional / ``-dv`` delete ``dirs`` (``_relations``):
+        ``_row_id`` and ``_dseq``, the seq of each file's dir name
+        (``10**9``, newer than any data, when it encodes none)."""
+        dseq = _seq_tag(None, default=10**9).alias("_dseq")
+        return _union_all(
+            [r.select(_ROW_ID, dseq) for r in self._relations(f"{_ROW_ID} long", dirs)]
+        )
+
+    @staticmethod
+    def _eq_sets(entries: list[dict]) -> dict[tuple[str, ...], list[dict]]:
+        """Equality-delete entries grouped by their key-column set."""
+        sets: dict[tuple[str, ...], list[dict]] = {}
+        for e in entries:
+            sets.setdefault(tuple(e["cols"]), []).append(e)
+        return sets
 
     def _apply_deletes(self, snap: Snapshot, data: DataFrame) -> DataFrame:
-        """The MoR merge: ``snap``'s equality and positional deletes
-        applied to ``data`` (rows tagged with ``_seq`` when the snapshot
-        needs sequence scoping — see ``_scan_raw``)."""
-        if snap.eq_deletes:
-            data = self._apply_eq_deletes(snap, data)
-        if self._meta.get("carried_row_ids"):
-            # V3 row lineage: an UPDATE re-appends the row with its
-            # ORIGINAL _row_id (Iceberg V3 carried-over row ids), so a
-            # positional tombstone must only hit rows committed BEFORE
-            # it — the per-(file,position) scoping Iceberg gets from
-            # file-referenced delete files, modeled here by commit seq.
-            return self._apply_pos_deletes_seq_scoped(snap, data)
-        deletes = self._read_dirs(snap.delete_dirs, f"{_ROW_ID} long")
-        if deletes is None:
-            return data
-        # The C1 implicit MoR anti-join (README.md:7): delete files are
-        # O(deleted rows), broadcast them; data side never shuffles.
-        return data.join(F.broadcast(deletes), _ROW_ID, "left_anti")
+        """The MoR merge of ``snap``'s deletes into ``data`` (rows carry
+        ``_seq``): one broadcast anti-join per equality-key-column set
+        (keys equal, ``_seq < _eq_seq``) and one over all positional /
+        ``-dv`` dirs (``_row_id`` equal, ``_seq < _dseq``), however many
+        delete commits there are. Sequence scoping is Iceberg's: an
+        equality delete never hits later rows, and a V3 UPDATE's row that
+        keeps its ``_row_id`` survives its own commit's tombstone. Without
+        carried ids the scoped positional join equals a plain one: ids are
+        never reused, so a tombstone names only older rows (cherry-pick
+        publishes data dirs only; a rebased delete names base rows). The
+        delete side is broadcast; the data side never shuffles."""
+        for cols, entries in self._eq_sets(snap.eq_deletes).items():
+            keys = self._read_eq_deletes(list(cols), entries)
+            cond = _keys_match(cols) & (F.col("_seq") < F.col("_eq_seq"))
+            data = data.join(F.broadcast(keys), cond, "left_anti")
+        if snap.delete_dirs:
+            dels = self._read_pos_deletes(snap.delete_dirs).withColumnRenamed(
+                _ROW_ID, "_del_row_id"
+            )
+            cond = (F.col(_ROW_ID) == F.col("_del_row_id")) & (
+                F.col("_seq") < F.col("_dseq")
+            )
+            data = data.join(F.broadcast(dels), cond, "left_anti")
+        return data
 
     def _scan_raw(
         self,
@@ -2373,40 +2391,32 @@ class LocalTable:
         partition_filter: str | None = None,
         data_filter: str | None = None,
     ) -> DataFrame:
-        """Merged scan WITH _row_id (MoR anti-join applied), projected to
-        the table's CURRENT declared schema (schema evolution: added
-        columns null-fill on old files, dropped columns stop projecting).
+        """Merged scan WITH _row_id, projected to the table's CURRENT
+        declared schema (added columns null-fill on old files, dropped
+        ones stop projecting). One path for every table: stats pruning,
+        ``_read_data``, ``_apply_deletes``.
 
         ``partition_filter`` may reference transform-derived directory
-        columns (e.g. ``ts_day >= '2024-01-01'``) — applied before the
-        anti-join, it reaches the file index as partition pruning, so
-        non-matching directories are never listed or read."""
+        columns (e.g. ``ts_day >= '2024-01-01'``); it reaches the file
+        index as partition pruning. ``data_filter`` drops data dirs whose
+        recorded min/max exclude it (``last_scan_pruning``; safe under
+        every delete kind, deletes only remove rows), then applies
+        row-level as the residual."""
         snap = snap or self.current_snapshot()
+        dirs = snap.data_dirs
         self.last_scan_pruning = None
-        if snap.eq_deletes or self._meta.get("carried_row_ids"):
-            # per-dir reads tagged with their commit sequence so each
-            # equality delete (and, under V3 row lineage, each positional
-            # tombstone) can scope to older data only (stats pruning is
-            # skipped here — conservative, sequences must stay aligned)
-            data = self._read_data_with_seq(snap, partition_filter)
-        else:
-            dirs = snap.data_dirs
-            if data_filter:
-                dirs = self._prune_dirs_by_stats(dirs, data_filter)
-                self.last_scan_pruning = {
-                    "candidate_dirs": len(snap.data_dirs),
-                    "read_dirs": len(dirs),
-                }
-            data = self._read_dirs(
-                dirs, self._data_read_schema(), partition_filter
-            )
+        if data_filter:
+            dirs = self._prune_dirs_by_stats(dirs, data_filter)
+            self.last_scan_pruning = {
+                "candidate_dirs": len(snap.data_dirs),
+                "read_dirs": len(dirs),
+            }
+        data = self._read_data(snap, dirs, partition_filter)
         if data is None:
             return self.spark.createDataFrame(
                 [], self.schema_ddl + f", {_ROW_ID} long"
             )
         if data_filter:
-            # residual: stats pruning only skips whole dirs; the row-level
-            # predicate still applies (and commutes with the MoR anti-join)
             data = data.filter(data_filter)
         data = self._apply_deletes(snap, data)
         declared = self.declared_schema()
@@ -2893,9 +2903,9 @@ class LocalTable:
         historical spec's dir columns ('' where a spec doesn't encode
         one), live record_count, file_count, bytes. Record counts apply
         the SAME MoR merge as ``scan`` (equality deletes and, under V3
-        row lineage, commit-seq-scoped positional tombstones) — per-dir
-        partition values are captured as extra columns BEFORE the merge
-        so delete application stays the one shared code path."""
+        row lineage, commit-seq-scoped positional tombstones): spec id
+        and partition values ride through ``_read_data`` as extra
+        columns, constant per read, into the shared ``_apply_deletes``."""
         snap = self.current_snapshot()
         union_names: list[str] = []
         for entry in self.partition_spec_log:
@@ -2904,38 +2914,27 @@ class LocalTable:
                     union_names.append(n)
         keys = ["spec_id", *union_names]
         stats: dict[tuple, list[int]] = {}
-        frames = []
-        ddl = self._data_read_schema()
         for d in snap.data_dirs:
-            seq = self._parse_dir_seq(d)
-            d_names = {
-                n for n, _c, _d2, _s in self._spec_names(self._spec_for_seq(seq))
-            }
-            spec_id = next(
-                e["spec_id"]
-                for e in reversed(self.partition_spec_log)
-                if e["seq"] <= seq
-            )
+            spec_id = self._spec_for_seq(self._parse_dir_seq(d))["spec_id"]
             for vals, size in self._walk_dir_file_stats(d):
                 key = (spec_id, *(vals.get(n, "") for n in union_names))
                 s = stats.setdefault(key, [0, 0])
                 s[0] += 1
                 s[1] += size
-            df = (
-                self._read_one_dir(d, ddl)
-                # delete scoping honors the cherry-pick seq override;
-                # spec/schema scoping above stays on the dir-name seq
-                .withColumn("_seq", F.lit(self._delete_scope_seq(d, snap)))
-                .withColumn("_spec_id", F.lit(spec_id))
-            )
-            for i, n in enumerate(union_names):
-                df = df.withColumn(
-                    f"_pv{i}",
-                    F.coalesce(F.col(n).cast("string"), F.lit(""))
-                    if n in d_names
-                    else F.lit(""),
-                )
-            frames.append(df)
+
+        def spec_cols(d: str) -> list[Column]:
+            spec = self._spec_for_seq(self._parse_dir_seq(d))
+            mine = {n for n, _c, _d, _s in self._spec_names(spec["partition_by"])}
+            pv = [
+                F.coalesce(F.col(n).cast("string"), F.lit(""))
+                if n in mine
+                else F.lit("")
+                for n in union_names
+            ]
+            return [F.lit(spec["spec_id"]).alias("_spec_id")] + [
+                c.alias(f"_pv{i}") for i, c in enumerate(pv)
+            ]
+
         file_rows = [(*k, n, b) for k, (n, b) in sorted(stats.items())]
         files_df = self.spark.createDataFrame(
             file_rows or [],
@@ -2948,10 +2947,11 @@ class LocalTable:
             + ", ".join(f"{n} string" for n in union_names)
             + ", record_count long"
         )
-        if not frames:
+        data = self._read_data(snap, snap.data_dirs, extra=spec_cols)
+        if data is None:
             counts = self.spark.createDataFrame([], counts_schema)
         else:
-            data = self._apply_deletes(snap, _union_all(frames))
+            data = self._apply_deletes(snap, data)
             counts = data.groupBy(
                 F.col("_spec_id").alias("spec_id"),
                 *[
@@ -3053,10 +3053,9 @@ class LocalTable:
                         d for d in prev.data_dirs if d not in s.data_dirs
                     ]
                     if new_data:
-                        ins = self._read_dirs(
-                            new_data, self._data_read_schema()
-                        ).withColumn("_change_type", F.lit("insert"))
-                        step = ins
+                        step = self._read_data(s, new_data).withColumn(
+                            "_change_type", F.lit("insert")
+                        )
                     if dropped:
                         # Unpartitioned INSERT OVERWRITE commits a fresh
                         # dir list (no delete ledgers), so the delete side
@@ -3079,11 +3078,7 @@ class LocalTable:
                         dels = (
                             self._scan_raw(prev)
                             .join(
-                                F.broadcast(
-                                    self._read_dirs(
-                                        new_dels, f"{_ROW_ID} long"
-                                    )
-                                ),
+                                F.broadcast(self._read_pos_deletes(new_dels)),
                                 _ROW_ID,
                             )
                             .withColumn("_change_type", F.lit("delete"))
@@ -3099,22 +3094,29 @@ class LocalTable:
                         # CDC flavor) grow eq_deletes without touching
                         # dir lists. Every prev-visible row has a commit
                         # seq below this snapshot's, so the delta is
-                        # simply prev's visible scan inner-joined with
-                        # the new key sets (broadcast — O(deleted keys)).
+                        # simply prev's visible scan semi-joined with the
+                        # new keys: one broadcast join per key-column set
+                        # (O(deleted keys)); a row two sets both match is
+                        # one change.
                         vis_prev = self._scan_raw(prev)
+                        sets = self._eq_sets(new_eq)
                         eq_dels = _union_all(
                             [
                                 vis_prev.join(
                                     F.broadcast(
-                                        self._read_eq_keys(entry).distinct()
+                                        self._read_eq_deletes(list(cols), es)
                                     ),
-                                    entry["cols"],
+                                    _keys_match(cols),
+                                    "left_semi",
                                 )
-                                for entry in new_eq
+                                for cols, es in sets.items()
                             ]
-                        ).dropDuplicates(
-                            [_ROW_ID]
-                        ).withColumn("_change_type", F.lit("delete"))
+                        )
+                        if len(sets) > 1:
+                            eq_dels = eq_dels.dropDuplicates([_ROW_ID])
+                        eq_dels = eq_dels.withColumn(
+                            "_change_type", F.lit("delete")
+                        )
                         step = (
                             eq_dels
                             if step is None
@@ -3271,9 +3273,9 @@ class LocalTable:
         cur = self.current_snapshot()
         if len(cur.delete_dirs) <= 1:
             return cur
-        tombstones = self._read_dirs(
-            cur.delete_dirs, f"{_ROW_ID} long"
-        ).distinct()
+        tombstones = (
+            self._read_pos_deletes(cur.delete_dirs).select(_ROW_ID).distinct()
+        )
         # single file: the whole point is one tombstone blob per scan
         dv_path = self._write_delete_dir(
             tombstones.coalesce(1), _next_snapshot_id(self._meta), "-dv"

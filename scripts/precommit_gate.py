@@ -58,6 +58,10 @@ SMOKE_QUERIES = [
     "n2e_embedding_cosine_neardup",
     # streaming CDC: delete_by_keys + merge_into through foreachBatch
     "l8_stream_cdc_apply",
+    # MoR scan, per-dir side: partitioned dirs under evolved specs
+    "i23_partition_evolution",
+    # MoR scan, grouped side: several eq deletes with a re-insert
+    "i45_eq_delete_cdc",
 ]
 
 

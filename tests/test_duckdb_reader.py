@@ -58,11 +58,17 @@ def test_duckdb_applies_equality_deletes_with_seq_scope(
 ):
     root = str(tmp_path_factory.mktemp("ddb_eq")) + "/t"
     t = LocalTable.create(spark, root, _SCHEMA)
-    t.insert(_df(spark, [(1, "a", 1.0), (2, "b", 2.0)]))
+    t.insert(_df(spark, [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]))
     t.delete_by_keys(_df(spark, [(1, "a", 0.0)]), ["id"])
     # re-insert the deleted key AFTER the equality delete: it must
     # survive (eq deletes only hit older-sequence data) in BOTH engines
     t.insert(_df(spark, [(1, "a2", 9.0)]))
+    t.delete_by_keys(_df(spark, [(2, "b", 0.0)]), ["id"])
+    # a second key-column set gets its own anti-join in both engines
+    t.delete_by_keys(_df(spark, [(0, "c", 0.0)]), ["cat"])
+    t.insert(_df(spark, [(2, "b2", 8.0), (4, "c", 4.0)]))
+    assert len(t.current_snapshot().eq_deletes) == 3
+    assert sorted(r.id for r in t.scan().collect()) == [1, 2, 4]
     _assert_duckdb_matches(spark, t)
 
 

@@ -4,6 +4,7 @@ pruning analog)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from iceberg_v2_to_v3_upgrade_spark.io import load_table
@@ -45,9 +46,29 @@ def test_scan_skips_dirs_outside_predicate_range(spark, tmp_path):
     assert t.last_scan_pruning["read_dirs"] == 1  # only the last range chunk
 
 
-def test_pruned_scan_equals_unpruned_after_mor_delete(spark, tmp_path):
-    t, od, lo, hi = _build(spark, tmp_path)
+def _positional_delete(t, spark):
     t.delete_where("o_orderkey % 7 = 0")
+
+
+def _equality_delete(t, spark):
+    keys = t.scan().filter("o_orderkey % 7 = 0").select("o_orderkey")
+    t.delete_by_keys(keys, ["o_orderkey"])
+
+
+def _v3_carried_update(t, spark):
+    t.set_properties({"format-version": "3"})
+    t.update_set({"o_custkey": "o_custkey + 1"}, "o_orderkey % 7 = 0")
+    assert t._meta.get("carried_row_ids")
+
+
+@pytest.mark.parametrize(
+    "mutate",
+    [_positional_delete, _equality_delete, _v3_carried_update],
+    ids=["positional", "equality", "v3_carried"],
+)
+def test_pruned_scan_equals_unpruned_after_mor_delete(spark, tmp_path, mutate):
+    t, od, lo, hi = _build(spark, tmp_path)
+    mutate(t, spark)
     cut = lo + (hi - lo) * 0.5
     pred = f"o_totalprice >= {cut}"
     pruned = sorted(r.o_orderkey for r in t.scan(data_filter=pred).collect())
