@@ -23,7 +23,7 @@ import contextlib
 import fcntl
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window, functions as F
 
 from iceberg_v2_to_v3_upgrade_spark.tables.table import (
     CommitConflictError,
@@ -129,8 +129,6 @@ def _dedup_last_writer(
     row_number and any oracle's rk=1 pick an ARBITRARY row and the two
     can disagree (latent round-6 review finding). ``drop_after_dedup``
     removes tie-break columns the target table schema doesn't carry."""
-    from pyspark.sql import Window, functions as F
-
     if order_col is not None:
         cols = [order_col] if isinstance(order_col, str) else list(order_col)
         w = Window.partitionBy(*keys).orderBy(*[F.desc(c) for c in cols])
@@ -142,6 +140,42 @@ def _dedup_last_writer(
     for c in drop_after_dedup or []:
         b = b.drop(c)
     return b
+
+
+def _keyed_batch_apply(
+    table: LocalTable,
+    keys: list[str],
+    order_col: str | list[str] | None,
+    drop_after_dedup: list[str] | None,
+    op_col: str | None = None,
+):
+    """The ``foreachBatch`` function of a keyed stream: the last writer
+    per key wins; with an ``op_col`` the 'D' rows land as one equality
+    delete, the rest as one upsert MERGE. An empty side commits nothing."""
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        # persisted: the window dedup runs once for every consumer
+        # (emptiness probes, the delete-file write, the merge join)
+        b = _dedup_last_writer(batch_df, keys, order_col, drop_after_dedup)
+        b = b.persist()
+        try:
+            ups = b
+            if op_col is not None:
+                dels = b.filter(F.col(op_col) == "D").select(*keys)
+                ups = b.filter(F.col(op_col) != "D").drop(op_col)
+                if not dels.isEmpty():
+                    _apply_with_retry(table, lambda t: t.delete_by_keys(dels, keys))
+            if not ups.isEmpty():
+                _apply_with_retry(
+                    table,
+                    lambda t: t.merge_into(
+                        ups, keys, when_matched="update", when_not_matched="insert"
+                    ),
+                )
+        finally:
+            b.unpersist()
+
+    return apply
 
 
 def stream_upsert_into_table(
@@ -165,26 +199,8 @@ def stream_upsert_into_table(
     keeps exactly one row per key with full snapshot history (one merge
     commit per batch — time travel shows every applied batch).
     """
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        b = _dedup_last_writer(batch_df, keys, order_col, drop_after_dedup)
-        # the dedup'd batch is read by isEmpty AND several times inside
-        # merge_into (matched join + not-matched anti-join + the write) —
-        # persist so the window dedup runs once, not per consumer
-        b = b.persist()
-        try:
-            if b.isEmpty():
-                return
-            _apply_with_retry(
-                table,
-                lambda t: t.merge_into(
-                    b, keys, when_matched="update", when_not_matched="insert"
-                ),
-            )
-        finally:
-            b.unpersist()
-
-    return _start(stream_df, _merge_batch, checkpoint_dir, available_now)
+    apply = _keyed_batch_apply(table, keys, order_col, drop_after_dedup)
+    return _start(stream_df, apply, checkpoint_dir, available_now)
 
 
 def stream_cdc_into_table(
@@ -207,31 +223,5 @@ def stream_cdc_into_table(
     Two commits per batch worst-case (delete + merge), each snapshot-
     versioned — the table's history is the applied changelog.
     """
-    from pyspark.sql import functions as F
-
-    def _apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        b = _dedup_last_writer(batch_df, keys, order_col, drop_after_dedup)
-        # b feeds four consumers (two isEmpty probes, the delete-file
-        # write, the merge join) — persist so the window dedup runs once
-        b = b.persist()
-        try:
-            dels = b.filter(F.col(op_col) == "D").select(*keys)
-            ups = b.filter(F.col(op_col) != "D").drop(op_col)
-            if not dels.isEmpty():
-                _apply_with_retry(
-                    table, lambda t: t.delete_by_keys(dels, keys)
-                )
-            if not ups.isEmpty():
-                _apply_with_retry(
-                    table,
-                    lambda t: t.merge_into(
-                        ups,
-                        keys,
-                        when_matched="update",
-                        when_not_matched="insert",
-                    ),
-                )
-        finally:
-            b.unpersist()
-
-    return _start(stream_df, _apply_batch, checkpoint_dir, available_now)
+    apply = _keyed_batch_apply(table, keys, order_col, drop_after_dedup, op_col)
+    return _start(stream_df, apply, checkpoint_dir, available_now)

@@ -207,24 +207,30 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame | None:
     return functools.reduce(DataFrame.unionByName, dfs) if dfs else None
 
 
-def _keys_match(cols) -> Column:
-    """Data columns equal to their ``_eq_<col>`` equality-delete keys —
-    null-UNSAFE: a NULL key deletes nothing."""
-    return functools.reduce(
-        Column.__and__, [F.col(c) == F.col(f"_eq_{c}") for c in cols]
-    )
+def _q(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _seq_tag(seq: int | None, default: int = 0) -> Column:
-    """The literal ``seq``, or for None ``LocalTable._parse_dir_seq`` of
-    the dir holding each row's file — so one relation over many dirs
+# Scan building speaks SQL text (``selectExpr`` / ``F.expr``) rather than
+# one Column object per column: every Column is a py4j round trip, and a
+# scan is planned eagerly on every read and DML statement.
+def _keys_match(cols) -> str:
+    """SQL: data columns equal to their ``_eq_<col>`` equality-delete
+    keys — null-UNSAFE: a NULL key deletes nothing."""
+    return " AND ".join(f"{_q(c)} = {_q('_eq_' + c)}" for c in cols)
+
+
+def _seq_tag(seq: int | None, default: int = 0) -> str:
+    """SQL: the literal ``seq``, or for None ``LocalTable._parse_dir_seq``
+    of the dir holding each row's file — so one relation over many dirs
     tags each row with its own dir's seq."""
     if seq is not None:
-        return F.lit(seq)
-    m = F.regexp_extract(
-        F.col("_metadata.file_path"), r"snap-(\d+)[^/]*/[^/]+$", 1
+        return str(int(seq))
+    return (
+        "coalesce(CAST(nullif(regexp_extract(_metadata.file_path, "
+        f"'snap-([0-9]+)[^/]*/[^/]+$', 1), '') AS BIGINT), {default})"
     )
-    return F.when(m == "", F.lit(default)).otherwise(m.cast("long"))
 
 
 def _has_char_type(dt: DataType) -> bool:
@@ -1473,41 +1479,91 @@ class LocalTable:
                 kept.append(d)
         return kept
 
-    def _align_to_schema(self, df: DataFrame) -> DataFrame:
+    def _align_to_schema(
+        self, df: DataFrame, keep_row_ids: bool = False
+    ) -> DataFrame:
         """Project/cast incoming rows to the declared schema (missing
-        columns null-fill — schema evolution; extras are rejected)."""
+        columns null-fill — schema evolution; extras are rejected).
+        ``_row_id`` is carried along only under ``keep_row_ids``."""
         declared = self.declared_schema()
-        extra = set(df.columns) - set(declared.fieldNames()) - {_ROW_ID}
+        present = set(df.columns)
+        extra = present - set(declared.fieldNames()) - {_ROW_ID}
         if extra:
             raise TableError(f"columns not in table schema: {sorted(extra)}")
-        return df.select(
-            *[
-                F.col(f.name).cast(f.dataType)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in declared
-            ]
+        cols = [
+            F.col(f.name).cast(f.dataType)
+            if f.name in present
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in declared
+        ]
+        if keep_row_ids:
+            cols.append(F.col(_ROW_ID))
+        return df.select(*cols)
+
+    def _change_rows(
+        self,
+        operation: str,
+        cur: Snapshot,
+        gone: DataFrame | None,
+        added: list[DataFrame],
+        branch: str | None = None,
+        copy_on_write: bool = False,
+        keep_row_ids: bool = False,
+    ) -> Snapshot:
+        """The one commit step under every row-level change: INSERT,
+        partitioned INSERT OVERWRITE, DELETE, UPDATE and MERGE.
+
+        ``gone`` holds the rows of ``cur`` (with ``_row_id``) that stop
+        being visible, or None; ``added`` the frames that appear.
+
+        - merge-on-read: one positional delete dir of ``gone``'s ids and
+          one data dir of ``added``; ``cur``'s files stay cited.
+        - copy-on-write: one data dir of ``cur``'s survivors (``left_anti``
+          on ``_row_id`` against ``gone``) plus ``added``, and nothing
+          else cited — no delete files.
+
+        Every written frame is aligned to the declared schema
+        (``_align_to_schema``: cast, null-fill, extras rejected). Row ids:
+        ``keep_row_ids`` writes each row's own ``_row_id`` (V3 carried
+        lineage, copy-on-write DELETE); otherwise the whole dir gets
+        fresh ids. One dir never mixes the two: a rebase onto a
+        concurrent writer shifts a fresh dir as a whole."""
+        snap_id = _next_snapshot_id(self._meta)
+        if copy_on_write:
+            survivors = self._scan_raw(cur)
+            if gone is not None:
+                survivors = survivors.join(gone.select(_ROW_ID), _ROW_ID, "left_anti")
+            added, data_dirs, delete_dirs = [survivors, *added], [], []
+        else:
+            data_dirs, delete_dirs = list(cur.data_dirs), list(cur.delete_dirs)
+            if gone is not None:
+                delete_dirs.append(
+                    self._write_delete_dir(gone.select(_ROW_ID), snap_id)
+                )
+        rows = _union_all([self._align_to_schema(df, keep_row_ids) for df in added])
+        fresh: dict[str, Any] = {}
+        if rows is not None:
+            path, fresh = self._write_new_rows(rows, snap_id, keep_row_ids)
+            data_dirs.append(path)
+        return self._commit(
+            operation,
+            data_dirs,
+            delete_dirs,
+            branch=branch,
+            eq_deletes=[] if copy_on_write else cur.eq_deletes,
+            **fresh,
         )
 
     def insert(self, df: DataFrame, branch: str | None = None) -> Snapshot:
         """INSERT INTO ... (reference internal/create_demo_table.py:117-127).
 
-        Appends a new data dir; never touches existing files (snapshot
-        isolation). Written partitioned by the identity partition columns.
-        ``branch`` stages the commit on a branch ref (WAP) instead of
-        advancing the table's current snapshot.
+        Appends a new data dir (``_change_rows``); never touches existing
+        files (snapshot isolation). Written partitioned by the identity
+        partition columns. ``branch`` stages the commit on a branch ref
+        (WAP) instead of advancing the table's current snapshot.
         """
-        cur = self._base_snapshot(branch)
-        path, fresh = self._write_new_rows(
-            self._align_to_schema(df), _next_snapshot_id(self._meta)
-        )
-        return self._commit(
-            "append",
-            cur.data_dirs + [path],
-            list(cur.delete_dirs),
-            branch=branch,
-            eq_deletes=cur.eq_deletes,
-            **fresh,
+        return self._change_rows(
+            "append", self._base_snapshot(branch), None, [df], branch
         )
 
     def insert_values(self, rows: list[tuple]) -> Snapshot:
@@ -1518,10 +1574,12 @@ class LocalTable:
         """INSERT OVERWRITE — Iceberg's dynamic partition overwrite: one
         atomic commit that replaces EXACTLY the partitions present in the
         incoming rows and leaves every other partition's files untouched
-        (the backfill/restatement idiom). Unpartitioned tables degrade to
-        a full-table replace whose snapshot cites only the new data dir —
-        prior snapshots keep their dir lists, so time travel still reads
-        the pre-overwrite data.
+        (the backfill/restatement idiom): the touched partitions' rows are
+        ``gone`` and the incoming rows ``added`` in one merge-on-read
+        ``_change_rows``. Unpartitioned tables degrade to a full-table
+        replace whose snapshot cites only the new data dir — prior
+        snapshots keep their dir lists, so time travel still reads the
+        pre-overwrite data.
 
         Scale: the touched-partition list is a DISTINCT over the incoming
         rows' partition transforms (metadata-sized — bounded by partition
@@ -1529,16 +1587,16 @@ class LocalTable:
         side is one semi-join; no shuffle of existing table data, no
         rewrite of untouched partitions.
         """
-        cur = self.current_snapshot()
         aligned = self._align_to_schema(df)
         spec = self._partition_spec()
-        snap_id = _next_snapshot_id(self._meta)
-        data_path, fresh = self._write_new_rows(aligned, snap_id)
         if not spec:
+            data_path, fresh = self._write_new_rows(
+                aligned, _next_snapshot_id(self._meta)
+            )
             return self._commit(
                 "overwrite", [data_path], [], eq_deletes=[], **fresh
             )
-        names = [name for name, _ in spec]
+        cur = self.current_snapshot()
         exprs = [
             (expr if expr is not None else F.col(name)).alias(name)
             for name, expr in spec
@@ -1548,23 +1606,15 @@ class LocalTable:
         # incoming NULL-partition rows must REPLACE existing ones, and a
         # plain equi-join would never match them
         cond = F.lit(True)
-        for n in names:
-            cond = cond & F.col(f"t.{n}").eqNullSafe(F.col(f"p.{n}"))
-        matched = (
+        for name, _ in spec:
+            cond = cond & F.col(f"t.{name}").eqNullSafe(F.col(f"p.{name}"))
+        gone = (
             self._scan_raw(cur)
             .select(_ROW_ID, *exprs)
             .alias("t")
             .join(F.broadcast(touched.alias("p")), cond, "left_semi")
-            .select(_ROW_ID)
         )
-        del_path = self._write_delete_dir(matched, snap_id)
-        return self._commit(
-            "overwrite",
-            cur.data_dirs + [data_path],
-            cur.delete_dirs + [del_path],
-            eq_deletes=cur.eq_deletes,
-            **fresh,
-        )
+        return self._change_rows("overwrite", cur, gone, [aligned])
 
     @property
     def imported_dirs(self) -> dict:
@@ -1639,31 +1689,21 @@ class LocalTable:
     def delete_where(
         self, predicate: str | Column, branch: str | None = None
     ) -> Snapshot:
-        """DELETE FROM ... WHERE <pred> (reference create_demo_table.py:130).
+        """DELETE FROM ... WHERE <pred> (reference create_demo_table.py:130):
+        the matched rows are ``gone`` in one ``_change_rows``.
 
         merge-on-read (default): append a positional delete file holding the
         matched `_row_id`s — O(deleted rows) write amplification.
-        copy-on-write: rewrite data dirs without the matched rows.
+        copy-on-write: rewrite the data without the matched rows; the
+        survivors keep their row ids.
         """
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         cur = self._base_snapshot(branch)
-        matched = self._scan_raw(cur).filter(cond).select(_ROW_ID)
-        snap_id = _next_snapshot_id(self._meta)
-        if self._meta["properties"].get("write.delete.mode") == "merge-on-read":
-            path = self._write_delete_dir(matched, snap_id)
-            return self._commit(
-                "delete",
-                list(cur.data_dirs),
-                cur.delete_dirs + [path],
-                branch=branch,
-                eq_deletes=cur.eq_deletes,
-            )
-        # copy-on-write: one full rewrite, zero delete files
-        remaining = self._scan_raw(cur).join(
-            F.broadcast(matched), _ROW_ID, "left_anti"
+        mor = self.properties.get("write.delete.mode") == "merge-on-read"
+        gone = self._scan_raw(cur).filter(cond)
+        return self._change_rows(
+            "delete", cur, gone, [], branch, copy_on_write=not mor, keep_row_ids=True
         )
-        path, _ = self._write_new_rows(remaining, snap_id, keep_row_ids=True)
-        return self._commit("delete", [path], [], branch=branch)
 
     def delete_by_keys(
         self,
@@ -1702,85 +1742,73 @@ class LocalTable:
         predicate: str | Column,
         branch: str | None = None,
     ) -> Snapshot:
-        """UPDATE ... SET col = expr WHERE <pred> (create_demo_table.py:133).
+        """UPDATE ... SET col = expr WHERE <pred> (create_demo_table.py:133):
+        the matched rows are ``gone`` and their rewrites (SET by
+        ``_apply_assignments``) ``added`` in one ``_change_rows``.
 
-        MoR semantics exactly as Iceberg executes it: matched rows get a
-        positional delete entry AND are re-appended rewritten (with fresh
-        row ids — lineage records the rewrite).
+        merge-on-read (default), exactly as Iceberg executes it: a
+        positional delete entry for each matched row plus the rewritten
+        rows appended — with fresh row ids on V2, and on V3 keeping each
+        row's ``_row_id`` (carried lineage). copy-on-write: one rewrite of
+        the whole table, fresh ids for every row.
         """
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         cur = self._base_snapshot(branch)
-        raw = self._scan_raw(cur)
-        # persisted: feeds the delete file AND the rewrite (MoR), so the
-        # MoR scan runs once per UPDATE, not once per output (round-8
-        # perf item, the merge_into lesson); bounded by the predicate's
-        # matched set. Released after the commit.
-        matched = raw.filter(cond).persist()
-        # try/finally: a CommitConflictError (or any validation raise)
-        # must not leak the cached frame (round-8 review finding)
+        # persisted: feeds the tombstones (or the copy-on-write anti-join)
+        # AND the rewrite, so the MoR scan runs once per UPDATE; bounded by
+        # the predicate's matched set. Released after the commit — also
+        # when it raises (CommitConflictError, validation).
+        matched = self._scan_raw(cur).filter(cond).persist()
         try:
-            rewritten = self._apply_assignments(matched.drop(_ROW_ID), assignments)
-            snap_id = _next_snapshot_id(self._meta)
-            if self._meta["properties"].get("write.update.mode") == "merge-on-read":
-                del_path = self._write_delete_dir(
-                    matched.select(_ROW_ID), snap_id
-                )
-                carried = self.format_version >= 3
-                if carried:
-                    # V3 row lineage: the rewritten row KEEPS its _row_id
-                    # (Iceberg V3 carried-over row ids — incremental consumers
-                    # can track a logical row across updates). The tombstone
-                    # above still hides the OLD position; the seq-scoped
-                    # delete application (flagged here) keeps the carried copy
-                    # visible. (rewritten above had _ROW_ID dropped — rebuild
-                    # the SET projection from `matched` keeping the id.)
-                    rewritten = self._apply_assignments(matched, assignments)
-                    self._meta["carried_row_ids"] = True
-                # V3 carried rows keep their original ids — nothing to
-                # shift on rebase; V2 rewrites get fresh ids
-                data_path, fresh = self._write_new_rows(
-                    rewritten, snap_id, keep_row_ids=carried
-                )
-                return self._commit(
-                    "update",
-                    cur.data_dirs + [data_path],
-                    cur.delete_dirs + [del_path],
-                    branch=branch,
-                    eq_deletes=cur.eq_deletes,
-                    **fresh,
-                )
-            # copy-on-write. NULL-predicate rows are NOT matched (SQL
-            # three-valued logic) and must be KEPT: a bare ~cond is NULL for
-            # them too, which would silently drop the rows from the single
-            # rewritten dir (round-8 review finding; the MoR branch never
-            # had the problem because unmatched rows stay in their dir).
-            untouched = raw.filter(~F.coalesce(cond, F.lit(False))).drop(_ROW_ID)
-            data_path, fresh = self._write_new_rows(
-                untouched.unionByName(rewritten), snap_id
-            )
-            return self._commit(
-                "update", [data_path], [], branch=branch, **fresh
+            rewritten = self._apply_assignments(matched, assignments)
+            mor = self.properties.get("write.update.mode") == "merge-on-read"
+            # V3 row lineage: the rewritten row KEEPS its _row_id (Iceberg
+            # V3 carried-over row ids — incremental consumers can track a
+            # logical row across updates). Its tombstone hides only the
+            # OLD position: the seq-scoped delete join keeps the carried
+            # copy visible.
+            carried = mor and self.format_version >= 3
+            if carried:
+                self._meta["carried_row_ids"] = True
+            return self._change_rows(
+                "update", cur, matched, [rewritten], branch,
+                copy_on_write=not mor, keep_row_ids=carried,
             )
         finally:
             matched.unpersist()
 
     def _apply_assignments(
-        self, df: DataFrame, assignments: dict[str, str | Column]
+        self,
+        df: DataFrame,
+        assignments: dict[str, str | Column],
+        qualifier: str = "",
     ) -> DataFrame:
-        """Apply SET ``col = expr`` projections with each result cast
-        back to the DECLARED column type: SET expressions must not drift
-        the schema (decimal arithmetic widens — amount*1.1 on
-        DECIMAL(10,2) is DECIMAL(13,3); Iceberg casts back). One
-        implementation for both the fresh-id and V3 carried-row paths of
-        ``update_set`` (review finding: the duplicated loops drifted
-        apart in maintenance)."""
-        declared = {f.name: f.dataType for f in self.declared_schema()}
-        for col, expr in assignments.items():
-            value = F.expr(expr) if isinstance(expr, str) else expr
-            if col in declared:
-                value = value.cast(declared[col])
-            df = df.withColumn(col, value)
-        return df
+        """SET ``col = expr, ...`` for UPDATE and MERGE: one projection of
+        the declared columns plus ``_row_id``, every expression evaluated
+        against the PRE-update row (``SET a = b, b = a`` swaps) and cast
+        back to the DECLARED type (decimal arithmetic widens — amount*1.1
+        on DECIMAL(10,2) is DECIMAL(13,3); Iceberg casts back). Column
+        names resolve case-insensitively, as SQL identifiers do; unknown
+        ones raise. ``qualifier`` (``"t."``) picks the target side of a
+        MERGE join for the columns left alone."""
+        declared = self.declared_schema()
+        canon = {f.name.lower(): f.name for f in declared}
+        unknown = [c for c in assignments if c.lower() not in canon]
+        if unknown:
+            raise TableError(f"SET column(s) not in table schema: {unknown}")
+        values = {
+            canon[c.lower()]: F.expr(e) if isinstance(e, str) else e
+            for c, e in assignments.items()
+        }
+        return df.select(
+            *[
+                values[f.name].cast(f.dataType).alias(f.name)
+                if f.name in values
+                else F.col(qualifier + f.name)
+                for f in declared
+            ],
+            F.col(qualifier + _ROW_ID),
+        )
 
     def merge_into(
         self,
@@ -1792,14 +1820,16 @@ class LocalTable:
         not_matched_condition: str | None = None,
     ) -> Snapshot:
         """MERGE INTO target USING source ON keys — the third leg of
-        Iceberg's row-level DML (DELETE/UPDATE/MERGE), MoR semantics:
-        matched target rows get delete entries; their replacements (and
-        not-matched source rows) are appended in one commit.
+        Iceberg's row-level DML (DELETE/UPDATE/MERGE), always
+        merge-on-read: matched target rows are ``gone``; their
+        replacements and the inserted source rows are ``added`` with
+        fresh row ids, in one ``_change_rows``.
 
-        ``when_matched``: "update" (take all source columns), "delete",
-        a dict of SET expressions evaluated against the matched join
-        (source columns win on name clashes), or None (leave matched
-        rows untouched).
+        ``when_matched``: "update" (``SET c = s.c`` for every source
+        column the table has), "delete", a dict of SET expressions
+        evaluated against the matched join (``_apply_assignments``; may
+        use ``t.`` / ``s.`` qualifiers), or None (leave matched rows
+        untouched).
         ``when_not_matched``: "insert" (take all source columns — the
         source must then cover the full schema), a dict of
         ``column -> SQL expression`` implementing
@@ -1817,140 +1847,75 @@ class LocalTable:
         case), AQE otherwise. The join result (bounded by the source
         size in the upsert pattern) is PERSISTED and feeds the delete
         file, the rewrite rows, and the not-matched anti-join, so the
-        target scan executes once per MERGE instead of once per output
-        (round-8 perf item: this was 2-3 table scans per streaming
-        batch). Everything else is appends.
+        target scan executes once per MERGE instead of once per output.
+        Everything else is appends.
         """
+        cols = self.declared_schema().fieldNames()
+        if when_matched == "update":
+            when_matched = {c: F.col(f"s.{c}") for c in cols if c in source.columns}
+        elif when_matched not in ("delete", None) and not isinstance(when_matched, dict):
+            raise TableError(f"bad when_matched: {when_matched!r}")
+        inserts: dict[str, str | Column] | None = None
+        if when_not_matched == "insert":
+            missing = [c for c in cols if c not in source.columns]
+            if missing:
+                raise TableError(
+                    f"when_not_matched='insert' needs all table columns in "
+                    f"source; missing {missing}"
+                )
+            when_not_matched = {c: F.col(c) for c in cols}
+        if isinstance(when_not_matched, dict):
+            # SQL identifiers are case-insensitive: normalize the INSERT
+            # column list to the declared casing before validating
+            canon = {c.lower(): c for c in cols}
+            unknown = [c for c in when_not_matched if c.lower() not in canon]
+            if unknown:
+                raise TableError(
+                    f"INSERT column(s) not in table schema: {unknown}"
+                )
+            inserts = {canon[c.lower()]: v for c, v in when_not_matched.items()}
+        elif when_not_matched is not None:
+            raise TableError(f"bad when_not_matched: {when_not_matched!r}")
         cur = self.current_snapshot()
-        declared = self.declared_schema()
-        cols = declared.fieldNames()
-        t = self._scan_raw(cur).alias("t")
         s = source.alias("s")
-        cond = F.lit(True)
-        for k in on:
-            cond = cond & (F.col(f"t.{k}") == F.col(f"s.{k}"))
-        matched_raw = t.join(s, cond, "inner").persist()
-        # try/finally: a CommitConflictError (the contended-writer
-        # case this persist exists to make cheap to retry) or any
-        # validation raise must not leak the cached join (round-8
-        # review finding)
+        cond = functools.reduce(
+            Column.__and__, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on]
+        )
+        matched_raw = self._scan_raw(cur).alias("t").join(s, cond).persist()
+        # try/finally: a CommitConflictError (the contended-writer case
+        # this persist exists to make cheap to retry) or any validation
+        # raise must not leak the cached join
         try:
             matched = matched_raw
             if matched_condition:
                 matched = matched.filter(F.expr(matched_condition))
-            # not-matched source rows = source anti-joined against the
-            # (persisted, batch-bounded) MATCHED KEYS — not against the full
-            # table scan, which would re-execute the MoR merge per output.
-            # Key semantics are identical: a null-keyed source row matches
-            # nothing under equality either way and stays "not matched".
-            matched_keys = matched_raw.select(
-                *[F.col(f"s.{k}").alias(k) for k in on]
-            ).distinct()
-            new_rows = []
-            if when_matched == "update":
-                # source columns win; table fills the rest (classic upsert)
-                new_rows.append(
-                    matched.select(
-                        *[
-                            F.col(f"s.{c}" if c in source.columns else f"t.{c}").alias(c)
-                            for c in cols
-                        ]
-                    )
-                )
-            elif isinstance(when_matched, dict):
-                # SET expressions may use t.col / s.col qualifiers
-                updated = matched
-                assigned = {}
-                for col, expr in when_matched.items():
-                    value = F.expr(expr) if isinstance(expr, str) else expr
-                    value = value.cast(declared[col].dataType)
-                    tmp = f"__set_{col}"
-                    updated = updated.withColumn(tmp, value)
-                    assigned[col] = tmp
-                new_rows.append(
-                    updated.select(
-                        *[
-                            F.col(assigned[c]).alias(c)
-                            if c in assigned
-                            else F.col(f"t.{c}").alias(c)
-                            for c in cols
-                        ]
-                    )
-                )
-            elif when_matched not in ("delete", None):
-                raise TableError(f"bad when_matched: {when_matched!r}")
-            if when_not_matched == "insert":
-                missing = [c for c in cols if c not in source.columns]
-                if missing:
-                    raise TableError(
-                        f"when_not_matched='insert' needs all table columns in "
-                        f"source; missing {missing}"
-                    )
-                unmatched_src = s.join(matched_keys, on, "left_anti")
+            added = []
+            if isinstance(when_matched, dict):
+                added.append(self._apply_assignments(matched, when_matched, "t."))
+            if inserts is not None:
+                # not-matched source rows = source anti-joined against the
+                # (persisted, batch-bounded) MATCHED KEYS — not against the
+                # full table scan, which would re-execute the MoR merge. A
+                # null-keyed source row matches nothing and stays "not
+                # matched" either way.
+                matched_keys = matched_raw.select(
+                    *[F.col(f"s.{k}").alias(k) for k in on]
+                ).distinct()
+                unmatched = s.join(matched_keys, on, "left_anti")
                 if not_matched_condition:
-                    unmatched_src = unmatched_src.filter(
-                        F.expr(not_matched_condition)
-                    )
-                new_rows.append(unmatched_src.select(*cols))
-            elif isinstance(when_not_matched, dict):
-                # SQL identifiers are case-insensitive: normalize the INSERT
-                # column list to the declared casing before validating
-                canon = {c.lower(): c for c in cols}
-                unknown = [
-                    c for c in when_not_matched if c.lower() not in canon
-                ]
-                if unknown:
-                    raise TableError(
-                        f"INSERT column(s) not in table schema: {unknown}"
-                    )
-                when_not_matched = {
-                    canon[c.lower()]: v for c, v in when_not_matched.items()
-                }
-                unmatched_src = s.join(matched_keys, on, "left_anti")
-                if not_matched_condition:
-                    unmatched_src = unmatched_src.filter(
-                        F.expr(not_matched_condition)
-                    )
-                new_rows.append(
-                    unmatched_src.select(
+                    unmatched = unmatched.filter(F.expr(not_matched_condition))
+                added.append(
+                    unmatched.select(
                         *[
-                            (
-                                F.expr(when_not_matched[c])
-                                if c in when_not_matched
-                                else F.lit(None)
-                            )
-                            .cast(declared[c].dataType)
-                            .alias(c)
-                            for c in cols
+                            (F.expr(v) if isinstance(v, str) else v).alias(c)
+                            for c, v in inserts.items()
                         ]
                     )
                 )
-            elif when_not_matched is not None:
-                raise TableError(f"bad when_not_matched: {when_not_matched!r}")
-
-            snap_id = _next_snapshot_id(self._meta)
-            delete_dirs = list(cur.delete_dirs)
-            data_dirs = list(cur.data_dirs)
+            gone = None
             if when_matched is not None:
-                delete_dirs.append(
-                    self._write_delete_dir(
-                        matched.select(F.col(f"t.{_ROW_ID}").alias(_ROW_ID)),
-                        snap_id,
-                    )
-                )
-            fresh: dict[str, Any] = {}
-            if new_rows:
-                data_path, fresh = self._write_new_rows(
-                    _union_all(new_rows), snap_id
-                )
-                data_dirs.append(data_path)
-            return self._commit(
-                "merge",
-                data_dirs,
-                delete_dirs,
-                eq_deletes=cur.eq_deletes,
-                **fresh,
-            )
+                gone = matched.select(F.col(f"t.{_ROW_ID}").alias(_ROW_ID))
+            return self._change_rows("merge", cur, gone, added)
         finally:
             matched_raw.unpersist()
 
@@ -2163,24 +2128,31 @@ class LocalTable:
         dirs: list[str],
         ddl: str,
         seq: int,
-        seq_tag: Column | None = None,
+        seq_tag: str | None = None,
     ) -> DataFrame:
         """Managed ``dirs`` (one, or several unpartitioned) written under
         the layout of write sequence ``seq``, with an EXPLICIT schema: a
         zero-row partitioned write leaves no file to infer one from, and
         files written before an ADD COLUMN null-fill it. Columns read
         their physical name at ``seq`` (the Iceberg field-id lookup,
-        emulated); ``seq_tag`` becomes ``_seq``."""
+        emulated); ``seq_tag`` (SQL, ``_seq_tag``) becomes ``_seq``. The
+        projection also drops partition columns of an older spec that
+        Spark discovers from the dir layout."""
         hist = [
             (self._physical_name(f.name, seq), f)
             for f in self.declared_schema(ddl)
         ]
         if any(h != f.name for h, f in hist):
             ddl = ", ".join(f"{h} {f.dataType.simpleString()}" for h, f in hist)
-        cols = [F.col(h).alias(f.name) for h, f in hist]
+        cols = [
+            _q(h) if h == f.name else f"{_q(h)} AS {_q(f.name)}"
+            for h, f in hist
+        ]
         if seq_tag is not None:
-            cols.append(seq_tag.alias("_seq"))
-        df = _union_all([r.select(*cols) for r in self._relations(ddl, dirs)])
+            cols.append(f"{seq_tag} AS _seq")
+        df = _union_all(
+            [r.selectExpr(*cols) for r in self._relations(ddl, dirs)]
+        )
         return self._apply_initial_defaults(df, seq)
 
     def _relations(self, ddl: str, dirs: list[str]) -> list[DataFrame]:
@@ -2256,10 +2228,14 @@ class LocalTable:
         ``d`` read through ``snap``: ``snap``'s override for ``d`` (a
         cherry-picked dir adopts the PUBLISH snapshot's seq, as Iceberg
         gives picked files the new sequence number; the staging branch
-        keeps the staged seq), else the seq in the dir name. Layout
-        (schema, renames, spec) always follows the dir-name seq: files
-        keep the layout they were WRITTEN with."""
-        return int(snap.seq_overrides.get(d, self._parse_dir_seq(d)))
+        keeps the staged seq), else for an ``add_files`` dir its import
+        commit's seq (Iceberg gives added files the add commit's sequence
+        number, so an earlier equality delete never hits them), else the
+        seq in the dir name. Layout (schema, renames, spec) always follows
+        the dir-name seq: files keep the layout they were WRITTEN with."""
+        imported = self._meta.get("imported_dirs", {}).get(d, {})
+        seq = imported.get("seq", self._parse_dir_seq(d))
+        return int(snap.seq_overrides.get(d, seq))
 
     def _read_data(
         self,
@@ -2333,9 +2309,9 @@ class LocalTable:
             by_key.setdefault(key, []).append(e["dir"])
         return _union_all(
             [
-                r.select(
-                    *[F.col(c).alias(f"_eq_{c}") for c in cols],
-                    _seq_tag(key).alias("_eq_seq"),
+                r.selectExpr(
+                    *[f"{_q(c)} AS {_q('_eq_' + c)}" for c in cols],
+                    f"{_seq_tag(key)} AS _eq_seq",
                 )
                 for key, eq_dirs in by_key.items()
                 for r in self._relations(ddl, eq_dirs)
@@ -2346,9 +2322,12 @@ class LocalTable:
         """Positional / ``-dv`` delete ``dirs`` (``_relations``):
         ``_row_id`` and ``_dseq``, the seq of each file's dir name
         (``10**9``, newer than any data, when it encodes none)."""
-        dseq = _seq_tag(None, default=10**9).alias("_dseq")
+        dseq = f"{_seq_tag(None, default=10**9)} AS _dseq"
         return _union_all(
-            [r.select(_ROW_ID, dseq) for r in self._relations(f"{_ROW_ID} long", dirs)]
+            [
+                r.selectExpr(_ROW_ID, dseq)
+                for r in self._relations(f"{_ROW_ID} long", dirs)
+            ]
         )
 
     @staticmethod
@@ -2373,15 +2352,13 @@ class LocalTable:
         delete side is broadcast; the data side never shuffles."""
         for cols, entries in self._eq_sets(snap.eq_deletes).items():
             keys = self._read_eq_deletes(list(cols), entries)
-            cond = _keys_match(cols) & (F.col("_seq") < F.col("_eq_seq"))
+            cond = F.expr(f"{_keys_match(cols)} AND _seq < _eq_seq")
             data = data.join(F.broadcast(keys), cond, "left_anti")
         if snap.delete_dirs:
             dels = self._read_pos_deletes(snap.delete_dirs).withColumnRenamed(
                 _ROW_ID, "_del_row_id"
             )
-            cond = (F.col(_ROW_ID) == F.col("_del_row_id")) & (
-                F.col("_seq") < F.col("_dseq")
-            )
+            cond = F.expr(f"{_ROW_ID} = _del_row_id AND _seq < _dseq")
             data = data.join(F.broadcast(dels), cond, "left_anti")
         return data
 
@@ -2419,14 +2396,8 @@ class LocalTable:
         if data_filter:
             data = data.filter(data_filter)
         data = self._apply_deletes(snap, data)
-        declared = self.declared_schema()
-        projection = [
-            F.col(f.name)
-            if f.name in data.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in declared
-        ]
-        return data.select(*projection, F.col(_ROW_ID))
+        names = self.declared_schema().fieldNames()
+        return data.selectExpr(*[_q(n) for n in names], _ROW_ID)
 
     def scan(
         self,
@@ -3106,7 +3077,7 @@ class LocalTable:
                                     F.broadcast(
                                         self._read_eq_deletes(list(cols), es)
                                     ),
-                                    _keys_match(cols),
+                                    F.expr(_keys_match(cols)),
                                     "left_semi",
                                 )
                                 for cols, es in sets.items()

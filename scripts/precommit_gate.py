@@ -62,6 +62,10 @@ SMOKE_QUERIES = [
     "i23_partition_evolution",
     # MoR scan, grouped side: several eq deletes with a re-insert
     "i45_eq_delete_cdc",
+    # row-level change step: MERGE with dict SET and WHEN conditions
+    "i27_conditional_merge",
+    # row-level change step: partitioned INSERT OVERWRITE
+    "i30_insert_overwrite",
 ]
 
 

@@ -126,3 +126,23 @@ def test_add_files_survives_column_rename(spark, catalog, external_dir):
     t.rename_column("name", "full_name")
     rows = {r.id: r.full_name for r in t.scan().collect()}
     assert rows[3] == "row3" and len(rows) == 20
+
+
+def test_equality_delete_before_import_spares_imported_rows(
+    spark, catalog, tmp_path
+):
+    """An imported dir takes its import commit's sequence number: an
+    equality delete committed BEFORE ``add_files`` does not hit imported
+    rows with a matching key (Iceberg's added-files sequence rule)."""
+    t = catalog.create_table("mig_db", "eq_seq", "id BIGINT, name STRING")
+    t.insert_values([(1, "old"), (2, "keep")])
+    t.delete_by_keys(spark.createDataFrame([(1,)], "id BIGINT"), ["id"])
+    src = str(tmp_path / "late_import")
+    spark.createDataFrame(
+        [(1, "imported-after-delete")], "id BIGINT, name STRING"
+    ).write.parquet(src)
+    t.add_files(src)
+    assert sorted(tuple(r) for r in t.scan().collect()) == [
+        (1, "imported-after-delete"),
+        (2, "keep"),
+    ]

@@ -409,3 +409,26 @@ def test_merge_column_list_case_insensitive(spark, catalog):
     )
     rows = engine.execute_one("SELECT id, v FROM mdb.ci").df.collect()
     assert [(r.id, r.v) for r in rows] == [(1, 2)]
+
+
+def test_merge_aligns_source_types_to_declared_schema(spark, catalog):
+    """An ``INT/DOUBLE`` source merged into ``BIGINT/DECIMAL(10,2)``
+    writes the declared types, so later scans still read the table."""
+    from decimal import Decimal
+
+    t = catalog.create_table("mdb", "types", "id BIGINT, amount DECIMAL(10,2)")
+    t.insert_values([(1, Decimal("1.00")), (3, Decimal("3.00"))])
+    src = spark.createDataFrame([(1, 2.5), (2, 3.25)], "id INT, amount DOUBLE")
+    t.merge_into(src, ["id"])
+    assert sorted((r.id, r.amount) for r in t.scan().collect()) == [
+        (1, Decimal("2.50")),
+        (2, Decimal("3.25")),
+        (3, Decimal("3.00")),
+    ]
+    (new_dir,) = t.current_snapshot().added_dirs
+    written = spark.read.parquet(new_dir).schema
+    assert [(f.name, f.dataType.simpleString()) for f in written] == [
+        ("id", "bigint"),
+        ("amount", "decimal(10,2)"),
+        ("_row_id", "bigint"),
+    ]

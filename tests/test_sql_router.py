@@ -756,3 +756,14 @@ def test_new_metadata_tables_routed(spark, tmp_path):
         EngineSQL(catalog, principal="analyst").execute_one(
             "SELECT count(*) AS n FROM mt.t.all_data_files"
         )
+
+
+def test_update_swap_through_sql(engine):
+    """``UPDATE ... SET a = b, b = a`` swaps through the SQL gateway."""
+    engine.execute(
+        "CREATE TABLE glue_catalog.sw_db.t (id INT, a INT, b INT) USING iceberg"
+    )
+    engine.execute("INSERT INTO glue_catalog.sw_db.t VALUES (1, 10, 20), (2, 1, 2)")
+    engine.execute("UPDATE glue_catalog.sw_db.t SET a = b, b = a WHERE id = 1")
+    rows = engine.execute_one("SELECT id, a, b FROM sw_db.t ORDER BY id").df
+    assert [tuple(r) for r in rows.collect()] == [(1, 20, 10), (2, 1, 2)]

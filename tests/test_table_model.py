@@ -1,8 +1,9 @@
 """Property-based model test for the mutable-table module (§2.I).
 
-Hypothesis drives random DML programs (insert / MoR delete / MoR update /
+Hypothesis drives random DML programs (insert / delete / update / merge /
 compaction / snapshot expiry / V2->V3 upgrade / rename column / widen
-column) against a ``LocalTable``
+column; delete and update merge-on-read or copy-on-write, drawn per
+example) against a ``LocalTable``
 and an in-memory list-of-rows model applying the same relational
 semantics. After every operation the table scan must equal the model —
 including straight through compaction (invisible by contract) and the
@@ -25,17 +26,18 @@ from iceberg_v2_to_v3_upgrade_spark.tables.catalog import LocalCatalog
 CATEGORIES = ("electronics", "clothing", "furniture")
 
 _ids = st.integers(min_value=1, max_value=30)
+_row = st.tuples(
+    _ids,
+    st.sampled_from(CATEGORIES),
+    st.integers(min_value=0, max_value=99900),
+)
 _insert = st.tuples(
-    st.just("insert"),
-    st.lists(
-        st.tuples(
-            _ids,
-            st.sampled_from(CATEGORIES),
-            st.integers(min_value=0, max_value=99900),
-        ),
-        min_size=1,
-        max_size=5,
-    ),
+    st.just("insert"), st.lists(_row, min_size=1, max_size=5)
+)
+# MERGE source: one row per key (upsert on id)
+_merge = st.tuples(
+    st.just("merge"),
+    st.lists(_row, min_size=1, max_size=4, unique_by=lambda r: r[0]),
 )
 _delete = st.tuples(
     st.just("delete"), st.lists(_ids, min_size=1, max_size=4, unique=True)
@@ -60,7 +62,7 @@ _evolve = st.tuples(
 
 _program = st.lists(
     st.one_of(
-        _insert, _delete, _update, _compact, _expire, _upgrade,
+        _insert, _delete, _update, _merge, _compact, _expire, _upgrade,
         _rename, _widen, _evolve,
     ),
     min_size=3,
@@ -80,6 +82,15 @@ def _apply_model(model: list[dict], op: str, arg) -> None:
         for r in model:
             if r["category"] == arg:
                 r["amount"] = round(r["amount"] + 1.5, 2)
+    elif op == "merge":
+        src = {id_: (cat, cents / 100.0) for id_, cat, cents in arg}
+        for r in model:
+            if r["id"] in src:
+                r["category"], r["amount"] = src[r["id"]]
+        live = {r["id"] for r in model}
+        for id_, (cat, amount) in src.items():
+            if id_ not in live:
+                model.append({"id": id_, "category": cat, "amount": amount})
     # compact / expire / upgrade / rename / widen / evolve: semantically
     # invisible (rename/widen change only the schema; partition evolution
     # changes only the LAYOUT of future writes, never row values)
@@ -102,8 +113,13 @@ def _model_rows(model: list[dict]) -> list[tuple]:
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(program=_program)
-def test_random_dml_program_matches_model(spark, tmp_path_factory, program):
+@given(
+    program=_program,
+    mode=st.sampled_from(["merge-on-read", "copy-on-write"]),
+)
+def test_random_dml_program_matches_model(
+    spark, tmp_path_factory, program, mode
+):
     wh = tmp_path_factory.mktemp("model_wh")
     catalog = LocalCatalog(spark, str(wh))
     t = catalog.create_table(
@@ -113,8 +129,8 @@ def test_random_dml_program_matches_model(spark, tmp_path_factory, program):
         partition_by=["category"],
         properties={
             "format-version": "2",
-            "write.delete.mode": "merge-on-read",
-            "write.update.mode": "merge-on-read",
+            "write.delete.mode": mode,
+            "write.update.mode": mode,
         },
     )
     model: list[dict] = []
@@ -133,6 +149,16 @@ def test_random_dml_program_matches_model(spark, tmp_path_factory, program):
             t.update_set(
                 {amount_col: f"round({amount_col} + 1.5, 2)"},
                 f"category = '{arg}'",
+            )
+        elif op == "merge":
+            # an INT id merged into the (possibly widened) table: the
+            # write aligns the source to the declared types
+            t.merge_into(
+                spark.createDataFrame(
+                    [(id_, cat, cents / 100.0) for id_, cat, cents in arg],
+                    f"id INT, category STRING, {amount_col} DOUBLE",
+                ),
+                ["id"],
             )
         elif op == "compact":
             t.rewrite_data_files(rewrite_all=True)
@@ -155,7 +181,7 @@ def test_random_dml_program_matches_model(spark, tmp_path_factory, program):
                 t.evolve_partition_spec(arg)
         _apply_model(model, op, arg)
         assert _table_rows(t, amount_col) == _model_rows(model), (
-            f"divergence after {op} in program {program}"
+            f"divergence after {op} in program {program} ({mode})"
         )
     if t.format_version == 3:
         assert "next-row-id" in t._meta["properties"]

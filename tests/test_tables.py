@@ -157,6 +157,37 @@ def test_copy_on_write_modes(catalog):
     assert amounts[1] == pytest.approx(201.0)
 
 
+@pytest.mark.parametrize("mode", ["merge-on-read", "copy-on-write"])
+def test_update_set_reads_pre_update_row(catalog, mode):
+    """Every SET expression sees the row as it was before the UPDATE, so
+    ``SET a = b, b = a`` swaps — under both write modes."""
+    t = catalog.create_table(
+        "demo_db",
+        "swap_" + mode.split("-")[0],
+        "id INT, a INT, b INT",
+        properties={"write.update.mode": mode},
+    )
+    t.insert_values([(1, 10, 20), (2, 30, 40)])
+    t.update_set({"a": "b", "b": "a"}, "id = 1")
+    assert sorted(tuple(r) for r in t.scan().collect()) == [
+        (1, 20, 10),
+        (2, 30, 40),
+    ]
+
+
+def test_update_set_resolves_declared_columns(catalog):
+    """SET names resolve case-insensitively against the declared schema;
+    an unknown one raises instead of committing an undeclared column
+    that a later ADD COLUMN of that name would surface as data."""
+    t = catalog.create_table("demo_db", "set_names", "id INT, amount DOUBLE")
+    t.insert_values([(1, 1.0)])
+    with pytest.raises(TableError, match="not in table schema"):
+        t.update_set({"nope": "7"}, "id = 1")
+    t.update_set({"AMOUNT": "amount + 1"}, "id = 1")
+    t.add_column("nope", "INT")
+    assert [tuple(r) for r in t.scan().collect()] == [(1, 2.0, None)]
+
+
 def test_incremental_changes(catalog, demo_table):
     t = demo_table
     s0 = t.current_snapshot().id          # after the 10-row insert
