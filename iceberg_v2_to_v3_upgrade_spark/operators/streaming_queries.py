@@ -384,10 +384,11 @@ def l5_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ext", "streaming", "dml"),
 )
 def l7_stream_upsert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC-upsert landing into the mutable-table module: the
-    event stream MERGEs into a snapshot-versioned MoR table per micro-batch
-    (foreachBatch, last-writer-wins by ts within a batch), then the table
-    is scanned. Because the landing zone replays in event-time order,
+    """Streaming CDC-upsert landing into the mutable-table module: each
+    micro-batch of the event stream upserts into a snapshot-versioned MoR
+    table (foreachBatch, last-writer-wins by ts within a batch; one
+    equality delete of the batch's keys plus an append, no table scan),
+    then the table is scanned. Because the landing zone replays in event-time order,
     the final table state is exactly "each user's latest event" — which the
     oracle states as one window over the raw fixture.
 
@@ -454,13 +455,13 @@ def l7_stream_upsert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l8_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op-aware streaming CDC apply (debezium-style I/U/D): 'purchase'
     events are treated as the DELETE op for their user, everything else as
-    upsert. Deletes land as equality delete files (O(1) write, no table
-    scan); upserts as one MERGE per batch. With event-time-ordered replay,
-    the final state is "each user's latest event, unless it was a delete" —
-    stated directly by the oracle.
+    upsert. Every key of a batch lands in one equality delete file and the
+    upserts in one data dir, with no table scan. With event-time-ordered
+    replay, the final state is "each user's latest event, unless it was a
+    delete" — stated directly by the oracle.
 
-    The applied changelog is the table's commit history: up to two
-    snapshot commits per batch (delete + merge), time-travelable."""
+    The applied changelog is the table's commit history: one snapshot
+    commit per batch, time-travelable."""
     from iceberg_v2_to_v3_upgrade_spark.streaming.ingest import (
         stream_cdc_into_table,
     )

@@ -1,17 +1,28 @@
 """Streaming ingestion into the mutable-table module.
 
 ``foreachBatch`` bridges Structured Streaming and the snapshot-versioned
-LocalTable: each micro-batch commits one append snapshot, after which the
+LocalTable: each micro-batch commits one snapshot, after which the
 table's full DML surface — MoR deletes/updates, compaction, time travel —
 applies to streamed data.
 
+Keyed streams (``stream_upsert_into_table``, ``stream_cdc_into_table``)
+keep one row per key. Each batch is Iceberg's upsert-mode write (the one
+Flink's sink makes with ``write.upsert.enabled``): ONE commit holding an
+equality delete of every key in the deduplicated batch plus a data dir
+of its non-delete rows (``LocalTable.delete_by_keys(..., added=...)``).
+The target is never read. A key that had several rows ends with one.
+Because equality deletes key on them, the key columns of a
+stream-upserted table cannot be renamed while any snapshot carries such a
+delete (compaction, then snapshot expiry, retires them).
+
 Delivery semantics: the checkpoint makes each batch apply AT-LEAST-once —
 a batch whose table commit landed but whose offset commit did not is
-re-run on restart. The MERGE/delete paths below replay idempotently
-(same keys -> same final rows, one extra history commit); the blind
-append in ``stream_into_table`` does NOT — a replayed batch duplicates
-its rows, the standard foreachBatch caveat (dedup on batch_id downstream
-if exact-once matters).
+re-run on restart. The keyed paths replay idempotently (a replayed batch
+deletes its own keys again and re-appends the same rows: same final
+rows, one extra history commit); the blind append in
+``stream_into_table`` does NOT — a replayed batch duplicates its rows,
+the standard foreachBatch caveat (dedup on batch_id downstream if
+exact-once matters).
 
 This is the streaming counterpart of the reference's INSERT path: a
 continuously appended Iceberg table instead of a one-shot VALUES batch.
@@ -40,8 +51,8 @@ def _writer_lease(root: str):
     """Coarse per-table writer lease for streaming batches (flock on
     ``<root>/.writer.lock`` — distinct from the fine-grained commit lock
     inside ``_commit``, which only protects the metadata swap). Without
-    it, two streams racing MERGE batches each redo the full batch apply
-    (scan + join + delete-file write) per CommitConflictError, and under
+    it, two streams racing keyed batches each redo the full batch apply
+    (delete-file and data writes) per CommitConflictError, and under
     load a batch can lose every retry to the other stream's steady
     commits. With it, racing batch APPLIES serialize up front: blocking
     on a lease costs the same wall-clock as the retry ping-pong but does
@@ -61,13 +72,14 @@ def _apply_with_retry(table: LocalTable, apply) -> None:
 
     Two concurrent streams landing in one table each hold a foreachBatch
     closure over a handle that the *other* stream's commits turn stale.
-    Staleness matters twice for MERGE/CDC batches:
+    Staleness matters twice for keyed batches:
 
-    - semantically: the matched-join must see the other writer's rows or
-      an upsert of an existing key would blind-insert a duplicate — so
-      every batch re-reads metadata (one JSON read) instead of reusing
-      the launch-time handle;
-    - at commit: two MERGEs both write delete files, which the commit
+    - semantically: a batch's equality delete takes its sequence number
+      from the handle's head and hides only rows committed below it. On
+      a stale handle it would miss the other writer's newer rows of the
+      same keys and leave two rows per key — so every batch re-reads
+      metadata (one JSON read) instead of reusing the launch-time handle;
+    - at commit: two batches both write delete files, which the commit
       protocol refuses to auto-rebase (``tables/table.py::_commit``) —
       the batch retries on a freshly loaded handle, so interleaved
       batches serialize instead of failing the stream or losing a batch.
@@ -150,26 +162,30 @@ def _keyed_batch_apply(
     op_col: str | None = None,
 ):
     """The ``foreachBatch`` function of a keyed stream: the last writer
-    per key wins; with an ``op_col`` the 'D' rows land as one equality
-    delete, the rest as one upsert MERGE. An empty side commits nothing."""
+    per key wins, then ONE ``delete_by_keys`` commit deletes every key of
+    the batch (with an ``op_col``, the 'D' rows' keys too) and appends the
+    non-'D' rows. Rows whose op is NULL are ignored. A batch of only 'D'
+    rows commits a plain delete; an empty batch commits nothing."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         # persisted: the window dedup runs once for every consumer
-        # (emptiness probes, the delete-file write, the merge join)
+        # (the probe, the delete-file write, the data write)
         b = _dedup_last_writer(batch_df, keys, order_col, drop_after_dedup)
         b = b.persist()
         try:
-            ups = b
+            src, ups, upsert = b, b, F.lit(True)
             if op_col is not None:
-                dels = b.filter(F.col(op_col) == "D").select(*keys)
-                ups = b.filter(F.col(op_col) != "D").drop(op_col)
-                if not dels.isEmpty():
-                    _apply_with_retry(table, lambda t: t.delete_by_keys(dels, keys))
-            if not ups.isEmpty():
+                src = b.filter(F.col(op_col).isNotNull())
+                ups = src.filter(F.col(op_col) != "D").drop(op_col)
+                upsert = F.col(op_col) != "D"
+            # one probe, no shuffle: None for an empty batch, else whether
+            # any row is an upsert (they sort first)
+            top = src.select(upsert.alias("u")).orderBy(F.desc("u")).first()
+            if top is not None:
                 _apply_with_retry(
                     table,
-                    lambda t: t.merge_into(
-                        ups, keys, when_matched="update", when_not_matched="insert"
+                    lambda t: t.delete_by_keys(
+                        src.select(*keys), keys, added=ups if top.u else None
                     ),
                 )
         finally:
@@ -187,12 +203,14 @@ def stream_upsert_into_table(
     available_now: bool = True,
     drop_after_dedup: list[str] | None = None,
 ):
-    """Streaming upsert (CDC-apply): each micro-batch MERGEs into the
-    table — matched keys update, new keys insert. ``order_col`` picks the
-    within-batch winner per key (last-writer-wins by that column or
-    column list — pass a unique tie-break column for determinism under
-    equal timestamps), so a batch carrying several versions of one key
-    applies cleanly.
+    """Streaming upsert (CDC-apply): each micro-batch replaces the rows
+    of its keys — new keys insert, existing keys update — in one
+    equality-delete-plus-append commit that never reads the table (see
+    module docstring). ``order_col`` picks the within-batch winner per
+    key (last-writer-wins by that column or column list — pass a unique
+    tie-break column for determinism under equal timestamps), so a batch
+    carrying several versions of one key applies cleanly. The stream must
+    carry every table column; its other columns are ignored.
 
     This is the standard streaming-CDC landing pattern: idempotent-replay
     per batch via the checkpoint (see module docstring), and the table
@@ -216,12 +234,13 @@ def stream_cdc_into_table(
     """Full CDC apply: the stream carries an op column ('I'nsert /
     'U'pdate / 'D'elete, debezium-style). Per micro-batch, the LAST op
     per key wins (by ``order_col`` — a column or column list; pass a
-    unique tie-break column for determinism under equal timestamps);
-    deletes land as EQUALITY delete files (no table scan — the
-    O(1)-write flavor built for exactly this), upserts as one MERGE.
+    unique tie-break column for determinism under equal timestamps).
+    Every key of the batch lands in one EQUALITY delete file (no table
+    scan) and the 'I'/'U' rows in one data dir, in one commit per batch
+    (see module docstring); rows with a NULL op are ignored.
 
-    Two commits per batch worst-case (delete + merge), each snapshot-
-    versioned — the table's history is the applied changelog.
+    Each batch is one snapshot — the table's history is the applied
+    changelog.
     """
     apply = _keyed_batch_apply(table, keys, order_col, drop_after_dedup, op_col)
     return _start(stream_df, apply, checkpoint_dir, available_now)

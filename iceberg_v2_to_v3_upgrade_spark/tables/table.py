@@ -1484,15 +1484,19 @@ class LocalTable:
     ) -> DataFrame:
         """Project/cast incoming rows to the declared schema (missing
         columns null-fill — schema evolution; extras are rejected).
-        ``_row_id`` is carried along only under ``keep_row_ids``."""
+        Column names match case-insensitively, as SQL identifiers do, and
+        are written in the declared casing. ``_row_id`` is carried along
+        only under ``keep_row_ids``."""
         declared = self.declared_schema()
-        present = set(df.columns)
-        extra = present - set(declared.fieldNames()) - {_ROW_ID}
+        present = {c.lower(): c for c in df.columns}
+        extra = set(present) - {f.name.lower() for f in declared} - {_ROW_ID}
         if extra:
-            raise TableError(f"columns not in table schema: {sorted(extra)}")
+            raise TableError(
+                f"columns not in table schema: {sorted(present[c] for c in extra)}"
+            )
         cols = [
-            F.col(f.name).cast(f.dataType)
-            if f.name in present
+            F.col(present[f.name.lower()]).cast(f.dataType).alias(f.name)
+            if f.name.lower() in present
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in declared
         ]
@@ -1509,26 +1513,35 @@ class LocalTable:
         branch: str | None = None,
         copy_on_write: bool = False,
         keep_row_ids: bool = False,
+        eq_cols: list[str] | None = None,
     ) -> Snapshot:
         """The one commit step under every row-level change: INSERT,
-        partitioned INSERT OVERWRITE, DELETE, UPDATE and MERGE.
+        partitioned INSERT OVERWRITE, DELETE, UPDATE, MERGE and the
+        equality delete / upsert of ``delete_by_keys``.
 
         ``gone`` holds the rows of ``cur`` (with ``_row_id``) that stop
         being visible, or None; ``added`` the frames that appear.
 
         - merge-on-read: one positional delete dir of ``gone``'s ids and
           one data dir of ``added``; ``cur``'s files stay cited.
+        - equality form (``eq_cols``, merge-on-read only): ``gone`` holds
+          KEY VALUES, written as one ``-eq`` delete dir whose entry's seq
+          is this snapshot's id. It hides every row of ``cur`` with an
+          equal key (a NULL key hides nothing) and none of ``added``,
+          which commits under the same seq. No row of ``cur`` is read.
         - copy-on-write: one data dir of ``cur``'s survivors (``left_anti``
           on ``_row_id`` against ``gone``) plus ``added``, and nothing
           else cited — no delete files.
 
         Every written frame is aligned to the declared schema
-        (``_align_to_schema``: cast, null-fill, extras rejected). Row ids:
-        ``keep_row_ids`` writes each row's own ``_row_id`` (V3 carried
-        lineage, copy-on-write DELETE); otherwise the whole dir gets
-        fresh ids. One dir never mixes the two: a rebase onto a
-        concurrent writer shifts a fresh dir as a whole."""
+        (``_align_to_schema``: cast, null-fill, extras rejected; equality
+        keys are cast too). Row ids: ``keep_row_ids`` writes each row's
+        own ``_row_id`` (V3 carried lineage, copy-on-write DELETE);
+        otherwise the whole dir gets fresh ids. One dir never mixes the
+        two: a rebase onto a concurrent writer shifts a fresh dir as a
+        whole."""
         snap_id = _next_snapshot_id(self._meta)
+        eq_deletes = [] if copy_on_write else list(cur.eq_deletes)
         if copy_on_write:
             survivors = self._scan_raw(cur)
             if gone is not None:
@@ -1536,7 +1549,16 @@ class LocalTable:
             added, data_dirs, delete_dirs = [survivors, *added], [], []
         else:
             data_dirs, delete_dirs = list(cur.data_dirs), list(cur.delete_dirs)
-            if gone is not None:
+            if gone is not None and eq_cols:
+                types = {
+                    f.name: f.dataType.simpleString() for f in self.declared_schema()
+                }
+                keys = gone.selectExpr(
+                    *[f"CAST({_q(c)} AS {types[c]}) AS {_q(c)}" for c in eq_cols]
+                )
+                path = self._write_delete_dir(keys, snap_id, "-eq")
+                eq_deletes.append({"dir": path, "cols": list(eq_cols), "seq": snap_id})
+            elif gone is not None:
                 delete_dirs.append(
                     self._write_delete_dir(gone.select(_ROW_ID), snap_id)
                 )
@@ -1550,7 +1572,7 @@ class LocalTable:
             data_dirs,
             delete_dirs,
             branch=branch,
-            eq_deletes=[] if copy_on_write else cur.eq_deletes,
+            eq_deletes=eq_deletes,
             **fresh,
         )
 
@@ -1710,30 +1732,48 @@ class LocalTable:
         keys_df: DataFrame,
         eq_cols: list[str],
         branch: str | None = None,
+        added: DataFrame | None = None,
     ) -> Snapshot:
         """Equality delete (Iceberg's second MoR delete flavor, the one
-        streaming CDC writers emit): append a delete file holding KEY
-        VALUES instead of row positions. At read time the keys anti-join
-        data committed BEFORE this delete's sequence number — rows
-        inserted later with the same key are NOT deleted. O(1) write cost
-        per key: no scan of the table happens here at all (the whole
-        point vs ``delete_where``, which must find matching positions).
+        streaming CDC writers emit): one ``_change_rows`` that appends a
+        delete file holding KEY VALUES instead of row positions. At read
+        time the keys anti-join data committed BEFORE this delete's
+        sequence number — rows inserted later with the same key are NOT
+        deleted. No scan of the table happens here at all (the whole
+        point vs ``delete_where``, which must find matching positions);
+        duplicate keys are harmless, every reader of the keys is a semi-
+        or anti-join.
+
+        ``added``: rows committed in the SAME snapshot, which the delete
+        does not hide — Iceberg's upsert-mode write (Flink's
+        ``write.upsert.enabled``): delete every key, append the new rows,
+        operation ``"merge"``. Each key then has exactly the added rows,
+        however many rows it had before. ``added`` must carry every table
+        column (an upsert replaces whole rows); its other columns are
+        ignored. Its rows get fresh row ids. Names resolve
+        case-insensitively. Key columns that any snapshot's equality
+        delete names cannot be renamed (``rename_column``).
         """
-        missing = set(eq_cols) - set(self.declared_schema().fieldNames())
+        canon = {f.name.lower(): f.name for f in self.declared_schema()}
+        missing = [c for c in eq_cols if c.lower() not in canon]
         if missing:
             raise TableError(f"equality columns not in schema: {sorted(missing)}")
-        cur = self._base_snapshot(branch)
-        snap_id = _next_snapshot_id(self._meta)
-        path = self._write_delete_dir(
-            keys_df.select(*eq_cols).distinct(), snap_id, "-eq"
-        )
-        entry = {"dir": path, "cols": list(eq_cols), "seq": snap_id}
-        return self._commit(
-            "delete",
-            list(cur.data_dirs),
-            list(cur.delete_dirs),
-            branch=branch,
-            eq_deletes=cur.eq_deletes + [entry],
+        rows = []
+        if added is not None:
+            have = {c.lower() for c in added.columns}
+            absent = [c for k, c in canon.items() if k not in have]
+            if absent:
+                raise TableError(
+                    f"upsert rows need all table columns; missing {absent}"
+                )
+            rows = [added.select(*[c for c in added.columns if c.lower() in canon])]
+        return self._change_rows(
+            "delete" if added is None else "merge",
+            self._base_snapshot(branch),
+            keys_df,
+            rows,
+            branch,
+            eq_cols=[canon[c.lower()] for c in eq_cols],
         )
 
     def update_set(
@@ -1851,23 +1891,28 @@ class LocalTable:
         Everything else is appends.
         """
         cols = self.declared_schema().fieldNames()
+        # SQL identifiers are case-insensitive: source columns, SET names
+        # and the INSERT column list all resolve to the declared casing
+        canon = {c.lower(): c for c in cols}
+        in_source = {c.lower(): c for c in source.columns}
         if when_matched == "update":
-            when_matched = {c: F.col(f"s.{c}") for c in cols if c in source.columns}
+            when_matched = {
+                c: F.col(f"s.{in_source[c.lower()]}")
+                for c in cols
+                if c.lower() in in_source
+            }
         elif when_matched not in ("delete", None) and not isinstance(when_matched, dict):
             raise TableError(f"bad when_matched: {when_matched!r}")
         inserts: dict[str, str | Column] | None = None
         if when_not_matched == "insert":
-            missing = [c for c in cols if c not in source.columns]
+            missing = [c for c in cols if c.lower() not in in_source]
             if missing:
                 raise TableError(
                     f"when_not_matched='insert' needs all table columns in "
                     f"source; missing {missing}"
                 )
-            when_not_matched = {c: F.col(c) for c in cols}
+            when_not_matched = {c: F.col(in_source[c.lower()]) for c in cols}
         if isinstance(when_not_matched, dict):
-            # SQL identifiers are case-insensitive: normalize the INSERT
-            # column list to the declared casing before validating
-            canon = {c.lower(): c for c in cols}
             unknown = [c for c in when_not_matched if c.lower() not in canon]
             if unknown:
                 raise TableError(
@@ -1897,10 +1942,11 @@ class LocalTable:
                 # (persisted, batch-bounded) MATCHED KEYS — not against the
                 # full table scan, which would re-execute the MoR merge. A
                 # null-keyed source row matches nothing and stays "not
-                # matched" either way.
+                # matched" either way; duplicate keys do not change an
+                # anti-join, so they are not removed.
                 matched_keys = matched_raw.select(
                     *[F.col(f"s.{k}").alias(k) for k in on]
-                ).distinct()
+                )
                 unmatched = s.join(matched_keys, on, "left_anti")
                 if not_matched_condition:
                     unmatched = unmatched.filter(F.expr(not_matched_condition))

@@ -56,8 +56,10 @@ SMOKE_QUERIES = [
     "n2b_ngram_jaccard_pairs",
     # broadcast-GEMM: a scope-released broadcast on the benchmark path
     "n2e_embedding_cosine_neardup",
-    # streaming CDC: delete_by_keys + merge_into through foreachBatch
+    # streaming CDC: one delete_by_keys(added=...) commit per batch
     "l8_stream_cdc_apply",
+    # streaming upsert: the same keyed batch without an op column
+    "l7_stream_upsert_table",
     # MoR scan, per-dir side: partitioned dirs under evolved specs
     "i23_partition_evolution",
     # MoR scan, grouped side: several eq deletes with a re-insert

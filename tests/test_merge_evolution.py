@@ -432,3 +432,25 @@ def test_merge_aligns_source_types_to_declared_schema(spark, catalog):
         ("amount", "decimal(10,2)"),
         ("_row_id", "bigint"),
     ]
+
+
+def test_merge_resolves_source_columns_case_insensitively(spark, catalog):
+    """An upper-case source column matches its declared column on both
+    sides of a MERGE: the insert side takes it, and the update side SETs
+    it instead of rewriting the matched row unchanged."""
+    t = catalog.create_table("mdb", "upper", "id BIGINT, amount DOUBLE")
+    t.insert_values([(1, 1.0), (3, 3.0)])
+    src = spark.createDataFrame([(1, 10.0), (2, 20.0)], "ID BIGINT, AMOUNT DOUBLE")
+    t.merge_into(src, ["id"])
+    assert sorted(tuple(r) for r in t.scan().collect()) == [
+        (1, 10.0),
+        (2, 20.0),
+        (3, 3.0),
+    ]
+    src = spark.createDataFrame([(3, 30.0)], "ID BIGINT, AMOUNT DOUBLE")
+    t.merge_into(src, ["id"], when_not_matched=None)
+    assert sorted(tuple(r) for r in t.scan().collect()) == [
+        (1, 10.0),
+        (2, 20.0),
+        (3, 30.0),
+    ]

@@ -188,6 +188,17 @@ def test_update_set_resolves_declared_columns(catalog):
     assert [tuple(r) for r in t.scan().collect()] == [(1, 2.0, None)]
 
 
+def test_insert_resolves_columns_case_insensitively(spark, catalog):
+    """A frame's column names match the declared ones case-insensitively,
+    as SQL identifiers do, and land in the declared casing."""
+    t = catalog.create_table("demo_db", "upper", "id BIGINT, amount DOUBLE")
+    t.insert(spark.createDataFrame([(1, 2.5)], "ID BIGINT, AMOUNT DOUBLE"))
+    assert t.scan().columns == ["id", "amount"]
+    assert [tuple(r) for r in t.scan().collect()] == [(1, 2.5)]
+    (new_dir,) = t.current_snapshot().added_dirs
+    assert spark.read.parquet(new_dir).columns == ["id", "amount", "_row_id"]
+
+
 def test_incremental_changes(catalog, demo_table):
     t = demo_table
     s0 = t.current_snapshot().id          # after the 10-row insert
