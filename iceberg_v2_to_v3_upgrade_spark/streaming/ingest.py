@@ -11,9 +11,15 @@ Flink's sink makes with ``write.upsert.enabled``): ONE commit holding an
 equality delete of every key in the deduplicated batch plus a data dir
 of its non-delete rows (``LocalTable.delete_by_keys(..., added=...)``).
 The target is never read. A key that had several rows ends with one.
-Because equality deletes key on them, the key columns of a
-stream-upserted table cannot be renamed while any snapshot carries such a
-delete (compaction, then snapshot expiry, retires them).
+
+Every key a batch carries, new keys included, stays an equality-delete
+key that each scan anti-joins until maintenance retires it:
+``consolidate_deletes`` folds the equality deletes into one deletion
+vector without rewriting data (it reads the data's key columns once);
+``rewrite_data_files`` compacts them away with the data. Because equality
+deletes key on them, the key columns of a stream-upserted table cannot be
+renamed while any retained snapshot carries such a delete (one of those
+two, then snapshot expiry, lifts that).
 
 Delivery semantics: the checkpoint makes each batch apply AT-LEAST-once —
 a batch whose table commit landed but whose offset commit did not is

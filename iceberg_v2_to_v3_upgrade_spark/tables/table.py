@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     CharType,
     DataType,
     MapType,
+    StructField,
     StructType,
     VarcharType,
 )
@@ -1550,11 +1551,12 @@ class LocalTable:
         else:
             data_dirs, delete_dirs = list(cur.data_dirs), list(cur.delete_dirs)
             if gone is not None and eq_cols:
-                types = {
-                    f.name: f.dataType.simpleString() for f in self.declared_schema()
-                }
                 keys = gone.selectExpr(
-                    *[f"CAST({_q(c)} AS {types[c]}) AS {_q(c)}" for c in eq_cols]
+                    *[
+                        f"CAST({_q(f.name)} AS {f.dataType.simpleString()}) "
+                        f"AS {_q(f.name)}"
+                        for f in self._eq_key_fields(eq_cols)
+                    ]
                 )
                 path = self._write_delete_dir(keys, snap_id, "-eq")
                 eq_deletes.append({"dir": path, "cols": list(eq_cols), "seq": snap_id})
@@ -1753,6 +1755,10 @@ class LocalTable:
         ignored. Its rows get fresh row ids. Names resolve
         case-insensitively. Key columns that any snapshot's equality
         delete names cannot be renamed (``rename_column``).
+
+        The keys stay in every scan's anti-join until
+        ``consolidate_deletes`` folds them into one deletion vector (no
+        data rewrite) or ``rewrite_data_files`` compacts them away.
         """
         canon = {f.name.lower(): f.name for f in self.declared_schema()}
         missing = [c for c in eq_cols if c.lower() not in canon]
@@ -1766,7 +1772,7 @@ class LocalTable:
                 raise TableError(
                     f"upsert rows need all table columns; missing {absent}"
                 )
-            rows = [added.select(*[c for c in added.columns if c.lower() in canon])]
+            rows = [added.drop(*[c for c in added.columns if c.lower() not in canon])]
         return self._change_rows(
             "delete" if added is None else "merge",
             self._base_snapshot(branch),
@@ -2344,10 +2350,10 @@ class LocalTable:
         ``_eq_<col>`` typed as declared, and ``_eq_seq``, each entry's seq
         (read per file when the dir name encodes it, as it does for every
         entry this engine writes)."""
-        types = {
-            f.name: f.dataType.simpleString() for f in self.declared_schema()
-        }
-        ddl = ", ".join(f"{c} {types[c]}" for c in cols)
+        ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in self._eq_key_fields(cols)
+        )
         by_key: dict[int | None, list[str]] = {}
         for e in entries:
             seq = int(e["seq"])
@@ -2363,6 +2369,13 @@ class LocalTable:
                 for r in self._relations(ddl, eq_dirs)
             ]
         )
+
+    def _eq_key_fields(self, cols: list[str]) -> list[StructField]:
+        """The declared fields of equality-key ``cols``: the one typing
+        rule of ``-eq`` delete files, applied when they are written
+        (``_change_rows``) and when they are read."""
+        declared = self.declared_schema()
+        return [declared[c] for c in cols]
 
     def _read_pos_deletes(self, dirs: list[str]) -> DataFrame:
         """Positional / ``-dv`` delete ``dirs`` (``_relations``):
@@ -2384,6 +2397,18 @@ class LocalTable:
             sets.setdefault(tuple(e["cols"]), []).append(e)
         return sets
 
+    def _eq_delete_joins(self, snap: Snapshot) -> list[tuple[DataFrame, Column]]:
+        """One (broadcast keys, condition) per equality-key-column set of
+        ``snap``: a data row (carrying ``_seq``) matches when its keys
+        equal a deleted key committed at a later seq."""
+        return [
+            (
+                F.broadcast(self._read_eq_deletes(list(cols), entries)),
+                F.expr(f"{_keys_match(cols)} AND _seq < _eq_seq"),
+            )
+            for cols, entries in self._eq_sets(snap.eq_deletes).items()
+        ]
+
     def _apply_deletes(self, snap: Snapshot, data: DataFrame) -> DataFrame:
         """The MoR merge of ``snap``'s deletes into ``data`` (rows carry
         ``_seq``): one broadcast anti-join per equality-key-column set
@@ -2396,10 +2421,8 @@ class LocalTable:
         never reused, so a tombstone names only older rows (cherry-pick
         publishes data dirs only; a rebased delete names base rows). The
         delete side is broadcast; the data side never shuffles."""
-        for cols, entries in self._eq_sets(snap.eq_deletes).items():
-            keys = self._read_eq_deletes(list(cols), entries)
-            cond = F.expr(f"{_keys_match(cols)} AND _seq < _eq_seq")
-            data = data.join(F.broadcast(keys), cond, "left_anti")
+        for keys, cond in self._eq_delete_joins(snap):
+            data = data.join(keys, cond, "left_anti")
         if snap.delete_dirs:
             dels = self._read_pos_deletes(snap.delete_dirs).withColumnRenamed(
                 _ROW_ID, "_del_row_id"
@@ -3265,17 +3288,23 @@ class LocalTable:
         return self._commit("replace", [path], [])
 
     def consolidate_deletes(self) -> Snapshot:
-        """V3 deletion-vector consolidation: merge ALL positional delete
-        files into ONE compact tombstone set — the maintenance move
-        Iceberg V3 performs when it converts accumulated positional delete
-        files into a single deletion vector per data file (the headline
+        """V3 deletion-vector consolidation: merge ALL delete files into
+        ONE compact tombstone set — the maintenance move Iceberg V3
+        performs when it converts accumulated positional delete files
+        into a single deletion vector per data file (the headline
         read-amplification fix of the V2->V3 upgrade,
         reference README.md:26-29 / internal/upgrade_table.py:124-129).
 
-        Unlike ``rewrite_data_files`` this touches NO data files — cost is
-        O(deleted rows), one distinct + one write, so it can run far more
-        often than full compaction. Scan results must be identical
-        before/after (asserted in tests and by the i17 oracle).
+        Unlike ``rewrite_data_files`` this touches NO data files. With
+        positional deletes only, cost is O(deleted rows): one distinct +
+        one write, so it can run far more often than full compaction.
+        Equality deletes (``delete_by_keys``, every keyed streaming
+        batch) are folded in as well: the ``_row_id``s of the rows they
+        hide join the tombstone set and the snapshot carries no equality
+        delete — Iceberg's equality-to-position delete conversion. That
+        reads the data's key columns once (a broadcast semi-join per
+        key-column set) but still writes no data. Scan results must be
+        identical before/after (asserted in tests and by the i17 oracle).
 
         Refuses under carried row ids: a carried UPDATE re-appends a
         tombstoned _row_id, and collapsing tombstones to one commit seq
@@ -3288,20 +3317,28 @@ class LocalTable:
                 "seq-scoped tombstones; use rewrite_data_files"
             )
         cur = self.current_snapshot()
-        if len(cur.delete_dirs) <= 1:
+        if len(cur.delete_dirs) <= 1 and not cur.eq_deletes:
             return cur
-        tombstones = (
-            self._read_pos_deletes(cur.delete_dirs).select(_ROW_ID).distinct()
-        )
-        # single file: the whole point is one tombstone blob per scan
-        dv_path = self._write_delete_dir(
-            tombstones.coalesce(1), _next_snapshot_id(self._meta), "-dv"
-        )
+        parts = []
+        if cur.delete_dirs:
+            parts.append(self._read_pos_deletes(cur.delete_dirs).select(_ROW_ID))
+        data = self._read_data(cur, cur.data_dirs) if cur.eq_deletes else None
+        if data is not None:
+            parts += [
+                data.join(keys, cond, "left_semi").select(_ROW_ID)
+                for keys, cond in self._eq_delete_joins(cur)
+            ]
+        dv_dirs = []
+        if parts:
+            tombstones = _union_all(parts).distinct()
+            # single file: the whole point is one tombstone blob per scan
+            dv_dirs.append(
+                self._write_delete_dir(
+                    tombstones.coalesce(1), _next_snapshot_id(self._meta), "-dv"
+                )
+            )
         return self._commit(
-            "maintenance",
-            list(cur.data_dirs),
-            [dv_path],
-            eq_deletes=cur.eq_deletes,
+            "maintenance", list(cur.data_dirs), dv_dirs, eq_deletes=[]
         )
 
     def _check_gc_enabled(self, procedure: str) -> None:

@@ -4,6 +4,8 @@ on replay, and the source-shape rules of the upsert."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 
 from iceberg_v2_to_v3_upgrade_spark.streaming import ingest
@@ -130,3 +132,40 @@ def test_source_shape_rules(spark, table):
     ups(spark.createDataFrame([(1, 15, "x")], "ID BIGINT, VAL BIGINT, extra STRING"), 1)
     assert (1, 15) in _rows(table)
     assert table.scan().columns == ["id", "val"]
+
+
+def test_consolidate_folds_batch_deletes_into_one_dv(spark, table):
+    table.delete_where("id = 5")  # a positional delete alongside
+    _cdc(table)(
+        spark.createDataFrame([(0, 0, 1, "D"), (4, 0, 2, "D"), (1, 11, 3, "U")], _BATCH),
+        0,
+    )
+    _cdc(table)(spark.createDataFrame([(4, 44, 4, "I"), (None, 7, 5, "I")], _BATCH), 1)
+    _upsert(table)(
+        spark.createDataFrame([(2, 22, 6), (8, 80, 7)], "id BIGINT, val BIGINT, seq BIGINT"),
+        2,
+    )
+    def rows():  # repr: the NULL key sorts beside the others
+        return sorted(map(tuple, table.scan().collect()), key=repr)
+
+    before, want = table.current_snapshot(), rows()
+    after = table.consolidate_deletes()
+    assert after.operation == "maintenance"
+    assert after.eq_deletes == [] and after.data_dirs == before.data_dirs
+    (dv,) = after.delete_dirs
+    assert dv.endswith("-dv")
+    assert rows() == want  # re-inserted key 4 and the NULL key survive
+    # later batches still apply on top of the folded deletes
+    _cdc(table)(spark.createDataFrame([(4, 0, 8, "D"), (3, 33, 9, "U")], _BATCH), 3)
+    assert rows() == sorted(
+        [r for r in want if r[0] not in (3, 4)] + [(3, 33)], key=repr
+    )
+    # key columns rename once no retained snapshot keys an equality delete
+    table.consolidate_deletes()
+    with pytest.raises(TableError, match="equality"):
+        table.rename_column("id", "key")
+    table.expire_snapshots(
+        older_than=datetime.datetime.now(datetime.timezone.utc), retain_last=1
+    )
+    table.rename_column("id", "key")
+    assert table.scan().columns == ["key", "val"]
