@@ -33,9 +33,11 @@ from __future__ import annotations
 
 import contextlib
 import datetime
+import decimal
 import fcntl
 import functools
 import json
+import logging
 import math
 import os
 import re
@@ -54,6 +56,8 @@ from pyspark.sql.types import (
     StructType,
     VarcharType,
 )
+
+_log = logging.getLogger(__name__)
 
 _ROW_ID = "_row_id"
 
@@ -1316,37 +1320,51 @@ class LocalTable:
 
         Read from the parquet FOOTER row-group statistics (the same
         numbers real Iceberg lifts into its manifests), at O(files)
-        driver-side metadata cost — the previous full Spark read+agg job
-        per write charged every table commit one extra job (round-10
-        optimization; same move as ``_bump_row_id_watermark``). Identity
-        partition values are parsed from the ``name=value`` dir layout
-        (they are not stored in the files). Any footer gap — missing
-        stats, exotic types (decimal bytes), unparsable partition dirs —
-        falls back to the exact read+agg job, never to wrong stats."""
-        declared = self.declared_schema()
-        numeric = {
-            f.name: f.dataType.typeName()
-            for f in declared
-            if f.dataType.typeName()
-            in ("integer", "long", "short", "double", "float", "decimal")
-        }
+        driver-side metadata cost and no Spark job; decimals included
+        (``_dir_stats_from_footers``). Identity partition values are
+        parsed from the ``name=value`` dir layout (they are not stored in
+        the files). Only a footer gap — a row group with values but no
+        min/max, NaN bounds, an unparsable partition dir, an unreadable
+        footer — falls back to the exact read+agg job (two Spark jobs),
+        never to wrong stats; that fallback is logged at DEBUG with the
+        dir and the reason."""
+        numeric = self._stats_columns()
         if not numeric:
             return
         try:
             stats = self._dir_stats_from_footers(path, numeric)
-        except Exception:
-            stats = None  # unreadable footer: the exact job decides
+            reason = "a footer or partition dir has no usable min/max"
+        except Exception as e:  # unreadable footer: the exact job decides
+            stats, reason = None, f"{type(e).__name__}: {e}"
         if stats is None:
+            _log.debug("dir stats of %s from a Spark read: %s", path, reason)
             stats = self._dir_stats_from_read(path, list(numeric))
             if stats is None:
                 return
         self._meta.setdefault("dir_stats", {})[path] = stats
 
+    def _stats_columns(self) -> dict[str, str]:
+        """Declared numeric columns (name -> type name) that get dir stats."""
+        return {
+            f.name: f.dataType.typeName()
+            for f in self.declared_schema()
+            if f.dataType.typeName()
+            in ("integer", "long", "short", "double", "float", "decimal")
+        }
+
     def _dir_stats_from_footers(
         self, path: str, numeric: dict[str, str]
     ) -> dict | None:
         """Per-column [lo, hi] from parquet footers + partition dir names;
-        None when any footer lacks usable stats (caller falls back)."""
+        None when a row group with values lacks min/max, a bound is NaN or
+        a partition dir does not parse (caller falls back).
+
+        Decimal bounds are decoded from the RAW footer statistics (pyarrow
+        cannot convert the INT32/INT64 layout Spark writes for precision
+        <= 18): the unscaled integer — as stored, or big-endian two's
+        complement bytes for FIXED_LEN_BYTE_ARRAY (precision > 18) — times
+        10^-scale of that file's own column. ``_stats_range`` widens them
+        outward like the Decimals the exact job returns."""
         import glob as _glob
 
         import pyarrow.parquet as _pq
@@ -1356,8 +1374,10 @@ class LocalTable:
         hi: dict[str, object] = {}
 
         def _update(col: str, mn: object, mx: object) -> bool:
-            if isinstance(mn, bool) or not isinstance(mn, (int, float)):
-                return False  # decimal-as-bytes or exotic: use the exact job
+            if isinstance(mn, bool) or not isinstance(
+                mn, (int, float, decimal.Decimal)
+            ):
+                return False  # exotic stats type: use the exact job
             if isinstance(mn, float) and (
                 math.isnan(mn) or math.isnan(mx)  # type: ignore[arg-type]
             ):
@@ -1368,6 +1388,11 @@ class LocalTable:
                 lo[col] = min(lo[col], mn)  # type: ignore[type-var]
                 hi[col] = max(hi[col], mx)  # type: ignore[type-var]
             return True
+
+        def _decimal(raw: int | bytes, scale: int) -> decimal.Decimal:
+            if isinstance(raw, bytes):
+                raw = int.from_bytes(raw, "big", signed=True)
+            return decimal.Decimal(raw).scaleb(-scale)
 
         for f in _glob.glob(
             os.path.join(path, "**", "*.parquet"), recursive=True
@@ -1397,6 +1422,10 @@ class LocalTable:
                 idx = names.get(col)
                 if idx is None:
                     continue  # partition col (above) or evolved-away col
+                kind = md.schema.column(idx)
+                scale = (
+                    kind.scale if kind.logical_type.type == "DECIMAL" else None
+                )
                 for rg in range(md.num_row_groups):
                     chunk = md.row_group(rg).column(idx)
                     st = chunk.statistics
@@ -1404,7 +1433,12 @@ class LocalTable:
                         continue  # all-null row group: nothing to record
                     if st is None or not st.has_min_max:
                         return None
-                    if not _update(col, st.min, st.max):
+                    if scale is None:
+                        mn, mx = st.min, st.max
+                    else:
+                        mn = _decimal(st.min_raw, scale)
+                        mx = _decimal(st.max_raw, scale)
+                    if not _update(col, mn, mx):
                         return None
         return {
             col: _stats_range(lo[col], hi[col]) for col in numeric if col in lo

@@ -68,6 +68,8 @@ SMOKE_QUERIES = [
     "i27_conditional_merge",
     # row-level change step: partitioned INSERT OVERWRITE
     "i30_insert_overwrite",
+    # dir-stats pruning, stats taken from the written files' footers
+    "i14_stats_file_skipping",
 ]
 
 
