@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from iceberg_v2_to_v3_upgrade_spark.tables.catalog import LocalCatalog
 from iceberg_v2_to_v3_upgrade_spark.tables.permissions import PermissionDenied
-from iceberg_v2_to_v3_upgrade_spark.tables.table import LocalTable, TableError
+from iceberg_v2_to_v3_upgrade_spark.tables.table import (
+    _PRUNE_PRED,
+    LocalTable,
+    TableError,
+)
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 # `glue_catalog.db.t`, `db.t`, or bare `t` (reference always qualifies)
@@ -1403,7 +1407,8 @@ class EngineSQL:
         """Extract a WHERE clause safe to hand to the table's manifest-
         stats pruning (scan(data_filter=...)): ONLY when this table is the
         single catalog table in the statement and the whole WHERE is a
-        conjunction of simple `numeric_col <op> literal` comparisons.
+        conjunction of `numeric_col <op> literal` comparisons (the
+        table's ``_PRUNE_PRED`` grammar over its ``_stats_columns()``).
         Anything else — joins, ORs, expressions, subqueries — returns None
         and the scan reads everything (Catalyst still filters rows). This
         is what makes `SELECT ... WHERE price > X` on a MoR table skip
@@ -1438,18 +1443,9 @@ class EngineSQL:
         w = m.group("w").strip()
         if re.search(r"\bOR\b", w, re.IGNORECASE):
             return None
-        declared = table.declared_schema()
-        numeric = {
-            f.name
-            for f in declared
-            if f.dataType.typeName()
-            in ("integer", "long", "short", "double", "float", "decimal")
-        }
-        simple = re.compile(
-            r"^\s*(\w+)\s*(<=|>=|<|>|==|=)\s*(-?\d+(?:\.\d+)?)\s*$"
-        )
+        numeric = table._stats_columns()
         for part in re.split(r"\bAND\b", w, flags=re.IGNORECASE):
-            mm = simple.match(part)
+            mm = _PRUNE_PRED.match(part)
             if not mm or mm.group(1) not in numeric:
                 return None
         return w

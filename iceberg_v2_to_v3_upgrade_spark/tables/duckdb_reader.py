@@ -3,13 +3,13 @@
 The reference's headline verification arc is a *second engine reading the
 managed table* — ``internal/verify_in_databricks.py:57-112`` points
 Databricks at the same Iceberg table another engine wrote and checks the
-merged state is readable. ``tables/verify.py`` previously approximated
-that by exporting the already-merged scan to parquet; this module closes
-the gap: it compiles the table's CURRENT snapshot metadata (data dirs,
-positional delete dirs, equality deletes, per-dir delete-scope sequences)
-into one self-contained DuckDB SQL statement, so DuckDB reconstructs the
-post-DELETE/UPDATE state from raw table files with **no Spark pre-merge
-and no knowledge of this engine** beyond the generated view definition —
+merged state is readable. This module is that read, and the only one
+``tables/verify.py`` uses: it compiles the table's snapshot metadata
+(data dirs, positional delete dirs, equality deletes, per-dir
+delete-scope sequences) into one self-contained DuckDB SQL statement,
+so DuckDB reconstructs the post-DELETE/UPDATE state from raw table
+files with **no Spark pre-merge and no knowledge of this engine** beyond
+the generated view definition —
 the moral equivalent of handing a spec-shaped metadata file to an
 ``iceberg_scan``-capable reader (the DuckDB iceberg extension itself
 needs a network INSTALL, unavailable here, so the manifest is expressed
@@ -34,11 +34,12 @@ Fidelity covered by the generated SQL:
   COLUMN null-fills (or reads the recorded default literal) exactly
   like the engine's per-dir sequence rule.
 
-Declared limitation: dirs registered by ``add_files`` carry no
-``_row_id`` column (ids are lazily derived); compiling that read is not
-supported and raises ``DuckDBReadUnsupported`` — callers
-(``verify.py``) fall back to the exported-scan probe rather than
-silently resurrecting deleted imported rows (review finding).
+- dirs registered by ``add_files``: external parquet with no ``_row_id``
+  column. Each row's id is computed as the engine's
+  ``_read_imported_dir`` does: the file's recorded ``first_row_id``
+  plus its position in the file (DuckDB's ``file_row_number``, the same
+  count as Spark's ``_metadata.row_index``), so positional deletes of
+  imported rows apply.
 """
 
 from __future__ import annotations
@@ -46,18 +47,13 @@ from __future__ import annotations
 import glob
 import os
 import re
+from urllib.parse import unquote, urlparse
 
 from iceberg_v2_to_v3_upgrade_spark.tables.table import (
     _ROW_ID,
     LocalTable,
     Snapshot,
 )
-
-
-class DuckDBReadUnsupported(Exception):
-    """The table uses a feature the compiled-SQL read cannot express
-    (currently: ``add_files`` imported dirs). Use the exported-scan
-    verification path instead."""
 
 
 _DUCK_PRIMITIVES = {
@@ -141,6 +137,33 @@ def _has_parquet(d: str) -> bool:
     )
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a DuckDB string literal."""
+    return "'" + s.replace("'", "''") + "'"
+
+
+def _imported_source(entry: dict) -> tuple[str, str, set[str]]:
+    """An ``add_files`` dir's ``read_parquet`` source over exactly its
+    recorded files, the SQL of its rows' ``_row_id``, and the columns the
+    files hold. The recorded keys are Spark ``file:`` URIs, quoted;
+    DuckDB's ``filename`` is the local path it was given."""
+    import pyarrow.parquet as pq
+
+    files = {
+        unquote(urlparse(fp).path): int(rid)
+        for fp, rid in sorted(entry["files"].items())
+    }
+    written = {n for f in files for n in pq.read_schema(f).names}
+    paths = ", ".join(_sql_str(f) for f in files)
+    src = (
+        f"read_parquet([{paths}], union_by_name=1, filename=true, "
+        "file_row_number=true)"
+    )
+    arms = " ".join(f"WHEN {_sql_str(f)} THEN {rid}" for f, rid in files.items())
+    row_id = f"CAST(CASE filename {arms} END + file_row_number AS BIGINT)"
+    return src, row_id, written
+
+
 def _empty_select(declared) -> str:
     typed = ", ".join(
         f"CAST(NULL AS {_duck_type(f.dataType.simpleString())})"
@@ -166,23 +189,28 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
     written_at: dict[int, set[str]] = {}  # write_seq -> physical columns
     data_parts = []
     for d in snap.data_dirs:
-        if d in imported:
-            raise DuckDBReadUnsupported(
-                f"{d} was registered by add_files (no materialized "
-                f"{_ROW_ID}); use the exported-scan verification path"
-            )
         if not _has_parquet(d):
             # a zero-row partitioned write leaves a dir with no parquet
             # files at all (engine-supported state — see _read_layout);
             # a bare read_parquet glob on it is an IO error in DuckDB
             continue
         seq = table._delete_scope_seq(d, snap)
+        src = (
+            f"read_parquet('{_dir_glob(d)}', hive_partitioning=1, "
+            "union_by_name=1)"
+        )
+        row_id = f'"{_ROW_ID}"'
         write_seq = LocalTable._parse_dir_seq(d)
         # columns physically present when this dir was written (current
         # names resolve through the rename walk below). One JVM DDL
         # parse per DISTINCT schema epoch, not per dir — and none at
         # all for never-evolved tables (review finding).
-        if not evolved:
+        if d in imported:
+            # layout follows the import commit; the columns are the
+            # ones the external files hold
+            write_seq = int(imported[d]["seq"])
+            src, row_id, written = _imported_source(imported[d])
+        elif not evolved:
             written = declared_names
         elif write_seq in written_at:
             written = written_at[write_seq]
@@ -216,10 +244,8 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
                     f' AS "{name}"'
                 )
         data_parts.append(
-            f"SELECT {', '.join(proj)}, \"{_ROW_ID}\", "
-            f"CAST({seq} AS BIGINT) AS _seq "
-            f"FROM read_parquet('{_dir_glob(d)}', "
-            f"hive_partitioning=1, union_by_name=1)"
+            f"SELECT {', '.join(proj)}, {row_id} AS \"{_ROW_ID}\", "
+            f"CAST({seq} AS BIGINT) AS _seq FROM {src}"
         )
     if not data_parts:  # every data dir was a zero-row write
         return _empty_select(declared)

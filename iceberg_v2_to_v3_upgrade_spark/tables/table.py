@@ -194,17 +194,51 @@ def _next_snapshot_id(meta: dict[str, Any]) -> int:
 
 
 def _stats_range(lo: Any, hi: Any) -> list:
-    """A dir-stats ``[lo, hi]`` entry. Integral stats stay EXACT (json
-    ints are arbitrary precision): float coercion rounds values >2^53 and
-    a rounded-down hi could wrongly satisfy ``hi <= val``, skipping a dir
-    that contains matching rows. Non-integral values are widened OUTWARD
-    so pruning stays conservative under any representation error."""
-    if isinstance(lo, int) and isinstance(hi, int):
-        return [lo, hi]
-    return [
-        math.nextafter(float(lo), -math.inf),
-        math.nextafter(float(hi), math.inf),
-    ]
+    """A dir-stats ``[lo, hi]`` entry of JSON numbers. A bound stays exact
+    when its JSON number equals it: ints (arbitrary precision), floats,
+    and decimals a float holds exactly (0.00, 99.50). Only an inexact
+    decimal is widened OUTWARD by one ULP, so a rounded bound can never
+    make a dir look narrower than its rows."""
+
+    def bound(v: Any, away: float) -> int | float:
+        if isinstance(v, int):
+            return v
+        f = float(v)
+        return f if decimal.Decimal(f) == v else math.nextafter(f, away)
+
+    return [bound(lo, -math.inf), bound(hi, math.inf)]
+
+
+def _footer_decimal(raw: int | bytes, scale: int) -> decimal.Decimal:
+    """A DECIMAL footer bound from its raw statistics: the unscaled value
+    as stored (INT32/INT64), or big-endian two's-complement bytes
+    (FIXED_LEN_BYTE_ARRAY), times 10^-scale of that file's column."""
+    if isinstance(raw, bytes):
+        raw = int.from_bytes(raw, "big", signed=True)
+    return decimal.Decimal(raw).scaleb(-scale)
+
+
+#: The one pruning grammar: a ``col <op> literal`` conjunct that dir
+#: stats can decide (``_prune_dirs_by_stats``, the SQL router's WHERE).
+_PRUNE_PRED = re.compile(
+    r"^\s*(\w+)\s*(<=|>=|<|>|==|=)\s*(-?\d+(?:\.\d+)?)\s*$"
+)
+
+
+def _parquet_files(d: str):
+    """Yield ``(path, {name: value})`` for every parquet file under data
+    dir ``d``, in path order, with the file's identity-partition values
+    from its ``name=value`` dirs. Spark writes them Hive-escaped (e.g.
+    '#' -> '%23'); they are unquoted so they match the scan-side values."""
+    import glob as _glob
+    from urllib.parse import unquote
+
+    for path in sorted(
+        _glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+    ):
+        segs = os.path.relpath(path, d).split(os.sep)[:-1]
+        pairs = (seg.partition("=") for seg in segs if "=" in seg)
+        yield path, {k: unquote(v) for k, _, v in pairs}
 
 
 def _union_all(dfs: list[DataFrame]) -> DataFrame | None:
@@ -919,12 +953,13 @@ class LocalTable:
     ) -> tuple[str, dict[str, Any]]:
         """The one way rows become a new data dir: reserve
         ``data/snap-N``, give the rows fresh ``_row_id``s from
-        ``next_row_id``, write, and advance the watermark before the
-        commit. ``keep_row_ids``: the rows already carry their ids
-        (compaction, copy-on-write, V3 carried-lineage updates).
-        Returns the dir and the ``_commit`` keywords a rebase needs to
-        shift fresh ids above a concurrent writer's (none for kept ids —
-        they are not this commit's to move)."""
+        ``next_row_id``, write, then one footer pass over the new files
+        (``_record_new_dir``) advances the watermark and records the
+        dir's stats before the commit. ``keep_row_ids``: the rows already
+        carry their ids (compaction, copy-on-write, V3 carried-lineage
+        updates). Returns the dir and the ``_commit`` keywords a rebase
+        needs to shift fresh ids above a concurrent writer's (none for
+        kept ids — they are not this commit's to move)."""
         row_id_base = int(self._meta["next_row_id"])
         if not keep_row_ids:
             df = df.withColumn(
@@ -932,7 +967,7 @@ class LocalTable:
             )
         path = self._next_dir("data", snap_id)
         self._write_data_dir(df, path, max_records_per_file)
-        self._bump_row_id_watermark(path)
+        self._record_new_dir(path)
         if keep_row_ids:
             return path, {}
         return path, {"fresh_row_dirs": [path], "row_id_base": row_id_base}
@@ -993,58 +1028,109 @@ class LocalTable:
         except FileNotFoundError:
             pass
 
-    def _bump_row_id_watermark(self, data_path: str) -> None:
-        """Advance ``next_row_id`` past the max ``_row_id`` in the
-        just-written dir, read from the parquet FOOTER statistics
-        (row-group max of the ``_row_id`` column) — the same number the
-        previous Spark re-read+agg computed, at O(files) driver-side
-        metadata cost instead of one full read job per write (round-8
-        perf item: this was an extra Spark job in EVERY streaming batch
-        commit; real Iceberg takes it from manifest stats the same
-        way). Files whose footer lacks min/max stats fall back to a
-        pyarrow column read of that file alone."""
-        import glob as _glob
+    def _record_new_dir(self, path: str) -> None:
+        """One footer pass over a just-written data dir: each parquet
+        file's footer is opened once and gives both the ``_row_id`` max,
+        which moves ``next_row_id`` (monotonically: a V3 carried-row
+        update keeps OLD, possibly low, ids), and the dir's ``[lo, hi]``
+        per ``_stats_columns()`` column — Iceberg's manifest stats,
+        which scans prune on (``_prune_dirs_by_stats``). Stats are keyed
+        by the CURRENT column names: after a rename old entries stop
+        matching and pruning turns conservative, never wrong.
 
+        INT and FLOAT bounds are taken as stored. DECIMAL bounds are
+        decoded from ``min_raw``/``max_raw`` (pyarrow cannot convert the
+        INT32/INT64 layout Spark writes for precision <= 18; FIXED_LEN
+        bytes are big-endian two's complement) scaled by that file's own
+        column scale. Identity-partition columns take theirs from the
+        ``name=value`` dirs. A column gets no entry — the dir never
+        prunes on it, its other columns still do — when a row group that
+        has values lacks min/max or has a NaN bound (Iceberg's bounds
+        leave NaN out; parquet-mr writes NaN as a double's footer max),
+        or when its partition value does not parse; that is logged at
+        DEBUG with the dir and the columns. ``_row_id`` is never stored
+        (a rebase's ``_shift_row_ids`` rewrites it); a row group without
+        ``_row_id`` stats reads that column, because the watermark guards
+        row-id uniqueness. An unreadable footer raises."""
         import pyarrow.compute as _pc
         import pyarrow.parquet as _pq
 
-        hi: int | None = None
-        for f in _glob.glob(
-            os.path.join(data_path, "**", "*.parquet"), recursive=True
-        ):
+        numeric = self._stats_columns()
+        lo: dict[str, Any] = {}
+        hi: dict[str, Any] = {}
+        unusable: set[str] = set()
+        top: int | None = None
+
+        def take(col: str, mn: Any, mx: Any) -> None:
+            if mn != mn or mx != mx:  # NaN
+                unusable.add(col)
+            elif col in lo:
+                lo[col], hi[col] = min(lo[col], mn), max(hi[col], mx)
+            else:
+                lo[col], hi[col] = mn, mx
+
+        for f, parts in _parquet_files(path):
+            for name, raw in parts.items():
+                if name not in numeric or raw == "__HIVE_DEFAULT_PARTITION__":
+                    continue  # null partition value: min/max ignore nulls
+                typ = numeric[name]
+                parse = (
+                    float if typ in ("double", "float")
+                    else decimal.Decimal if typ == "decimal"
+                    else int
+                )
+                try:
+                    v = parse(raw)
+                except (ValueError, decimal.InvalidOperation):
+                    unusable.add(name)
+                    continue
+                take(name, v, v)
             pf = _pq.ParquetFile(f)
             md = pf.metadata
-            col_idx = next(
-                (
-                    i
-                    for i in range(md.num_columns)
-                    if md.schema.column(i).name == _ROW_ID
-                ),
-                None,
-            )
-            if col_idx is None:
-                continue
-            fmax: int | None = None
-            stats_ok = md.num_row_groups > 0
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                if st is None or not st.has_min_max:
-                    stats_ok = False
-                    break
-                fmax = st.max if fmax is None else max(fmax, st.max)
-            if not stats_ok:
-                v = _pc.max(pf.read(columns=[_ROW_ID])[_ROW_ID]).as_py()
-                fmax = v
-            if fmax is not None:
-                hi = fmax if hi is None else max(hi, fmax)
-        if hi is not None:
-            # MONOTONIC: a V3 carried-row update re-writes rows keeping
-            # their OLD (possibly low) ids — taking hi+1 unconditionally
-            # would move the watermark backwards and let the next insert
-            # mint duplicate _row_ids (round-8 review finding)
+            for i in range(md.num_columns):
+                kind = md.schema.column(i)
+                col = kind.path  # a struct's leaf may reuse a column name
+                if col != _ROW_ID and col not in numeric:
+                    continue
+                scale = (
+                    kind.scale if kind.logical_type.type == "DECIMAL" else None
+                )
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(i).statistics
+                    has = st is not None and st.has_min_max
+                    if col == _ROW_ID:
+                        mx = st.max if has else _pc.max(
+                            pf.read_row_group(rg, columns=[_ROW_ID])[_ROW_ID]
+                        ).as_py()
+                        if mx is not None:
+                            top = mx if top is None else max(top, mx)
+                    elif st is not None and st.num_values == 0:
+                        continue  # all-null row group: nothing to record
+                    elif not has:
+                        unusable.add(col)
+                    elif scale is None:
+                        take(col, st.min, st.max)
+                    else:
+                        take(
+                            col,
+                            _footer_decimal(st.min_raw, scale),
+                            _footer_decimal(st.max_raw, scale),
+                        )
+        if top is not None:
             self._set_next_row_id(
-                max(int(self._meta["next_row_id"]), int(hi) + 1)
+                max(int(self._meta["next_row_id"]), int(top) + 1)
             )
+        if not numeric:
+            return
+        if unusable:
+            _log.debug(
+                "dir stats of %s: no bounds for %s", path, sorted(unusable)
+            )
+        self._meta.setdefault("dir_stats", {})[path] = {
+            col: _stats_range(lo[col], hi[col])
+            for col in numeric
+            if col in lo and col not in unusable
+        }
 
     def _set_next_row_id(self, nxt: int) -> None:
         """Move the row-id watermark; V3 mirrors it in ``next-row-id``."""
@@ -1308,40 +1394,6 @@ class LocalTable:
         if spec:
             writer = writer.partitionBy(*[name for name, _ in spec])
         writer.parquet(path)
-        self._record_dir_stats(path)
-
-    def _record_dir_stats(self, path: str) -> None:
-        """Iceberg manifest-stats analog: per-data-dir min/max for numeric
-        columns, persisted in table metadata at write time. Scans consult
-        these to skip whole dirs whose range excludes a predicate, before
-        any file is listed. Stored under the CURRENT column names; after a
-        rename, old stats simply stop matching and pruning degrades to
-        conservative (read everything), never to wrong answers.
-
-        Read from the parquet FOOTER row-group statistics (the same
-        numbers real Iceberg lifts into its manifests), at O(files)
-        driver-side metadata cost and no Spark job; decimals included
-        (``_dir_stats_from_footers``). Identity partition values are
-        parsed from the ``name=value`` dir layout (they are not stored in
-        the files). Only a footer gap — a row group with values but no
-        min/max, NaN bounds, an unparsable partition dir, an unreadable
-        footer — falls back to the exact read+agg job (two Spark jobs),
-        never to wrong stats; that fallback is logged at DEBUG with the
-        dir and the reason."""
-        numeric = self._stats_columns()
-        if not numeric:
-            return
-        try:
-            stats = self._dir_stats_from_footers(path, numeric)
-            reason = "a footer or partition dir has no usable min/max"
-        except Exception as e:  # unreadable footer: the exact job decides
-            stats, reason = None, f"{type(e).__name__}: {e}"
-        if stats is None:
-            _log.debug("dir stats of %s from a Spark read: %s", path, reason)
-            stats = self._dir_stats_from_read(path, list(numeric))
-            if stats is None:
-                return
-        self._meta.setdefault("dir_stats", {})[path] = stats
 
     def _stats_columns(self) -> dict[str, str]:
         """Declared numeric columns (name -> type name) that get dir stats."""
@@ -1352,142 +1404,30 @@ class LocalTable:
             in ("integer", "long", "short", "double", "float", "decimal")
         }
 
-    def _dir_stats_from_footers(
-        self, path: str, numeric: dict[str, str]
-    ) -> dict | None:
-        """Per-column [lo, hi] from parquet footers + partition dir names;
-        None when a row group with values lacks min/max, a bound is NaN or
-        a partition dir does not parse (caller falls back).
-
-        Decimal bounds are decoded from the RAW footer statistics (pyarrow
-        cannot convert the INT32/INT64 layout Spark writes for precision
-        <= 18): the unscaled integer — as stored, or big-endian two's
-        complement bytes for FIXED_LEN_BYTE_ARRAY (precision > 18) — times
-        10^-scale of that file's own column. ``_stats_range`` widens them
-        outward like the Decimals the exact job returns."""
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        integral = {"integer", "long", "short"}
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-
-        def _update(col: str, mn: object, mx: object) -> bool:
-            if isinstance(mn, bool) or not isinstance(
-                mn, (int, float, decimal.Decimal)
-            ):
-                return False  # exotic stats type: use the exact job
-            if isinstance(mn, float) and (
-                math.isnan(mn) or math.isnan(mx)  # type: ignore[arg-type]
-            ):
-                return False  # NaN stats: Spark max() semantics differ
-            if col not in lo:
-                lo[col], hi[col] = mn, mx
-            else:
-                lo[col] = min(lo[col], mn)  # type: ignore[type-var]
-                hi[col] = max(hi[col], mx)  # type: ignore[type-var]
-            return True
-
-        def _decimal(raw: int | bytes, scale: int) -> decimal.Decimal:
-            if isinstance(raw, bytes):
-                raw = int.from_bytes(raw, "big", signed=True)
-            return decimal.Decimal(raw).scaleb(-scale)
-
-        for f in _glob.glob(
-            os.path.join(path, "**", "*.parquet"), recursive=True
-        ):
-            # identity-partition values live in the dir layout, not the file
-            for piece in os.path.relpath(f, path).split(os.sep)[:-1]:
-                name, eq, raw = piece.partition("=")
-                if not eq or name not in numeric:
-                    continue
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    continue  # null partition value: min/max ignore nulls
-                try:
-                    v = (
-                        int(raw)
-                        if numeric[name] in integral
-                        else float(raw)
-                    )
-                except ValueError:
-                    return None
-                if not _update(name, v, v):
-                    return None
-            md = _pq.ParquetFile(f).metadata
-            names = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }
-            for col in numeric:
-                idx = names.get(col)
-                if idx is None:
-                    continue  # partition col (above) or evolved-away col
-                kind = md.schema.column(idx)
-                scale = (
-                    kind.scale if kind.logical_type.type == "DECIMAL" else None
-                )
-                for rg in range(md.num_row_groups):
-                    chunk = md.row_group(rg).column(idx)
-                    st = chunk.statistics
-                    if st is not None and st.num_values == 0:
-                        continue  # all-null row group: nothing to record
-                    if st is None or not st.has_min_max:
-                        return None
-                    if scale is None:
-                        mn, mx = st.min, st.max
-                    else:
-                        mn = _decimal(st.min_raw, scale)
-                        mx = _decimal(st.max_raw, scale)
-                    if not _update(col, mn, mx):
-                        return None
-        return {
-            col: _stats_range(lo[col], hi[col]) for col in numeric if col in lo
-        }
-
-    def _dir_stats_from_read(
-        self, path: str, numeric: list[str]
-    ) -> dict | None:
-        """Exact fallback: one Spark read+agg over the just-written dir."""
-        try:
-            df = self._read_one_dir(path, self.schema_ddl + f", {_ROW_ID} long")
-        except Exception:
-            return None
-        row = df.agg(
-            *[F.min(c).alias(f"lo_{c}") for c in numeric],
-            *[F.max(c).alias(f"hi_{c}") for c in numeric],
-        ).collect()[0]
-        return {
-            c: _stats_range(row[f"lo_{c}"], row[f"hi_{c}"])
-            for c in numeric
-            if row[f"lo_{c}"] is not None
-        }
-
-    _SIMPLE_PRED = None  # compiled lazily below
-
     def _prune_dirs_by_stats(
         self, dirs: list[str], data_filter: str
     ) -> list[str]:
         """Drop dirs whose recorded min/max provably exclude the filter.
-        Only simple AND-ed numeric comparisons (`col <op> literal`) prune;
-        anything else (ORs, expressions, strings) is conservatively kept —
-        the same residual-evaluation posture as Iceberg manifest pruning."""
-        import re
-
-        if LocalTable._SIMPLE_PRED is None:
-            LocalTable._SIMPLE_PRED = re.compile(
-                r"^\s*(\w+)\s*(<=|>=|<|>|==|=)\s*(-?\d+(?:\.\d+)?)\s*$"
-            )
+        Only AND-ed ``_PRUNE_PRED`` comparisons (`col <op> literal`)
+        prune; anything else (ORs, expressions, strings) is
+        conservatively kept — the same residual-evaluation posture as
+        Iceberg manifest pruning."""
         if re.search(r"\bOR\b", data_filter, re.IGNORECASE):
             return dirs
         conjuncts = []
         for part in re.split(r"\bAND\b", data_filter, flags=re.IGNORECASE):
-            m = LocalTable._SIMPLE_PRED.match(part)
+            m = _PRUNE_PRED.match(part)
             if m:
                 lit = m.group(3)
-                # integer literals stay int: Python int/float comparisons
-                # are exact, so >2^53 literals don't round
+                # exact literals: Python compares int and Decimal with the
+                # stored floats exactly, so 98.9999999999999999 stays
+                # below 99.0 instead of rounding onto it
                 conjuncts.append(
-                    (m.group(1), m.group(2), float(lit) if "." in lit else int(lit))
+                    (
+                        m.group(1),
+                        m.group(2),
+                        decimal.Decimal(lit) if "." in lit else int(lit),
+                    )
                 )
         if not conjuncts:
             return dirs
@@ -1506,7 +1446,7 @@ class LocalTable:
                         or (op == ">=" and hi < val)
                         or (op == "<" and lo >= val)
                         or (op == "<=" and lo > val)
-                        or (op in ("=", "==") and not (lo <= val <= hi))
+                        or (op in ("=", "==") and (val < lo or val > hi))
                     ):
                         skip = True
                         break
@@ -2523,10 +2463,14 @@ class LocalTable:
         ``partition_filter`` prunes transform-partitioned directories
         (hidden partitioning) before any file is read.
         ``data_filter`` additionally consults the per-dir min/max stats
-        recorded at write time (Iceberg manifest-stats analog): data dirs
-        whose range provably excludes a simple numeric conjunct are never
-        listed or read; the predicate still applies row-level as the
-        residual. ``last_scan_pruning`` reports candidate vs read dirs.
+        the write's footer pass recorded (``_record_new_dir``, Iceberg's
+        manifest stats): data dirs whose range provably excludes a
+        ``col <op> literal`` conjunct (``_PRUNE_PRED``) on a numeric
+        column are never listed or read. Bounds and literals compare
+        exactly; a column a dir has no bounds for (a NaN, a footer
+        without min/max) never prunes that dir. The predicate still
+        applies row-level as the residual. ``last_scan_pruning`` reports
+        candidate vs read dirs.
         """
         snap = None
         if as_of is not None:
@@ -2720,8 +2664,6 @@ class LocalTable:
     def files(self) -> DataFrame:
         """Iceberg `table.files` metadata-table analog: every live data /
         delete file of the current snapshot with size and record count."""
-        import glob as _glob
-
         snap = self.current_snapshot()
         rows = []
         eq_dirs = [e["dir"] for e in snap.eq_deletes]
@@ -2731,9 +2673,7 @@ class LocalTable:
             ("eq-deletes", eq_dirs),
         ):
             for d in dirs:
-                for path in sorted(
-                    _glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
-                ):
+                for path, _ in _parquet_files(d):
                     rows.append((kind, path, os.path.getsize(path)))
         return self.spark.createDataFrame(
             rows or [], "content string, file_path string, file_size_bytes long"
@@ -2914,11 +2854,11 @@ class LocalTable:
         snap = self.current_snapshot()
         stats: dict[tuple, list[int]] = {}
         for d in snap.data_dirs:
-            for vals, size in self._walk_dir_file_stats(d):
+            for path, vals in _parquet_files(d):
                 key = tuple(vals.get(n, "") for n in names)
                 s = stats.setdefault(key, [0, 0])
                 s[0] += 1
-                s[1] += size
+                s[1] += os.path.getsize(path)
         file_rows = [(*k, n, b) for k, (n, b) in sorted(stats.items())]
         cols = "file_count int, total_data_file_size_bytes long"
         if not names:
@@ -2945,29 +2885,6 @@ class LocalTable:
             .orderBy(*names)
         )
 
-    def _walk_dir_file_stats(self, d: str):
-        """Yield (partition-values dict, file size) for every parquet file
-        under a data dir — shared by the single- and multi-spec
-        ``partitions`` paths. Spark writes Hive-escaped partition dirs
-        (e.g. '#' -> '%23'); unquote so file stats join the scan-side
-        values instead of splitting into phantom encoded partitions."""
-        import glob as _glob
-        from urllib.parse import unquote
-
-        for path in _glob.glob(
-            os.path.join(d, "**", "*.parquet"), recursive=True
-        ):
-            rel = os.path.relpath(path, d)
-            vals = {
-                k: unquote(v)
-                for k, v in (
-                    seg.split("=", 1)
-                    for seg in rel.split(os.sep)[:-1]
-                    if "=" in seg
-                )
-            }
-            yield vals, os.path.getsize(path)
-
     def _partitions_multi_spec(self) -> DataFrame:
         """``partitions`` for a table with partition evolution (Iceberg
         reports per-partition rows WITH their spec_id): each dir is
@@ -2990,11 +2907,11 @@ class LocalTable:
         stats: dict[tuple, list[int]] = {}
         for d in snap.data_dirs:
             spec_id = self._spec_for_seq(self._parse_dir_seq(d))["spec_id"]
-            for vals, size in self._walk_dir_file_stats(d):
+            for path, vals in _parquet_files(d):
                 key = (spec_id, *(vals.get(n, "") for n in union_names))
                 s = stats.setdefault(key, [0, 0])
                 s[0] += 1
-                s[1] += size
+                s[1] += os.path.getsize(path)
 
         def spec_cols(d: str) -> list[Column]:
             spec = self._spec_for_seq(self._parse_dir_seq(d))

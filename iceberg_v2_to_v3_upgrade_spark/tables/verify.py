@@ -7,20 +7,20 @@ Same three probes, same pass criteria:
 2. SELECT * LIMIT 5      (data readable, prints 3 rows)
 3. SELECT COUNT(*)       (non-critical cardinality probe)
 
-The table's current MoR-merged state is exported once to parquet; DuckDB
-reads that export — proving the post-upgrade/post-compaction state is
-consumable by an engine with no knowledge of our delete ledger, exactly the
-property the reference verifies against Databricks.
+DuckDB reads the MANAGED TABLE itself: the probed view is the compiled
+MoR-merge statement of ``tables/duckdb_reader.py`` over the raw data and
+delete files (``add_files`` imports included), with no Spark in the read
+path — the reference likewise points Databricks at the live Iceberg
+table, not at an export.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
 from dataclasses import dataclass
 
 import duckdb
 
+from iceberg_v2_to_v3_upgrade_spark.tables import duckdb_reader
 from iceberg_v2_to_v3_upgrade_spark.tables.table import LocalTable
 
 
@@ -31,42 +31,13 @@ class ProbeResult:
     detail: str
 
 
-def verify_table_in_duckdb(
-    table: LocalTable, native: bool = True
-) -> list[ProbeResult]:
-    """``native=True`` (default since round 7): DuckDB reads the MANAGED
-    TABLE itself — the view is the compiled MoR-merge manifest from
-    ``tables/duckdb_reader.py`` over raw data/delete files, so the probes
-    certify a genuine second-engine table read (the reference points
-    Databricks at the live Iceberg table, not at an export).
-    ``native=False`` keeps the original export-merged-scan fallback for
-    callers that want to verify a scan Spark already materialized."""
+def verify_table_in_duckdb(table: LocalTable) -> list[ProbeResult]:
+    """Run the three probes against DuckDB's compiled read of ``table``'s
+    current snapshot (``duckdb_reader.duckdb_table_sql``)."""
     results: list[ProbeResult] = []
-    if native:
-        # add_files-imported dirs have no materialized _row_id: the
-        # compiled read refuses (loudly) and the exported-scan probe
-        # takes over — never a silently wrong native read
-        from iceberg_v2_to_v3_upgrade_spark.tables.duckdb_reader import (
-            DuckDBReadUnsupported,
-            duckdb_table_sql,
-        )
-
-        try:
-            native_sql = duckdb_table_sql(table)
-        except DuckDBReadUnsupported:
-            native = False
     con = duckdb.connect()
     try:
-        if native:
-            con.execute(f"CREATE VIEW t AS {native_sql}")
-        else:
-            export_dir = tempfile.mkdtemp(prefix="xengine_verify_")
-            export = os.path.join(export_dir, "export.parquet")
-            table.scan().write.mode("overwrite").parquet(export)
-            con.execute(
-                f"CREATE VIEW t AS SELECT * FROM "
-                f"parquet_scan('{export}/*.parquet')"
-            )
+        con.execute(f"CREATE VIEW t AS {duckdb_reader.duckdb_table_sql(table)}")
         # probe 1: DESCRIBE (verify_in_databricks.py:67)
         try:
             cols = con.execute("DESCRIBE t").fetchall()

@@ -70,6 +70,8 @@ SMOKE_QUERIES = [
     "i30_insert_overwrite",
     # dir-stats pruning, stats taken from the written files' footers
     "i14_stats_file_skipping",
+    # second-engine read: DuckDB compiles the table's MoR merge itself
+    "i40_duckdb_table_read",
 ]
 
 

@@ -1,23 +1,31 @@
 """Per-data-dir min/max taken from parquet footers at write time.
 
-The footer path (``LocalTable._dir_stats_from_footers``) must give exactly
-the stats of the exact Spark read+agg job (``_dir_stats_from_read``) on
-every numeric type Spark writes — decimals in their INT32, INT64 and
-FIXED_LEN_BYTE_ARRAY layouts included — so that a data write never reads
-its own dir back. Scans prune on these stats (``last_scan_pruning``)."""
+The one footer pass over a new data dir (``LocalTable._record_new_dir``)
+must give exactly the stats of a Spark min/max aggregation of the dir
+(``_exact_stats`` below, the oracle) on every numeric type Spark writes —
+decimals in their INT32, INT64 and FIXED_LEN_BYTE_ARRAY layouts included
+— while opening each new file's footer once. A column with a NaN bound
+gets no entry, as Iceberg's bounds leave NaN out. Scans prune on these
+stats (``last_scan_pruning``) and must return what an unpruned scan
+does."""
 
 from __future__ import annotations
 
+import decimal
 import glob
 import logging
 import os
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from iceberg_v2_to_v3_upgrade_spark.cli import DEMO_ROWS, DEMO_SCHEMA
 from iceberg_v2_to_v3_upgrade_spark.tables.catalog import LocalCatalog
-from iceberg_v2_to_v3_upgrade_spark.tables.table import LocalTable
+from iceberg_v2_to_v3_upgrade_spark.tables.table import (
+    LocalTable,
+    _stats_range,
+)
 
 # (schema, partition_by, SELECT over range(0, 20, 1, 2): two tasks, ids
 # 0-9 and 10-19, so one file per task, {column: parquet physical type})
@@ -52,6 +60,15 @@ CASES = {
         "AS DECIMAL(20,2)) AS d20",
         {"d20": "FIXED_LEN_BYTE_ARRAY"},
     ),
+    "struct_leaf_shares_a_column_name": (
+        "k INT, s STRUCT<k: INT, x: DOUBLE>",
+        None,
+        # the leaf s.k is also named k in the footer; only the
+        # top-level k may give k's bounds
+        "SELECT CAST(id AS INT) AS k, "
+        "named_struct('k', CAST(id * 100 AS INT), 'x', id / 2.0) AS s",
+        {"k": "INT32"},
+    ),
     "partitioned_by_decimal": (
         "p DECIMAL(6,2), v DECIMAL(10,2), n INT",
         ["p"],
@@ -75,9 +92,31 @@ def _insert_new_dir(t: LocalTable, df) -> str:
     return new
 
 
+def _exact_stats(t: LocalTable, d: str) -> dict:
+    """The oracle: one Spark min/max aggregation over dir ``d``."""
+    cols = list(t._stats_columns())
+    row = (
+        t._read_one_dir(d, t.schema_ddl + ", _row_id long")
+        .agg(
+            *[F.min(c).alias(f"lo_{c}") for c in cols],
+            *[F.max(c).alias(f"hi_{c}") for c in cols],
+        )
+        .collect()[0]
+    )
+    return {
+        c: _stats_range(row[f"lo_{c}"], row[f"hi_{c}"])
+        for c in cols
+        if row[f"lo_{c}"] is not None
+    }
+
+
+def _parquet_paths(d: str) -> list[str]:
+    return glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+
+
 def _physical_types(path: str) -> dict[str, set[str]]:
     out: dict[str, set[str]] = {}
-    for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
+    for f in _parquet_paths(path):
         schema = pq.ParquetFile(f).metadata.schema
         for i in range(len(schema)):
             col = schema.column(i)
@@ -95,11 +134,8 @@ def test_footer_stats_equal_exact_stats(spark, tmp_path, case):
         types = _physical_types(d)
         for col, want in physical.items():
             assert types[col] == {want}, (col, types[col])
-        numeric = t._stats_columns()
-        footer = t._dir_stats_from_footers(d, numeric)
-        assert footer is not None
-        assert footer == t._dir_stats_from_read(d, list(numeric))
-        assert t._meta["dir_stats"][d] == footer
+        footer = t._meta["dir_stats"][d]
+        assert footer == _exact_stats(t, d)
     if partition_by:
         assert set(footer) == {"p", "v", "n"}
         assert len(glob.glob(os.path.join(d, "p=*"))) == 3
@@ -121,19 +157,45 @@ def test_null_only_row_groups_are_present(spark, tmp_path):
 
 
 def test_demo_table_writes_never_read_back(spark, tmp_path, monkeypatch):
-    def _fail(self, path, numeric):
-        raise AssertionError(f"exact dir-stats job ran for {path}")
+    """Each write opens each file of its new data dir's footer once, for
+    the row-id watermark and the dir stats together, and reads no data."""
+    opened: list[str] = []
+    real = pq.ParquetFile
 
-    monkeypatch.setattr(LocalTable, "_dir_stats_from_read", _fail)
+    def _counting(path, *args, **kwargs):
+        opened.append(path)
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", _counting)
     t = _table(spark, tmp_path, DEMO_SCHEMA, ["category"])
-    t.insert_values(DEMO_ROWS)
-    t.delete_where("id IN (2, 4, 6)")
-    t.update_set({"amount": "amount * 1.1"}, "category = 'electronics'")
-    t.rewrite_data_files()
+    for write in (
+        lambda: t.insert_values(DEMO_ROWS),
+        lambda: t.delete_where("id IN (2, 4, 6)"),
+        lambda: t.update_set(
+            {"amount": "amount * 1.1"}, "category = 'electronics'"
+        ),
+        t.rewrite_data_files,
+    ):
+        before = set(t.current_snapshot().data_dirs)
+        opened.clear()
+        write()
+        new = set(t.current_snapshot().data_dirs) - before
+        assert sorted(opened) == sorted(
+            f for d in new for f in _parquet_paths(d)
+        )
     snap = t.current_snapshot()
     assert t.count() == 7 and not snap.delete_dirs
     for d in snap.data_dirs:
         assert set(t._meta["dir_stats"][d]) == {"id", "amount"}
+
+
+def test_stats_range_is_exact_unless_a_float_rounds():
+    D = decimal.Decimal
+    assert _stats_range(D("0.00"), D("99.00")) == [0.0, 99.0]
+    assert _stats_range(-3, 2**63) == [-3, 2**63]
+    assert _stats_range(-0.5, 1.25) == [-0.5, 1.25]
+    lo, hi = _stats_range(D("0.10"), D("0.30"))
+    assert D(lo) < D("0.10") and D(hi) > D("0.30")
 
 
 def test_decimal_pruning_reads_only_overlapping_dirs(spark, tmp_path):
@@ -148,38 +210,54 @@ def test_decimal_pruning_reads_only_overlapping_dirs(spark, tmp_path):
         ("amount <= 99.90", 1),
         ("amount >= 99.91", 3),
         ("amount = 300", 1),
-        ("amount < -1", 0),
+        # exact bounds: the first dir holds exactly [0.00, 99.00]
+        ("amount < 0", 0),
+        ("amount > 99", 3),
+        # a literal a float would round onto 99.0 still reads that dir
+        ("amount > 98.9999999999999999", 4),
     ):
         got = sorted(t.scan(data_filter=pred).collect())
         assert t.last_scan_pruning == {"candidate_dirs": 4, "read_dirs": read}
         assert got == sorted(t.scan().filter(pred).collect()), pred
 
 
-@pytest.mark.parametrize(
-    "footer, reason",
-    [
-        (None, "no usable min/max"),
-        (ValueError("bad footer"), "ValueError: bad footer"),
-    ],
-)
-def test_fallback_is_logged(spark, tmp_path, monkeypatch, caplog, footer, reason):
-    def _footers(self, path, numeric):
-        if isinstance(footer, Exception):
-            raise footer
-        return footer
-
-    monkeypatch.setattr(LocalTable, "_dir_stats_from_footers", _footers)
-    t = _table(spark, tmp_path, "id INT, amount DECIMAL(10,2)")
+def test_nan_column_gets_no_bounds(spark, tmp_path, caplog):
+    t = _table(spark, tmp_path, "id INT, d DOUBLE")
     with caplog.at_level(
         logging.DEBUG, logger="iceberg_v2_to_v3_upgrade_spark.tables.table"
     ):
-        d = _insert_new_dir(
-            t, spark.sql("SELECT CAST(id AS INT) AS id, id * 1.5 AS amount "
-                         "FROM range(3)")
-        )
+        new = _insert_new_dir(t, spark.sql(
+            "SELECT CAST(id AS INT) AS id, "
+            "IF(id = 5, CAST('NaN' AS DOUBLE), CAST(id AS DOUBLE)) AS d "
+            "FROM range(6)"
+        ))
+    assert t._meta["dir_stats"][new] == {"id": [0, 5]}
     [rec] = [r for r in caplog.records if "dir stats" in r.getMessage()]
     assert rec.levelno == logging.DEBUG
-    assert d in rec.getMessage() and reason in rec.getMessage()
-    assert t._meta["dir_stats"][d] == {
-        "id": [0, 2], "amount": t._dir_stats_from_read(d, ["amount"])["amount"]
-    }
+    assert new in rec.getMessage() and "['d']" in rec.getMessage()
+    # Spark orders NaN above every double, so d > 4 holds the NaN row;
+    # the dir still prunes on id
+    for pred, ids, read in (
+        ("d = 3", [3], 1), ("d > 4", [5], 1), ("id > 5", [], 0)
+    ):
+        got = sorted(r.id for r in t.scan(data_filter=pred).collect())
+        assert t.last_scan_pruning == {"candidate_dirs": 1, "read_dirs": read}
+        assert got == ids == sorted(
+            r.id for r in t.scan().filter(pred).collect()
+        ), pred
+
+
+def test_unreadable_footer_fails_the_write(spark, tmp_path, monkeypatch):
+    """No fallback: a footer that cannot be read fails the write before
+    it commits, as the row-id watermark needs every file's ids."""
+    t = _table(spark, tmp_path, "id INT, amount DECIMAL(10,2)")
+    before = t.current_snapshot().id
+
+    def _unreadable(path, *args, **kwargs):
+        raise OSError(f"cannot read footer of {path}")
+
+    monkeypatch.setattr(pq, "ParquetFile", _unreadable)
+    with pytest.raises(OSError, match="cannot read footer"):
+        t.insert(spark.sql("SELECT CAST(id AS INT) AS id, id * 1.5 AS amount "
+                           "FROM range(3)"))
+    assert t.current_snapshot().id == before

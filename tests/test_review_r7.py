@@ -9,8 +9,8 @@
    matches a NULL, so the compiled DuckDB read must not use
    ``IS NOT DISTINCT FROM`` (which would delete NULL-keyed rows).
 3. The compiled DuckDB read resolves column renames, schema evolution
-   (null-fill + V3 initial defaults) per dir, and REFUSES add_files
-   imported dirs loudly (verify falls back to the exported scan).
+   (null-fill + V3 initial defaults) per dir, and add_files imported
+   dirs (lazy row ids, so positional deletes of imported rows apply).
 4. A stale duplicate ``add_files`` of a dir the winner already imported
    refuses instead of double-counting / re-pinning its sequence.
 5. ``remove_orphan_files`` grace: an unreferenced dir younger than the
@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import datetime
 
+import duckdb
 import pytest
 
 from iceberg_v2_to_v3_upgrade_spark.tables import (
@@ -28,9 +29,12 @@ from iceberg_v2_to_v3_upgrade_spark.tables import (
     LocalTable,
 )
 from iceberg_v2_to_v3_upgrade_spark.tables.duckdb_reader import (
-    DuckDBReadUnsupported,
     duckdb_table_sql,
     read_table_in_duckdb,
+)
+from iceberg_v2_to_v3_upgrade_spark.tables.verify import (
+    verification_passed,
+    verify_table_in_duckdb,
 )
 
 _SCHEMA = "id BIGINT, cat STRING, val DOUBLE"
@@ -112,22 +116,35 @@ def test_duckdb_read_resolves_renames_and_defaults(
     _duck_equals_scan(spark, t, ("id", "cat", "score", "grade"))
 
 
-def test_duckdb_read_refuses_imported_dirs(spark, tmp_path_factory):
+def test_duckdb_read_of_imported_dirs_equals_scan(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("ddb_imp")
-    ext = str(base / "external")
+    # Spark records imported files as quoted URIs ('%20', '%23')
+    ext = str(base / "external src#1")
     spark.createDataFrame(
-        [(1, "a", 1.0)], _SCHEMA
-    ).write.mode("overwrite").parquet(ext)
+        [(i, "a" if i % 2 else "b", float(i)) for i in range(20)], _SCHEMA
+    ).repartition(3).write.mode("overwrite").parquet(ext)
     t = LocalTable.create(spark, str(base / "t"), _SCHEMA)
+    t.set_properties({"format-version": "3"})
     t.add_files(ext)
-    with pytest.raises(DuckDBReadUnsupported):
-        duckdb_table_sql(t)
-    # the verify probe falls back to the exported scan and still passes
-    from iceberg_v2_to_v3_upgrade_spark.tables.verify import (
-        verification_passed,
-        verify_table_in_duckdb,
-    )
-
+    assert len(t.imported_dirs[ext]["files"]) == 3
+    # merge-on-read deletes of imported rows' lazy ids; the V3 update
+    # carries its rows' ids into a managed dir
+    t.delete_where("id IN (3, 7, 18)")
+    t.update_set({"val": "val * 10"}, "cat = 'b'")
+    t.insert(_df(spark, [(100, "c", 100.0), (7, "c", 7.5)]))
+    assert t.current_snapshot().delete_dirs
+    ours = sorted(tuple(r) for r in t.scan(with_row_lineage=True).collect())
+    assert len(ours) == 19
+    duck = duckdb.connect()
+    try:
+        # the compiled statement's data arm keeps each row's _row_id
+        rows = duck.execute(
+            duckdb_table_sql(t).replace("SELECT ", "SELECT _row_id, ", 1)
+        ).fetchall()
+    finally:
+        duck.close()
+    assert sorted((*r[1:], r[0]) for r in rows) == ours
+    _duck_equals_scan(spark, t, ("id", "cat", "val"))
     assert verification_passed(verify_table_in_duckdb(t))
 
 
