@@ -39,7 +39,8 @@ Fidelity covered by the generated SQL:
   ``_read_imported_dir`` does: the file's recorded ``first_row_id``
   plus its position in the file (DuckDB's ``file_row_number``, the same
   count as Spark's ``_metadata.row_index``), so positional deletes of
-  imported rows apply.
+  imported rows apply; each column is cast to its declared type, as the
+  external files may hold a narrower one.
 """
 
 from __future__ import annotations
@@ -231,6 +232,13 @@ def duckdb_table_sql(table: LocalTable, snap: Snapshot | None = None) -> str:
                 proj.append(
                     f"CAST({entry['sql']} AS "
                     f"{_duck_type(entry['dtype'])}) AS \"{name}\""
+                )
+            elif d in imported and phys in written:
+                # external files may hold a narrower type (INT for a
+                # BIGINT column): cast as _read_imported_dir does
+                proj.append(
+                    f'CAST("{phys}" AS '
+                    f'{_duck_type(f.dataType.simpleString())}) AS "{name}"'
                 )
             elif phys in written:
                 proj.append(

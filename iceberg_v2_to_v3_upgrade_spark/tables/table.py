@@ -225,6 +225,25 @@ _PRUNE_PRED = re.compile(
 )
 
 
+def _prune_literal(lit: str, typ: str | None) -> Any:
+    """A ``_PRUNE_PRED`` literal as Spark compares it with a column of
+    type ``typ`` (a ``_stats_columns()`` type name), or None when the
+    bounds cannot decide that comparison. Against DOUBLE and FLOAT
+    columns Spark casts the literal to double (``d = 0.1`` compares
+    with ``float('0.1')``, ``2**53 + 1`` becomes ``2**53``); without
+    ANSI mode an integer literal meets FLOAT as a float32 instead, so
+    one past 2^24, which float32 may round, is not used. Against
+    integral and DECIMAL columns the comparison is exact: an int, or a
+    Decimal for a literal with a '.', so ``98.9999999999999999`` stays
+    below 99."""
+    exact = decimal.Decimal(lit) if "." in lit else int(lit)
+    if typ in ("double", "float"):
+        if typ == "float" and "." not in lit and abs(exact) > 2**24:
+            return None
+        return float(exact)
+    return None if typ is None else exact
+
+
 def _parquet_files(d: str):
     """Yield ``(path, {name: value})`` for every parquet file under data
     dir ``d``, in path order, with the file's identity-partition values
@@ -1414,21 +1433,16 @@ class LocalTable:
         Iceberg manifest pruning."""
         if re.search(r"\bOR\b", data_filter, re.IGNORECASE):
             return dirs
+        types = self._stats_columns()
         conjuncts = []
         for part in re.split(r"\bAND\b", data_filter, flags=re.IGNORECASE):
             m = _PRUNE_PRED.match(part)
             if m:
-                lit = m.group(3)
-                # exact literals: Python compares int and Decimal with the
-                # stored floats exactly, so 98.9999999999999999 stays
-                # below 99.0 instead of rounding onto it
-                conjuncts.append(
-                    (
-                        m.group(1),
-                        m.group(2),
-                        decimal.Decimal(lit) if "." in lit else int(lit),
-                    )
-                )
+                # Python compares int, Decimal and float exactly, so the
+                # literal is converted by Spark's rule for the column
+                val = _prune_literal(m.group(3), types.get(m.group(1)))
+                if val is not None:
+                    conjuncts.append((m.group(1), m.group(2), val))
         if not conjuncts:
             return dirs
         all_stats = self._meta.get("dir_stats", {})

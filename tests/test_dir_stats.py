@@ -221,6 +221,48 @@ def test_decimal_pruning_reads_only_overlapping_dirs(spark, tmp_path):
         assert got == sorted(t.scan().filter(pred).collect()), pred
 
 
+def test_float_pruning_converts_literals_as_spark_does(spark, tmp_path):
+    """Spark casts a literal to double against DOUBLE and FLOAT columns,
+    so the exact double bounds [0.1, 0.1] keep their dir for ``d = 0.1``
+    and 2**53 + 1 meets 2**53. Without ANSI mode an integer literal
+    meets FLOAT as a float32, so 2**24 + 1 never prunes a FLOAT dir."""
+    t = _table(spark, tmp_path, "id INT, d DOUBLE, f FLOAT")
+    for i, d, f in (
+        (1, "0.1", "16777216"), (2, "0.3", "0"), (3, "9007199254740992", "0")
+    ):
+        t.insert(spark.sql(
+            f"SELECT {i} AS id, CAST({d} AS DOUBLE) AS d, "
+            f"CAST({f} AS FLOAT) AS f"
+        ))
+    assert sorted(t._meta["dir_stats"].values(), key=lambda s: s["id"]) == [
+        {"id": [1, 1], "d": [0.1, 0.1], "f": [16777216.0, 16777216.0]},
+        {"id": [2, 2], "d": [0.3, 0.3], "f": [0.0, 0.0]},
+        {"id": [3, 3], "d": [2.0**53, 2.0**53], "f": [0.0, 0.0]},
+    ]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            for pred, read in (
+                ("d = 0.1", 1),
+                ("d <= 0.1", 1),
+                ("d >= 0.3", 2),
+                ("d = 0.2", 0),
+                ("d = 9007199254740993", 1),
+                ("f = 16777217", 3),
+                ("f = 16777216", 1),
+            ):
+                got = sorted(t.scan(data_filter=pred).collect())
+                assert t.last_scan_pruning == {
+                    "candidate_dirs": 3, "read_dirs": read
+                }, (mode, pred)
+                assert got == sorted(t.scan().filter(pred).collect()), (
+                    mode, pred
+                )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_nan_column_gets_no_bounds(spark, tmp_path, caplog):
     t = _table(spark, tmp_path, "id INT, d DOUBLE")
     with caplog.at_level(

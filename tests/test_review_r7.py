@@ -120,8 +120,11 @@ def test_duckdb_read_of_imported_dirs_equals_scan(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("ddb_imp")
     # Spark records imported files as quoted URIs ('%20', '%23')
     ext = str(base / "external src#1")
+    # the files hold narrower types than the table declares (INT for
+    # BIGINT, FLOAT for DOUBLE); both reads cast to the declared ones
     spark.createDataFrame(
-        [(i, "a" if i % 2 else "b", float(i)) for i in range(20)], _SCHEMA
+        [(i, "a" if i % 2 else "b", float(i) + 0.1) for i in range(20)],
+        "id INT, cat STRING, val FLOAT",
     ).repartition(3).write.mode("overwrite").parquet(ext)
     t = LocalTable.create(spark, str(base / "t"), _SCHEMA)
     t.set_properties({"format-version": "3"})
@@ -130,6 +133,11 @@ def test_duckdb_read_of_imported_dirs_equals_scan(spark, tmp_path_factory):
     # merge-on-read deletes of imported rows' lazy ids; the V3 update
     # carries its rows' ids into a managed dir
     t.delete_where("id IN (3, 7, 18)")
+    # only the imported dir holds data, so no managed arm widens types
+    assert list(read_table_in_duckdb(t).dtypes.astype(str)) == [
+        "int64", "object", "float64"
+    ]
+    _duck_equals_scan(spark, t, ("id", "cat", "val"))
     t.update_set({"val": "val * 10"}, "cat = 'b'")
     t.insert(_df(spark, [(100, "c", 100.0), (7, "c", 7.5)]))
     assert t.current_snapshot().delete_dirs
